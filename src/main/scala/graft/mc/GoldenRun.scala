@@ -106,8 +106,11 @@ object GoldenRun {
     println("## PC_xi_DR bias table (rows gamma, cols sd):")
     Reporting.biasTable(Reporting.biasSummary(bl), "PC_xi_DR_y_i", sds)
       .collect().foreach(r => println(r.toSeq.mkString(" | ")))
+    val t4 = System.nanoTime()
+    val anova = Reporting.gridAnova(bl)
+    println(f"# v2 grid ANOVA: ${(System.nanoTime() - t4) / 1e9}%.2f s")
     println("## grid ANOVA (Type-I):")
-    Reporting.gridAnova(bl).foreach { r =>
+    anova.foreach { r =>
       println(f"${r.term}%-26s df=${r.df}%5d  SS=${r.sumSq}%8.3f  " +
         f"F=${r.fValue}%10.3f  p=${r.pValue}%.3g")
     }

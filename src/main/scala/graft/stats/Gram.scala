@@ -10,13 +10,16 @@ import org.apache.spark.sql.functions._
   * `RegDI2.R:188-193,209`, `PC.R:221-230,272`).
   *
   * Design note (100 TB): rather than a `TypedImperativeAggregate`, the
-  * moments are expressed as a single multi-column `agg` of plain `sum`
-  * expressions (`Σ w·xᵢ·xⱼ` for i≤j, `Σ w·xᵢ`, `Σ w·xᵢ·y`, …). Catalyst
+  * moments are expressed as a single multi-column `agg` of exact-decimal
+  * sums (`Σ w·xᵢ·xⱼ` for i≤j, `Σ w·xᵢ`, `Σ w·xᵢ·y`, …). Catalyst
   * compiles this to one whole-stage-codegen'd partial/final HashAggregate:
-  * O(k²) state per task (k ≤ ~8 here), map-side combine, one shuffle of a
-  * single tiny row, zero driver-side data movement. The k×k solve happens
-  * on the driver via breeze (`\`), and the solution is broadcast back
-  * implicitly as literals in subsequent projections.
+  * O(k²) state per task, map-side combine, one shuffle of a single tiny
+  * row, zero driver-side data movement. Each of the k(k+1)/2 + O(k)
+  * aggregates is planned and compiled per call, so this suits the
+  * estimators' narrow designs (k ≤ ~8); a wide factor design (ANOVA)
+  * instead comes from per-cell moments ([[Anova.sequential]]). The k×k
+  * solve happens on the driver via breeze (`\`), and the solution is
+  * broadcast back implicitly as literals in subsequent projections.
   */
 final case class GramResult(
     xtwx: DenseMatrix[Double], // Σ w · x xᵀ   (k×k)
@@ -68,12 +71,10 @@ object Gram {
       xCols: Seq[Column],
       w: Column = lit(1.0),
       yCol: Option[Column] = None,
-      exact: Boolean = true,
       completeCase: Boolean = false
   ): GramResult = {
     val (res, _) = momentsMulti(df,
-      Seq("g" -> GramSpec(xCols, w, yCol, completeCase = completeCase)),
-      Nil, exact)
+      Seq("g" -> GramSpec(xCols, w, yCol, completeCase = completeCase)))
     res("g")
   }
 
@@ -90,16 +91,12 @@ object Gram {
   def momentsMulti(
       df: DataFrame,
       specs: Seq[(String, GramSpec)],
-      extraAggs: Seq[Column] = Nil,
-      exact: Boolean = true
+      extraAggs: Seq[Column] = Nil
   ): (Map[String, GramResult], Row) = {
     // dsum = exact-decimal summation: order-independent, so the moments
     // (and everything solved from them) are bit-identical under any
     // repartitioning — a tested invariant (SURVEY.md §5 property tests).
-    // `exact = false` uses plain double sums (~4× faster) where run-to-
-    // run bit determinism isn't required (e.g. ANOVA's wide Gram).
-    val dsum: Column => Column =
-      if (exact) graft.util.Tables.dsum else sum
+    import graft.util.Tables.dsum
     require(specs.map(_._1).distinct.size == specs.size,
       "duplicate Gram spec names")
     require(specs.nonEmpty || extraAggs.nonEmpty,

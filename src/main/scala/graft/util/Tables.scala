@@ -83,10 +83,12 @@ object Tables {
 
   /** Deterministic sample variance (n-1 denominator) from exact decimal
     * sums of x and x*x. The per-row square is an IEEE double product
-    * (bit-identical in any engine) before the exact decimal summation. */
+    * (bit-identical in any engine) before the exact decimal summation.
+    * NULL for fewer than two non-null values, as R's `var` gives NA
+    * (a bare n-1 = 0 divisor would throw DIVIDE_BY_ZERO under ANSI). */
   def dvarSamp(c: Column): Column = {
     val n = count(c).cast("double")
-    (dsum(c * c) - dsum(c) * dsum(c) / n) / (n - lit(1.0))
+    when(n >= lit(2.0), (dsum(c * c) - dsum(c) * dsum(c) / n) / (n - lit(1.0)))
   }
 
   /** Matching DuckDB SQL fragment for [[dsum]]. Both cast directions need
@@ -125,6 +127,6 @@ object Tables {
   def sqlDmean(e: String): String = s"(${sqlDsum(e)} / count($e))"
   def sqlDvarSamp(e: String): String = {
     val n = s"CAST(count($e) AS DOUBLE)"
-    s"((${sqlDsum(s"($e)*($e)")} - ${sqlDsum(e)} * ${sqlDsum(e)} / $n) / ($n - 1.0))"
+    s"(CASE WHEN $n >= 2.0 THEN (${sqlDsum(s"($e)*($e)")} - ${sqlDsum(e)} * ${sqlDsum(e)} / $n) / ($n - 1.0) END)"
   }
 }

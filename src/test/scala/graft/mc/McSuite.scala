@@ -47,6 +47,27 @@ class McSuite extends SparkSpec {
     assert(row.getAs[Long]("n_sims") === 10L)
   }
 
+  test("one replicate: summarize and biasSummary give a NULL spread, as " +
+    "R's var gives NA, instead of dividing by n - 1 = 0") {
+    val one = MonteCarlo.summarize(MonteCarlo.run(spark,
+      MonteCarlo.nmarGrid(nSim = 1, gammas = Seq(0.0), nPop = 2000, nA = 100,
+        nB = 500)), trueMean = 3.0).collect()
+    assert(one.nonEmpty)
+    assert(one.forall(r => r.isNullAt(r.fieldIndex("se"))))
+    assert(one.forall(r => r.getAs[Long]("n_sims") == 1L))
+    assert(one.forall(r => r.getAs[Double]("bias").isFinite))
+
+    val sds = Seq(0.0, 0.25)
+    val ests = Seq("PC_xi_DR", "PC_ei_DR", "RegDI_no_aux", "RegDI_xi", "RegDI_ei")
+    val long = MonteCarlo.runV2(spark, nSim = 1, gammas = Seq(0.0), nPop = 2000,
+      nA = 100, nB = 500, sdVector = sds)
+    val summary = Reporting.biasSummary(Reporting.biasLong(
+      Reporting.withBiasColumns(Reporting.toWide(long, ests, sds), 3.0))).collect()
+    assert(summary.length === ests.size * sds.size)
+    assert(summary.forall(r => r.isNullAt(r.fieldIndex("Bias_SD"))))
+    assert(summary.forall(r => r.getAs[Double]("Bias_Mean").isFinite))
+  }
+
   test("simulations are deterministic given seeds") {
     val grid = MonteCarlo.nmarGrid(2, Seq(0.5), 2000, 100, 400)
     val a = MonteCarlo.run(spark, grid).as[SimResult].collect().sortBy(r => (r.sim, r.estimator)).toSeq

@@ -1,6 +1,7 @@
 package graft.stats
 
 import graft.SparkSpec
+import graft.mc.Reporting
 
 /** Balanced 2×2 fixture where Type-I sums of squares have closed forms
   * (balanced ⇒ sequential SS equal the textbook factor SS):
@@ -85,6 +86,96 @@ class AnovaSuite extends SparkSpec {
     assert(math.abs(totalFromParts - sst) < 1e-9)
   }
 
+  /** Unbalanced three factors — `fa` strings, `fb` doubles (compared as
+    * strings, like Sd/Gamma), `fc` strings — with y on a 0.01 grid so
+    * the exact-decimal reference Gram carries no rounding. Every (fa, fb)
+    * cell is filled; the extra rows land unevenly. */
+  private lazy val unbalanced3 = {
+    val rng = new scala.util.Random(7)
+    val base = for (a <- Seq("a1", "a2", "a3"); b <- Seq(0.5, 1.5)) yield (a, b)
+    val extra = Seq.fill(40)((Seq("a1", "a2", "a3")(rng.nextInt(3)),
+      Seq(0.5, 1.5)(rng.nextInt(2))))
+    (base ++ base ++ extra).map { case (a, b) =>
+      val c = Seq("c1", "c2", "c3")(rng.nextInt(3))
+      val y = math.round(100 * (b * a.last.asDigit + (if (c == "c2") 1.0 else 0.0) +
+        rng.nextGaussian())) / 100.0
+      (y, a, b, c)
+    }.toDF("y", "fa", "fb", "fc")
+  }
+
+  test("cell-moment sequential SS equal an explicit dummy-column Gram " +
+    "(unbalanced, three factors, A:B interaction)") {
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.functions._
+    val df = unbalanced3
+    def dummies(c: String): Seq[Column] = {
+      val lv = df.select(col(c).cast("string")).distinct().as[String].collect().sorted
+      lv.toSeq.drop(1).map(l => (col(c).cast("string") === l).cast("double"))
+    }
+    val (aD, bD, cD) = (dummies("fa"), dummies("fb"), dummies("fc"))
+    val blocks = Seq("fa" -> aD, "fb" -> bD, "fc" -> cD,
+      "fa:fb" -> (for (a <- aD; b <- bD) yield a * b))
+    val g = Gram.moments(df, lit(1.0) +: blocks.flatMap(_._2), lit(1.0),
+      Some(col("y")))
+    def rss(p: Int): Double = {
+      val sub = g.xtwx(0 until p, 0 until p).toDenseMatrix
+      val rhs = g.xtwy(0 until p).toDenseVector
+      g.swyy - ((sub \ rhs) dot rhs)
+    }
+    val refRss = blocks.scanLeft(1)(_ + _._2.size).map(rss)
+    val ref = blocks.indices.map(t =>
+      (blocks(t)._1, blocks(t)._2.size.toLong, refRss(t) - refRss(t + 1))) :+
+      (("Residuals", g.n - (1 + blocks.map(_._2.size).sum), refRss.last))
+
+    val rows = Anova.sequential(df, "y", Seq("fa" -> Seq("fa"),
+      "fb" -> Seq("fb"), "fc" -> Seq("fc"), "fa:fb" -> Seq("fa", "fb")))
+    assert(rows.map(r => (r.term, r.df)) === ref.map(r => (r._1, r._2)))
+    rows.zip(ref).foreach { case (r, (term, _, ss)) =>
+      assert(math.abs(r.sumSq - ss) < 1e-9, s"$term: ${r.sumSq} vs $ss")
+    }
+    assert(ref.map(_._3).forall(_ > 1e-3)) // no term is trivially zero
+  }
+
+  /** A small biasLong-shaped grid: 3 Sd × 3 Gamma × 2 estimators × 2 reps. */
+  private lazy val smallGrid = {
+    val rng = new scala.util.Random(11)
+    (for {
+      g <- Seq(0.0, 0.5, 1.0); sd <- Seq(0.0, 0.25, 0.5)
+      e <- Seq("PC_xi_DR_y_i", "RegDI_xi_y_i"); s <- 1 to 2
+    } yield (s, g, e, sd, 0.1 * g + (if (e.startsWith("PC")) 0.05 else 0.0) +
+      0.01 * rng.nextGaussian())).toDF("Simulacion", "Gamma", "Estimator", "Sd", "Bias")
+  }
+
+  test("gridAnova names NULL factors and NULL Bias values") {
+    import org.apache.spark.sql.functions._
+    val nullGamma = smallGrid.withColumn("Gamma",
+      when(col("Simulacion") === 1 && col("Sd") === 0.25 && col("Gamma") === 0.5,
+        lit(null)).otherwise(col("Gamma")))
+    val e1 = intercept[IllegalArgumentException](Reporting.gridAnova(nullGamma))
+    assert(e1.getMessage.contains(
+      "factor column Gamma has 2 NULL values; drop or impute them before ANOVA"),
+      e1.getMessage)
+    val nullBias = smallGrid.withColumn("Bias",
+      when(col("Simulacion") === 2 && col("Sd") === 0.5, lit(null))
+        .otherwise(col("Bias")))
+    val e2 = intercept[Exception](Reporting.gridAnova(nullBias))
+    assert(e2.getMessage.contains("ANOVA: NULL in response column 'Bias'"),
+      e2.getMessage)
+  }
+
+  test("gridAnova with an empty Sd×Gamma cell names the singular design") {
+    import org.apache.spark.sql.functions._
+    // a hole at a first (dropped) level zeroes no design column, so the
+    // factorization need not hit an exact zero pivot; both kinds must be
+    // named
+    for ((sd, g) <- Seq((0.25, 0.5), (0.0, 0.5), (0.0, 0.0))) {
+      val holed = smallGrid.filter(!(col("Sd") === sd && col("Gamma") === g))
+      val e = intercept[IllegalArgumentException](Reporting.gridAnova(holed))
+      assert(e.getMessage.contains("ANOVA design is singular — an empty " +
+        "(Sd, Gamma) cell"), e.getMessage)
+    }
+  }
+
   /** Golden reproduction of the reference's stored cell-42 ANOVA
     * (`ipynb:2809-2830`): `aov(Bias ~ factor(Sd) * factor(Gamma) +
     * Estimator)` over the full NMAR-v2 grid (100 reps × 11 γ × 5 sd ×
@@ -95,12 +186,13 @@ class AnovaSuite extends SparkSpec {
     * (BASELINE_REPRO.md records our exact values inside every band).
     * The replicate fan-out uses a parallel collection — runSimV2 is a
     * pure function, and the shared test session is only local[4]; the
-    * Spark half under test is the reporting pipeline + one-Gram-pass
-    * sequential ANOVA, which is order-independent (exact-decimal sums).
+    * Spark half under test is the reporting pipeline + the per-cell
+    * moment ANOVA. Its cell sums are plain double sums, so partitioning
+    * can move the last bits; the bands are far wider than that.
     */
   test("NMAR-v2 grid ANOVA reproduces the stored cell-42 table") {
     import scala.collection.parallel.CollectionConverters._
-    import graft.mc.{LocalSim, Reporting}
+    import graft.mc.LocalSim
     val sds = Seq(0.0, 0.125, 0.25, 0.375, 0.5)
     val grid = for {
       (g, gi) <- (0 to 10).map(_ / 10.0).zipWithIndex
@@ -141,8 +233,7 @@ class AnovaSuite extends SparkSpec {
       .toDF("y", "f")
       .withColumn("y", when(col("f") === "b", lit(null)).otherwise(col("y")))
     val e = intercept[Exception] {
-      Anova.sequential(df, "y",
-        Seq("f" -> Seq(when(col("f") === "b", 1.0).otherwise(0.0))))
+      Anova.sequential(df, "y", Seq("f" -> Seq("f")))
     }
     assert(e.getMessage.contains("NULL in response column"), e.getMessage)
   }
