@@ -1,7 +1,9 @@
 package graft.mc
 
-/** One task-local NMAR simulation replicate: population synthesis,
-  * sample draws, and the estimator battery — pure JVM arrays, no Spark.
+import graft.stats.Det
+
+/** One task-local simulation replicate: population synthesis, sample
+  * draws, and the estimator battery — pure JVM arrays, no Spark.
   *
   * Mirrors `generate_population_NMAR` (`Simulaciones_Clean.ipynb:
   * 1242-1290 (cell 18)`) and the cell-23 battery semantics: x ~ N(2,1),
@@ -12,9 +14,21 @@ package graft.mc
   * seeded per phase (seed, seed+1000, seed+2000) exactly as the
   * reference seeds its three `set.seed` calls.
   *
-  * The estimators are the local (single-task) renditions of the same
-  * closed forms the distributed graft.estimators use — identical math,
-  * array arithmetic instead of Catalyst expressions.
+  * The estimators are the local (single-task) renditions of the closed
+  * forms graft.estimators computes over DataFrames. Both families are one
+  * GREG step — λ = (XᵀDX)⁻¹(T − Xᵀd), wᵢ = dᵢ(1 + xᵢᵀλ) — and each has
+  * one kernel here:
+  *  - [[regdi]]: RegDI (Kim & Tam 2021) calibrates the A design;
+  *  - [[calB]]: PC (Golini & Righi 2024) calibrates the B design, and
+  *    [[pcMean]], [[pcModel]] and [[pcDr1]] combine its λ into the
+  *    scenario-1, -2 and -3 estimates.
+  * Every calibration solve is [[graft.stats.Det.solve]], the Cramer solve
+  * `GramResult.solve` uses for k ≤ 6 (the designs here have k ≤ 5), so a
+  * singular design raises Det's named `singular system` error.
+  * [[solveAliased]] is the one alias-tolerant solve, for the scenario-3
+  * outcome model. In two-table calls a proxy ỹ observed only on B is NaN
+  * on every other row — R's NA — and [[pcModel]] drops the NaN
+  * predictions from its A-residual sum, as the reference's `na.rm` does.
   */
 object LocalSim {
 
@@ -31,54 +45,26 @@ object LocalSim {
     val x = Array.fill(n)(2.0 + rng.nextGaussian())
     val eta = Array.fill(n)(rng.nextGaussian() * math.sqrt(0.51))
     val y = Array.tabulate(n)(i => 3.0 + 0.7 * (x(i) - 2.0) + eta(i))
-
-    // A: SRS without replacement, exact n_A (partial Fisher–Yates)
-    val rngA = new java.util.Random(cfg.seedBase + 1000L)
-    val idx = Array.tabulate(n)(identity)
-    var i = 0
-    while (i < cfg.nA) {
-      val j = i + rngA.nextInt(n - i)
-      val t = idx(i); idx(i) = idx(j); idx(j) = t
-      i += 1
-    }
     val inA = new Array[Boolean](n)
-    (0 until cfg.nA).foreach(k => inA(idx(k)) = true)
-
-    // B: weighted without replacement, exact n_B — E–S keys u^(1/w)
-    val rngB = new java.util.Random(cfg.seedBase + 2000L)
-    val keyed = Array.tabulate(n) { k =>
-      val p = 1.0 / (1.0 + math.exp(-cfg.gamma * (y(k) - TrueC)))
-      (math.pow(rngB.nextDouble(), 1.0 / p), k)
-    }
-    val inB = new Array[Boolean](n)
-    keyed.sortBy(-_._1).take(cfg.nB).foreach { case (_, k) => inB(k) = true }
-    NmarDraw(x, y, inA, inB)
+    drawExact(Array.range(0, n), cfg.nA,
+      new java.util.Random(cfg.seedBase + 1000L), inA)
+    NmarDraw(x, y, inA,
+      nmarB(y, cfg.gamma, cfg.nB, new java.util.Random(cfg.seedBase + 2000L)))
   }
 
   def run(cfg: SimConfig): Seq[SimResult] = {
     val n = cfg.nPop
     val NmarDraw(x, y, inA, inB) = nmarDraw(cfg)
-    val x1 = x.map(v => if (v <= 2.0) 1.0 else 0.0)
-    val x2 = x.map(v => if (v > 2.0) 1.0 else 0.0)
-
-    val dA = n.toDouble / cfg.nA
+    val (x1, x2) = dummies(x, 2.0)
+    val xs = Array(x1, x2)
+    val d = Array.fill(n)(n.toDouble / cfg.nA)
     val dB = n.toDouble / cfg.nB
-
-    def meanWhere(sel: Array[Boolean]): Double = {
-      var s = 0.0; var c = 0
-      var k = 0
-      while (k < n) { if (sel(k)) { s += y(k); c += 1 }; k += 1 }
-      s / c
-    }
-
+    def res(name: String, est: Double) = SimResult(cfg.sim, cfg.gamma, name, est)
     Seq(
-      SimResult(cfg.sim, cfg.gamma, "Mean_S_A", meanWhere(inA)),
-      SimResult(cfg.sim, cfg.gamma, "Mean_S_B", meanWhere(inB)),
-      SimResult(cfg.sim, cfg.gamma, "RegDI_X1",
-        regdi(n, y, Array(x1), inA, inB, dA)),
-      SimResult(cfg.sim, cfg.gamma, "PC_X1_X2",
-        pc(n, y, Array(x1, x2), inA, inB, dA, dB))
-    )
+      res("Mean_S_A", meanWhere(y, inA)),
+      res("Mean_S_B", meanWhere(y, inB)),
+      res("RegDI_X1", regdi(y, y, Array(x1), inA, inB, d, n)),
+      res("PC_X1_X2", pcMean(y, xs, inB, dB, calB(xs, inB, dB, colSums(xs)))))
   }
 
   /** Simulation-1 battery (`ipynb` cells 2+4): stratified-by-x1 big
@@ -86,7 +72,9 @@ object LocalSim {
     * ỹ = 2 + 0.9(y−3) + N(0,.5); 13 estimators across scenarios I/II —
     * RegDI(∅/x1/e1), PC scen-1 (x1,x2)/(e1,e2), naive means, and the
     * scenario-II variants (y_B = ỹ for RegDI; PC scen-2 with outcome
-    * model y ~ ỹ). */
+    * model y ~ ỹ). PC calibrates on direct population totals (one-table
+    * mode, `PC.R:181-187` — the reference's cell-4 calls pass the full
+    * population frame). */
   def runSim1(sim: Int, seedBase: Long, n: Int, nA: Int,
               nB1: Int, nB2: Int): Seq[SimResult] = {
     val rng = new java.util.Random(seedBase)
@@ -97,64 +85,37 @@ object LocalSim {
       2.0 + 0.9 * (y(i) - 3.0) + rng.nextGaussian() * 0.5)
     val v = Array.fill(n)(rng.nextGaussian())
     val e = Array.tabulate(n)(i => 0.5 * x(i) + math.sqrt(0.75) * v(i))
-    val e1 = e.map(w => if (w <= 1.0) 1.0 else 0.0)
-    val e2 = e.map(w => if (w > 1.0) 1.0 else 0.0)
-    val x1 = x.map(w => if (w <= 2.0) 1.0 else 0.0)
-    val x2 = x.map(w => if (w > 2.0) 1.0 else 0.0)
+    val (e1, e2) = dummies(e, 1.0)
+    val (x1, x2) = dummies(x, 2.0)
 
-    // A: SRS exact nA
-    val rngA = new java.util.Random(seedBase + 500L)
-    val idx = Array.tabulate(n)(identity)
-    var i = 0
-    while (i < nA) {
-      val j = i + rngA.nextInt(n - i)
-      val t = idx(i); idx(i) = idx(j); idx(j) = t
-      i += 1
-    }
     val inA = new Array[Boolean](n)
-    (0 until nA).foreach(k => inA(idx(k)) = true)
-
+    drawExact(Array.range(0, n), nA, new java.util.Random(seedBase + 500L), inA)
     // B: exact n_B1 from stratum x≤2, n_B2 from x>2 (cell 2 design)
     val rngB = new java.util.Random(seedBase + 900L)
     val inB = new Array[Boolean](n)
-    def drawStratum(members: Array[Int], size: Int): Unit = {
-      val m = members.clone()
-      var k = 0
-      while (k < size) {
-        val j = k + rngB.nextInt(m.length - k)
-        val t = m(k); m(k) = m(j); m(j) = t
-        inB(m(k)) = true
-        k += 1
-      }
-    }
-    drawStratum((0 until n).filter(x(_) <= 2.0).toArray, nB1)
-    drawStratum((0 until n).filter(x(_) > 2.0).toArray, nB2)
+    drawExact((0 until n).filter(x(_) <= 2.0).toArray, nB1, rngB, inB)
+    drawExact((0 until n).filter(x(_) > 2.0).toArray, nB2, rngB, inB)
 
-    val dA = n.toDouble / nA
+    val d = Array.fill(n)(n.toDouble / nA)
     val dB = n.toDouble / (nB1 + nB2)
-
-    def meanWhere(vals: Array[Double], sel: Array[Boolean]): Double = {
-      var s = 0.0; var c = 0; var k = 0
-      while (k < n) { if (sel(k)) { s += vals(k); c += 1 }; k += 1 }
-      s / c
-    }
+    val (xs, es) = (Array(x1, x2), Array(e1, e2))
+    val (lx, le) = (calB(xs, inB, dB, colSums(xs)), calB(es, inB, dB, colSums(es)))
 
     def res(name: String, est: Double) = SimResult(sim, 0.0, name, est)
-
     Seq(
       res("Mean_S_A", meanWhere(y, inA)),
       res("Mean_S_B", meanWhere(y, inB)),
-      res("RegDI", regdi2(n, y, y, Array.empty, inA, inB, dA)),
-      res("RegDI_X1", regdi2(n, y, y, Array(x1), inA, inB, dA)),
-      res("RegDI_e1", regdi2(n, y, y, Array(e1), inA, inB, dA)),
-      res("PC_X1", pc(n, y, Array(x1, x2), inA, inB, dA, dB)),
-      res("PC_e1", pc(n, y, Array(e1, e2), inA, inB, dA, dB)),
+      res("RegDI", regdi(y, y, Array.empty, inA, inB, d, n)),
+      res("RegDI_X1", regdi(y, y, Array(x1), inA, inB, d, n)),
+      res("RegDI_e1", regdi(y, y, Array(e1), inA, inB, d, n)),
+      res("PC_X1", pcMean(y, xs, inB, dB, lx)),
+      res("PC_e1", pcMean(y, es, inB, dB, le)),
       res("Mean_S_B_II", meanWhere(tildeY, inB)),
-      res("RegDI_II", regdi2(n, y, tildeY, Array.empty, inA, inB, dA)),
-      res("RegDI_X1_II", regdi2(n, y, tildeY, Array(x1), inA, inB, dA)),
-      res("RegDI_e1_II", regdi2(n, y, tildeY, Array(e1), inA, inB, dA)),
-      res("PC_X1_II", pcScen2(n, y, tildeY, Array(x1, x2), inA, inB, dA, dB)),
-      res("PC_e1_II", pcScen2(n, y, tildeY, Array(e1, e2), inA, inB, dA, dB)))
+      res("RegDI_II", regdi(y, tildeY, Array.empty, inA, inB, d, n)),
+      res("RegDI_X1_II", regdi(y, tildeY, Array(x1), inA, inB, d, n)),
+      res("RegDI_e1_II", regdi(y, tildeY, Array(e1), inA, inB, d, n)),
+      res("PC_X1_II", pcModel(y, tildeY, xs, inA, inB, d, dB, lx, n)),
+      res("PC_e1_II", pcModel(y, tildeY, es, inA, inB, d, dB, le, n)))
   }
 
   /** NMAR-v2 study (`ipynb` cells 33+37): one population per (sim, γ)
@@ -168,77 +129,244 @@ object LocalSim {
                nB: Int, sdVector: Seq[Double]): Seq[SimResultV2] = {
     val rng = new java.util.Random(seedBase)
     val x = Array.fill(n)(2.0 + rng.nextGaussian())
-    val ys = sdVector.map { s =>
-      Array.tabulate(n)(i => 3.0 + 0.7 * (x(i) - 2.0)) // + noise below
-    }.toArray
     // noise drawn per-response in sdVector order (mirrors the R loop)
-    sdVector.zipWithIndex.foreach { case (s, yi) =>
-      var i = 0
-      while (i < n) { ys(yi)(i) += rng.nextGaussian() * s; i += 1 }
-    }
+    val ys = sdVector.map(s =>
+      Array.tabulate(n)(i => 3.0 + 0.7 * (x(i) - 2.0) + rng.nextGaussian() * s))
     val v = Array.fill(n)(rng.nextGaussian())
     val e = Array.tabulate(n)(i => 0.5 * x(i) + math.sqrt(0.75) * v(i))
-    val e1 = e.map(w => if (w <= 1.0) 1.0 else 0.0)
-    val e2 = e.map(w => if (w > 1.0) 1.0 else 0.0)
-    val x1 = x.map(w => if (w <= 2.0) 1.0 else 0.0)
-    val x2 = x.map(w => if (w > 2.0) 1.0 else 0.0)
+    val (e1, e2) = dummies(e, 1.0)
+    val (x1, x2) = dummies(x, 2.0)
 
-    val rngA = new java.util.Random(seedBase + 1000L)
-    val idx = Array.tabulate(n)(identity)
-    var i = 0
-    while (i < nA) {
-      val j = i + rngA.nextInt(n - i)
-      val t = idx(i); idx(i) = idx(j); idx(j) = t
-      i += 1
-    }
     val inA = new Array[Boolean](n)
-    (0 until nA).foreach(k => inA(idx(k)) = true)
+    drawExact(Array.range(0, n), nA, new java.util.Random(seedBase + 1000L), inA)
+    val inB = nmarB(ys.head, gamma, nB, new java.util.Random(seedBase + 2000L))
 
-    val rngB = new java.util.Random(seedBase + 2000L)
-    val y0 = ys(0)
-    val keyed = Array.tabulate(n) { k =>
-      val p = 1.0 / (1.0 + math.exp(-gamma * (y0(k) - TrueC)))
-      (math.pow(rngB.nextDouble(), 1.0 / p), k)
-    }
-    val inB = new Array[Boolean](n)
-    keyed.sortBy(-_._1).take(nB).foreach { case (_, k) => inB(k) = true }
-
-    val dA = n.toDouble / nA
-
-    sdVector.zipWithIndex.flatMap { case (s, yi) =>
-      val y = ys(yi)
+    val d = Array.fill(n)(n.toDouble / nA)
+    val dB = n.toDouble / nB
+    val (xs, es) = (Array(x1, x2), Array(e1, e2))
+    val (lx, le) = (calB(xs, inB, dB, colSums(xs)), calB(es, inB, dB, colSums(es)))
+    sdVector.zip(ys).flatMap { case (s, y) =>
       def row(est: String, v: Double) = SimResultV2(sim, gamma, est, s, v)
       Seq(
-        row("PC_xi_DR", pcDr1(n, y, Array(x1, x2), inA, inB)),
-        row("PC_ei_DR", pcDr1(n, y, Array(e1, e2), inA, inB)),
-        row("RegDI_no_aux", regdi2(n, y, y, Array.empty, inA, inB, dA)),
-        row("RegDI_xi", regdi2(n, y, y, Array(x1), inA, inB, dA)),
-        row("RegDI_ei", regdi2(n, y, y, Array(e1), inA, inB, dA)))
+        row("PC_xi_DR", pcDr1(y, xs, inA, inB, dB, lx)),
+        row("PC_ei_DR", pcDr1(y, es, inA, inB, dB, le)),
+        row("RegDI_no_aux", regdi(y, y, Array.empty, inA, inB, d, n)),
+        row("RegDI_xi", regdi(y, y, Array(x1), inA, inB, d, n)),
+        row("RegDI_ei", regdi(y, y, Array(e1), inA, inB, d, n)))
     }
   }
 
-  /** PC scenario-3 DR1 (`PC.R:299-328`, one-table): calibrate B on aux
-    * (direct totals), fit y ~ 1 + aux on A (alias-tolerant: with
-    * saturated dummies the intercept is collinear and R's lm drops the
-    * aliased column), predict everywhere,
-    * est = (Σ_B w_cal·(y−ŷ) + Σ_U ŷ)/N. */
-  private[mc] def pcDr1(n: Int, y: Array[Double], aux: Array[Array[Double]],
-                        inA: Array[Boolean], inB: Array[Boolean]): Double = {
-    val k = aux.length
-    val dB = { var c = 0; var r = 0; while (r < n) { if (inB(r)) c += 1; r += 1 }
-      n.toDouble / c }
-    // calibration of B on aux with direct totals
+  /** Stratified-sampling study (`ipynb` cells 7+12): x~N(10,1),
+    * z~Bern(.5), 4 strata from (x≤9.5, z), y = 5+0.1x+3z+ε (true mean
+    * 7.5), ỹ = 7.5+3(y−7.5)+N(0,√.5); A stratified proportional exact-n
+    * with weights N_h/n_h, B stratified Bernoulli (π=.8/.2) with one
+    * size-adjustment redraw. TWO-TABLE estimator calls: N̂ = Σ d_A,
+    * PC totals are HT from A (`PC.R:190-199`), ỹ is observed on B only,
+    * RegDI_X1 calibrates on numeric `stratum` + x (the SURVEY §1.2 trap:
+    * stratum enters as a single numeric column, NOT factor dummies). */
+  def runSim2(sim: Int, seedBase: Long, n: Int, nATotal: Int,
+              nBTotal: Int): Seq[SimResult] = {
+    val rng = new java.util.Random(seedBase)
+    val x = Array.fill(n)(10.0 + rng.nextGaussian())
+    val z = Array.fill(n)(if (rng.nextDouble() < 0.5) 1.0 else 0.0)
+    val stratum = Array.tabulate(n) { i =>
+      if (x(i) <= 9.5) { if (z(i) == 0.0) 1.0 else 2.0 }
+      else { if (z(i) == 0.0) 3.0 else 4.0 }
+    }
+    val y = Array.tabulate(n)(i =>
+      5.0 + 0.1 * x(i) + 3.0 * z(i) + rng.nextGaussian())
+    val tildeY = Array.tabulate(n)(i =>
+      7.5 + 3.0 * (y(i) - 7.5) + rng.nextGaussian() * math.sqrt(0.5))
+
+    // A: stratified proportional exact-n, d = N_h/n_h
+    val rngA = new java.util.Random(seedBase + 500L)
+    val inA = new Array[Boolean](n)
+    val dOfStratum = new Array[Double](5)
+    for (s <- 1 to 4) {
+      val members = (0 until n).filter(stratum(_) == s.toDouble).toArray
+      val nAh = math.floor(members.length.toDouble / n * nATotal + 0.5).toInt
+      dOfStratum(s) = members.length.toDouble / nAh
+      drawExact(members, nAh, rngA, inA)
+    }
+    val d = Array.tabulate(n)(i => if (inA(i)) dOfStratum(stratum(i).toInt) else 0.0)
+
+    // B: Bernoulli by stratum prob, one rescaled redraw to target size
+    val rngB = new java.util.Random(seedBase + 900L)
+    val pi = Array.tabulate(n)(i => if (stratum(i) <= 2.0) 0.8 else 0.2)
+    var inB = Array.tabulate(n)(i => rngB.nextDouble() < pi(i))
+    val got = inB.count(identity)
+    if (got != nBTotal) {
+      val f = nBTotal.toDouble / got
+      inB = Array.tabulate(n)(i => rngB.nextDouble() < math.min(pi(i) * f, 1.0))
+    }
+
+    val nHatA = d.sum                    // N̂ = Σ d_A (two-table default)
+    val dB = nHatA / inB.count(identity)
+    val tildeYB = Array.tabulate(n)(i => if (inB(i)) tildeY(i) else Double.NaN)
+    def wMeanA: Double = {
+      var sw = 0.0; var swy = 0.0; var k = 0
+      while (k < n) { if (inA(k)) { sw += d(k); swy += d(k) * y(k) }; k += 1 }
+      swy / sw
+    }
+    def calHt(aux: Array[Array[Double]]) = calB(aux, inB, dB, htTotals(aux, inA, d))
+    val (sx, st, sxz) = (Array(stratum, x), Array(stratum), Array(x, z, stratum))
+    val lst = calHt(st)
+
+    def res(name: String, est: Double) = SimResult(sim, 0.0, name, est)
+    Seq(
+      res("Mean_S_A", wMeanA),
+      res("Mean_S_B", meanWhere(y, inB)),
+      res("RegDI", regdi(y, y, Array.empty, inA, inB, d, nHatA)),
+      res("RegDI_X1", regdi(y, y, sx, inA, inB, d, nHatA)),
+      res("PC_X1", pcMean(y, st, inB, dB, lst)),
+      res("Mean_S_B_II", meanWhere(tildeY, inB)),
+      res("RegDI_II", regdi(y, tildeY, Array.empty, inA, inB, d, nHatA)),
+      res("RegDI_X1_II", regdi(y, tildeY, sx, inA, inB, d, nHatA)),
+      res("PC_X1_II", pcModel(y, tildeYB, st, inA, inB, d, dB, lst, nHatA)),
+      // cell-13 re-run: same scenario-2 call with the richer aux set
+      // (x, z, stratum) — the notebook's stored 0.284/0.014 check value
+      res("PC_X1_II_cell13",
+        pcModel(y, tildeYB, sxz, inA, inB, d, dB, calHt(sxz), nHatA)))
+  }
+
+  // ---- draws and helpers ---------------------------------------------
+
+  /** Exact-size SRS without replacement by partial Fisher–Yates over
+    * `members` (permuted in place): marks `size` of them in `into`. */
+  private def drawExact(members: Array[Int], size: Int,
+                        rng: java.util.Random, into: Array[Boolean]): Unit = {
+    var k = 0
+    while (k < size) {
+      val j = k + rng.nextInt(members.length - k)
+      val t = members(k); members(k) = members(j); members(j) = t
+      into(members(k)) = true
+      k += 1
+    }
+  }
+
+  /** NMAR B: weighted without replacement, exact n_B, π ∝
+    * logistic(γ·(y−c)) — Efraimidis–Spirakis keys u^(1/π). */
+  private def nmarB(y: Array[Double], gamma: Double, nB: Int,
+                    rng: java.util.Random): Array[Boolean] = {
+    val keyed = Array.tabulate(y.length) { k =>
+      val p = 1.0 / (1.0 + math.exp(-gamma * (y(k) - TrueC)))
+      (math.pow(rng.nextDouble(), 1.0 / p), k)
+    }
+    val inB = new Array[Boolean](y.length)
+    keyed.sortBy(-_._1).take(nB).foreach { case (_, k) => inB(k) = true }
+    inB
+  }
+
+  private def meanWhere(vals: Array[Double], sel: Array[Boolean]): Double = {
+    var s = 0.0; var c = 0; var k = 0
+    while (k < vals.length) { if (sel(k)) { s += vals(k); c += 1 }; k += 1 }
+    s / c
+  }
+
+  /** The two indicator columns (v ≤ cut, v > cut). */
+  private def dummies(v: Array[Double], cut: Double): (Array[Double], Array[Double]) =
+    (v.map(w => if (w <= cut) 1.0 else 0.0), v.map(w => if (w > cut) 1.0 else 0.0))
+
+  /** Direct population totals of each aux column (one-table mode). */
+  private[mc] def colSums(aux: Array[Array[Double]]): Array[Double] =
+    aux.map { col =>
+      var s = 0.0; var r = 0
+      while (r < col.length) { s += col(r); r += 1 }
+      s
+    }
+
+  /** Horvitz–Thompson totals Σ_A d·aux from the A design (two-table
+    * mode, `PC.R:190-199`). */
+  private[mc] def htTotals(aux: Array[Array[Double]], inA: Array[Boolean],
+                           d: Array[Double]): Array[Double] =
+    aux.map { col =>
+      var s = 0.0; var r = 0
+      while (r < col.length) { if (inA(r)) s += d(r) * col(r); r += 1 }
+      s
+    }
+
+  /** acc + Σ_a coef(off + a)·aux_a(r) — a row's linear predictor. */
+  private def lin(acc: Double, coef: Array[Double], off: Int,
+                  aux: Array[Array[Double]], r: Int): Double = {
+    var s = acc; var a = 0
+    while (a < aux.length) { s += coef(off + a) * aux(a)(r); a += 1 }
+    s
+  }
+
+  /** λ = (XᵀDX)⁻¹(T − Xᵀd) through the estimators' shared solve. */
+  private def gregLambda(xtdx: Array[Array[Double]], t: Array[Double],
+                         xtd: Array[Double]): Array[Double] =
+    Det.solve(IndexedSeq.tabulate(t.length, t.length)((i, j) => xtdx(i)(j)),
+      IndexedSeq.tabulate(t.length)(i => t(i) - xtd(i))).toArray
+
+  // ---- estimator kernels ---------------------------------------------
+
+  /** RegDI correction 0/1 (`RegDI2.R:144-193,244-248`): calibrate the A
+    * design d on x = (1, δ_B, δ_B·y_B, δ_B·aux…) to the totals
+    * T = (N, n_B, Σ_B y_B, Σ_B aux…), then est = Σ_A w·y_A / Σ_A w.
+    * Scenario II passes ỹ as y_B (`RegDI2.R` y_A_col vs y_B_col);
+    * one-table callers pass d ≡ N/n_A, two-table ones N̂ = Σ d_A. */
+  private[mc] def regdi(yA: Array[Double], yB: Array[Double],
+                        aux: Array[Array[Double]],
+                        inA: Array[Boolean], inB: Array[Boolean],
+                        d: Array[Double], nTotal: Double): Double = {
+    val n = yA.length
+    val k = 3 + aux.length
     val t = new Array[Double](k)
+    t(0) = nTotal
     val xtdx = Array.ofDim[Double](k, k)
     val xtd = new Array[Double](k)
-    // OLS y ~ 1 + aux over A rows (p = k+1, alias-tolerant)
-    val p = k + 1
-    val oXtX = Array.ofDim[Double](p, p)
-    val oXty = new Array[Double](p)
+    val f = new Array[Double](k)
+    f(0) = 1.0
     var r = 0
     while (r < n) {
-      var a0 = 0
-      while (a0 < k) { t(a0) += aux(a0)(r); a0 += 1 }
+      if (inB(r)) {
+        t(1) += 1.0; t(2) += yB(r)
+        var a = 0
+        while (a < aux.length) { t(3 + a) += aux(a)(r); a += 1 }
+      }
+      if (inA(r)) {
+        if (inB(r)) {
+          f(1) = 1.0; f(2) = yB(r)
+          var a = 0
+          while (a < aux.length) { f(3 + a) = aux(a)(r); a += 1 }
+        } else java.util.Arrays.fill(f, 1, k, 0.0)
+        var ii = 0
+        while (ii < k) {
+          xtd(ii) += d(r) * f(ii)
+          var jj = 0
+          while (jj < k) { xtdx(ii)(jj) += d(r) * f(ii) * f(jj); jj += 1 }
+          ii += 1
+        }
+      }
+      r += 1
+    }
+    val lambda = gregLambda(xtdx, t, xtd)
+    var sw = 0.0; var swy = 0.0
+    r = 0
+    while (r < n) {
+      if (inA(r)) {
+        val xl =
+          if (inB(r))
+            lin(lambda(0) + (lambda(1) + lambda(2) * yB(r)), lambda, 3, aux, r)
+          else lambda(0)
+        val w = d(r) * (1.0 + xl)
+        sw += w; swy += w * yA(r)
+      }
+      r += 1
+    }
+    swy / sw
+  }
+
+  /** PC's B-side calibration (`PC.R:216-237`): the λ that makes the
+    * calibrated weights d_B(1 + auxᵀλ) over B reproduce `totals`. */
+  private[mc] def calB(aux: Array[Array[Double]], inB: Array[Boolean],
+                       dB: Double, totals: Array[Double]): Array[Double] = {
+    val k = aux.length
+    val xtdx = Array.ofDim[Double](k, k)
+    val xtd = new Array[Double](k)
+    var r = 0
+    while (r < inB.length) {
       if (inB(r)) {
         var ii = 0
         while (ii < k) {
@@ -248,11 +376,75 @@ object LocalSim {
           ii += 1
         }
       }
+      r += 1
+    }
+    gregLambda(xtdx, totals, xtd)
+  }
+
+  /** PC scenario 1 (`PC.R:240-253`): the calibrated B mean of y. */
+  private[mc] def pcMean(y: Array[Double], aux: Array[Array[Double]],
+                         inB: Array[Boolean], dB: Double,
+                         lambda: Array[Double]): Double = {
+    var sw = 0.0; var swy = 0.0; var r = 0
+    while (r < y.length) {
+      if (inB(r)) {
+        val w = dB * (1.0 + lin(0.0, lambda, 0, aux, r))
+        sw += w; swy += w * y(r)
+      }
+      r += 1
+    }
+    swy / sw
+  }
+
+  /** PC scenario 2 (`PC.R:255-297`): fit OLS y ~ 1 + ỹ on A∩B, then
+    * est = (Σ_B d_B(1 + auxᵀλ)·ŷ + Σ_A d·(y − ŷ)) / N. A NaN proxy
+    * (R's NA) gives a NaN prediction, which the A sum skips. */
+  private[mc] def pcModel(y: Array[Double], proxy: Array[Double],
+                          aux: Array[Array[Double]],
+                          inA: Array[Boolean], inB: Array[Boolean],
+                          d: Array[Double], dB: Double,
+                          lambda: Array[Double], nTotal: Double): Double = {
+    val n = y.length
+    var sx = 0.0; var sy = 0.0; var sxy = 0.0; var sxx = 0.0; var m = 0
+    var r = 0
+    while (r < n) {
+      if (inA(r) && inB(r)) {
+        sx += proxy(r); sy += y(r); sxy += proxy(r) * y(r)
+        sxx += proxy(r) * proxy(r); m += 1
+      }
+      r += 1
+    }
+    val b1 = (sxy - sx * sy / m) / (sxx - sx * sx / m)
+    val b0 = sy / m - b1 * sx / m
+    var acc = 0.0
+    r = 0
+    while (r < n) {
+      val yhat = b0 + b1 * proxy(r)
+      if (inB(r)) acc += dB * (1.0 + lin(0.0, lambda, 0, aux, r)) * yhat
+      if (inA(r) && !yhat.isNaN) acc += d(r) * (y(r) - yhat)
+      r += 1
+    }
+    acc / nTotal
+  }
+
+  /** PC scenario-3 DR1 (`PC.R:299-328`, one-table): fit y ~ 1 + aux on
+    * A (alias-tolerant: with saturated dummies the intercept is
+    * collinear and R's lm drops the aliased column), predict everywhere,
+    * est = (Σ_B d_B(1 + auxᵀλ)·(y−ŷ) + Σ_U ŷ)/N. */
+  private[mc] def pcDr1(y: Array[Double], aux: Array[Array[Double]],
+                        inA: Array[Boolean], inB: Array[Boolean],
+                        dB: Double, lambda: Array[Double]): Double = {
+    val n = y.length
+    val p = aux.length + 1
+    val f = new Array[Double](p)
+    f(0) = 1.0
+    val oXtX = Array.ofDim[Double](p, p)
+    val oXty = new Array[Double](p)
+    var r = 0
+    while (r < n) {
       if (inA(r)) {
-        val f = new Array[Double](p)
-        f(0) = 1.0
         var a = 0
-        while (a < k) { f(1 + a) = aux(a)(r); a += 1 }
+        while (a < aux.length) { f(1 + a) = aux(a)(r); a += 1 }
         var ii = 0
         while (ii < p) {
           oXty(ii) += f(ii) * y(r)
@@ -263,21 +455,13 @@ object LocalSim {
       }
       r += 1
     }
-    val lambda = solve(xtdx, Array.tabulate(k)(ii => t(ii) - xtd(ii)))
     val beta = solveAliased(oXtX, oXty)
     var acc = 0.0
     r = 0
     while (r < n) {
-      var yhat = beta(0)
-      var a = 0
-      while (a < k) { yhat += beta(1 + a) * aux(a)(r); a += 1 }
+      val yhat = lin(beta(0), beta, 1, aux, r)
       acc += yhat
-      if (inB(r)) {
-        var xl = 0.0
-        a = 0
-        while (a < k) { xl += lambda(a) * aux(a)(r); a += 1 }
-        acc += dB * (1.0 + xl) * (y(r) - yhat)
-      }
+      if (inB(r)) acc += dB * (1.0 + lin(0.0, lambda, 0, aux, r)) * (y(r) - yhat)
       r += 1
     }
     acc / n
@@ -328,484 +512,6 @@ object LocalSim {
         out(r2) = s / a(r2)(r2)
       }
       r2 -= 1
-    }
-    out
-  }
-
-  /** Stratified-sampling study (`ipynb` cells 7+12): x~N(10,1),
-    * z~Bern(.5), 4 strata from (x≤9.5, z), y = 5+0.1x+3z+ε (true mean
-    * 7.5), ỹ = 7.5+3(y−7.5)+N(0,√.5); A stratified proportional exact-n
-    * with weights N_h/n_h, B stratified Bernoulli (π=.8/.2) with one
-    * size-adjustment redraw. TWO-TABLE estimator calls: N̂ = Σ d_A,
-    * PC totals are HT from A (`PC.R:190-199`), RegDI_X1 calibrates on
-    * numeric `stratum` + x (the SURVEY §1.2 trap: stratum enters as a
-    * single numeric column, NOT factor dummies). */
-  def runSim2(sim: Int, seedBase: Long, n: Int, nATotal: Int,
-              nBTotal: Int): Seq[SimResult] = {
-    val rng = new java.util.Random(seedBase)
-    val x = Array.fill(n)(10.0 + rng.nextGaussian())
-    val z = Array.fill(n)(if (rng.nextDouble() < 0.5) 1.0 else 0.0)
-    val stratum = Array.tabulate(n) { i =>
-      if (x(i) <= 9.5) { if (z(i) == 0.0) 1.0 else 2.0 }
-      else { if (z(i) == 0.0) 3.0 else 4.0 }
-    }
-    val y = Array.tabulate(n)(i =>
-      5.0 + 0.1 * x(i) + 3.0 * z(i) + rng.nextGaussian())
-    val tildeY = Array.tabulate(n)(i =>
-      7.5 + 3.0 * (y(i) - 7.5) + rng.nextGaussian() * math.sqrt(0.5))
-
-    // A: stratified proportional exact-n, d = N_h/n_h
-    val rngA = new java.util.Random(seedBase + 500L)
-    val inA = new Array[Boolean](n)
-    val dOfStratum = new Array[Double](5)
-    for (s <- 1 to 4) {
-      val members = (0 until n).filter(stratum(_) == s.toDouble).toArray
-      val nH = members.length
-      val nAh = math.floor(nH.toDouble / n * nATotal + 0.5).toInt
-      dOfStratum(s) = nH.toDouble / nAh
-      val m = members.clone()
-      var k = 0
-      while (k < nAh) {
-        val j = k + rngA.nextInt(m.length - k)
-        val t = m(k); m(k) = m(j); m(j) = t
-        inA(m(k)) = true
-        k += 1
-      }
-    }
-    val d = Array.tabulate(n)(i => if (inA(i)) dOfStratum(stratum(i).toInt) else 0.0)
-
-    // B: Bernoulli by stratum prob, one rescaled redraw to target size
-    val rngB = new java.util.Random(seedBase + 900L)
-    val pi = Array.tabulate(n)(i => if (stratum(i) <= 2.0) 0.8 else 0.2)
-    var inB = Array.tabulate(n)(i => rngB.nextDouble() < pi(i))
-    val got = inB.count(identity)
-    if (got != nBTotal) {
-      val f = nBTotal.toDouble / got
-      inB = Array.tabulate(n)(i => rngB.nextDouble() < math.min(pi(i) * f, 1.0))
-    }
-
-    val nHatA = d.sum                    // N̂ = Σ d_A (two-table default)
-    val nB = inB.count(identity)
-    val dB = nHatA / nB
-
-    def meanWhere(vals: Array[Double], sel: Array[Boolean]): Double = {
-      var s = 0.0; var c = 0; var k = 0
-      while (k < n) { if (sel(k)) { s += vals(k); c += 1 }; k += 1 }
-      s / c
-    }
-    def wMeanA: Double = {
-      var sw = 0.0; var swy = 0.0; var k = 0
-      while (k < n) { if (inA(k)) { sw += d(k); swy += d(k) * y(k) }; k += 1 }
-      swy / sw
-    }
-
-    def res(name: String, est: Double) = SimResult(sim, 0.0, name, est)
-    Seq(
-      res("Mean_S_A", wMeanA),
-      res("Mean_S_B", meanWhere(y, inB)),
-      res("RegDI", regdiW(n, y, y, Array.empty, inA, inB, d, nHatA)),
-      res("RegDI_X1", regdiW(n, y, y, Array(stratum, x), inA, inB, d, nHatA)),
-      res("PC_X1", pcHt(n, y, y, Array(stratum), inA, inB, d, dB, nHatA,
-        scen2 = false)),
-      res("Mean_S_B_II", meanWhere(tildeY, inB)),
-      res("RegDI_II", regdiW(n, y, tildeY, Array.empty, inA, inB, d, nHatA)),
-      res("RegDI_X1_II", regdiW(n, y, tildeY, Array(stratum, x), inA, inB, d, nHatA)),
-      res("PC_X1_II", pcHt(n, y, tildeY, Array(stratum), inA, inB, d, dB,
-        nHatA, scen2 = true)),
-      // cell-13 re-run: same scenario-2 call with the richer aux set
-      // (x, z, stratum) — the notebook's stored 0.284/0.014 check value
-      res("PC_X1_II_cell13", pcHt(n, y, tildeY, Array(x, z, stratum), inA,
-        inB, d, dB, nHatA, scen2 = true)))
-  }
-
-  /** RegDI 0/1 with per-row design weights (stratified A). */
-  private[mc] def regdiW(n: Int, yA: Array[Double], yB: Array[Double],
-                         aux: Array[Array[Double]],
-                         inA: Array[Boolean], inB: Array[Boolean],
-                         d: Array[Double], nTotal: Double): Double = {
-    val k = 3 + aux.length
-    val t = new Array[Double](k)
-    t(0) = nTotal
-    var r = 0
-    while (r < n) {
-      if (inB(r)) {
-        t(1) += 1.0; t(2) += yB(r)
-        var a = 0
-        while (a < aux.length) { t(3 + a) += aux(a)(r); a += 1 }
-      }
-      r += 1
-    }
-    val xtdx = Array.ofDim[Double](k, k)
-    val xtd = new Array[Double](k)
-    r = 0
-    while (r < n) {
-      if (inA(r)) {
-        val f = new Array[Double](k)
-        f(0) = 1.0
-        if (inB(r)) {
-          f(1) = 1.0; f(2) = yB(r)
-          var a = 0
-          while (a < aux.length) { f(3 + a) = aux(a)(r); a += 1 }
-        }
-        var ii = 0
-        while (ii < k) {
-          xtd(ii) += d(r) * f(ii)
-          var jj = 0
-          while (jj < k) { xtdx(ii)(jj) += d(r) * f(ii) * f(jj); jj += 1 }
-          ii += 1
-        }
-      }
-      r += 1
-    }
-    val lambda = solve(xtdx, Array.tabulate(k)(ii => t(ii) - xtd(ii)))
-    var sw = 0.0; var swy = 0.0
-    r = 0
-    while (r < n) {
-      if (inA(r)) {
-        var xl = lambda(0)
-        if (inB(r)) {
-          xl += lambda(1) + lambda(2) * yB(r)
-          var a = 0
-          while (a < aux.length) { xl += lambda(3 + a) * aux(a)(r); a += 1 }
-        }
-        val w = d(r) * (1.0 + xl)
-        sw += w; swy += w * yA(r)
-      }
-      r += 1
-    }
-    swy / sw
-  }
-
-  /** PC two-table: aux totals are HT estimates from the A design
-    * (`PC.R:190-199`); scen1 = calibrated B mean of y_B; scen2 = fit
-    * y_A ~ y_B on overlap, combine. */
-  private[mc] def pcHt(n: Int, yA: Array[Double], yB: Array[Double],
-                       aux: Array[Array[Double]],
-                       inA: Array[Boolean], inB: Array[Boolean],
-                       d: Array[Double], dB: Double, nTotal: Double,
-                       scen2: Boolean): Double = {
-    val k = aux.length
-    val t = new Array[Double](k)
-    val xtdx = Array.ofDim[Double](k, k)
-    val xtd = new Array[Double](k)
-    var sx = 0.0; var sy = 0.0; var sxy = 0.0; var sxx = 0.0; var m = 0
-    var r = 0
-    while (r < n) {
-      if (inA(r)) {
-        var a = 0
-        while (a < k) { t(a) += d(r) * aux(a)(r); a += 1 }
-        if (inB(r)) {
-          sx += yB(r); sy += yA(r); sxy += yB(r) * yA(r)
-          sxx += yB(r) * yB(r); m += 1
-        }
-      }
-      if (inB(r)) {
-        var ii = 0
-        while (ii < k) {
-          xtd(ii) += dB * aux(ii)(r)
-          var jj = 0
-          while (jj < k) { xtdx(ii)(jj) += dB * aux(ii)(r) * aux(jj)(r); jj += 1 }
-          ii += 1
-        }
-      }
-      r += 1
-    }
-    val lambda = solve(xtdx, Array.tabulate(k)(ii => t(ii) - xtd(ii)))
-    if (!scen2) {
-      var sw = 0.0; var swy = 0.0
-      r = 0
-      while (r < n) {
-        if (inB(r)) {
-          var xl = 0.0
-          var a = 0
-          while (a < k) { xl += lambda(a) * aux(a)(r); a += 1 }
-          val w = dB * (1.0 + xl)
-          sw += w; swy += w * yB(r)
-        }
-        r += 1
-      }
-      swy / sw
-    } else {
-      val b1 = (sxy - sx * sy / m) / (sxx - sx * sx / m)
-      val b0 = sy / m - b1 * sx / m
-      var acc = 0.0
-      r = 0
-      while (r < n) {
-        if (inB(r)) {
-          val yhat = b0 + b1 * yB(r)
-          var xl = 0.0
-          var a = 0
-          while (a < k) { xl += lambda(a) * aux(a)(r); a += 1 }
-          acc += dB * (1.0 + xl) * yhat
-        }
-        if (inA(r)) {
-          // ŷ on A needs y_B there; outside B it's unobserved — the
-          // reference's resolver falls back to the A-side y (y_i ~
-          // tilde_y_i resolves tilde against B, y against A); residual
-          // uses predictions where the proxy exists (overlap), raw y
-          // elsewhere contributes y − ŷ with ŷ from the A-side proxy
-          // value when present. Two-table mode: proxy only on B rows →
-          // A-residual term uses overlap rows only, others ŷ = b0+b1·yB
-          // is unavailable → reference predicts on data (joined frame)
-          // where tilde_y is NA outside B, yielding NA predictions that
-          // na.rm-drop. We mirror: only overlap rows contribute.
-          if (inB(r)) acc += d(r) * (yA(r) - (b0 + b1 * yB(r)))
-        }
-        r += 1
-      }
-      acc / nTotal
-    }
-  }
-
-  /** PC scenario 2 (`PC.R:255-297`): calibrate B on aux, fit OLS
-    * y ~ ỹ on A∩B, est = (Σ d_B·ŷ + Σ_A d_A·(y−ŷ))/N. */
-  private[mc] def pcScen2(n: Int, y: Array[Double], proxy: Array[Double],
-                          aux: Array[Array[Double]],
-                          inA: Array[Boolean], inB: Array[Boolean],
-                          dA: Double, dB: Double): Double = {
-    // calibrated d_B (same as pc())
-    val k = aux.length
-    val t = new Array[Double](k)
-    val xtdx = Array.ofDim[Double](k, k)
-    val xtd = new Array[Double](k)
-    // OLS y ~ 1 + proxy on A∩B; DIRECT population totals (one-table
-    // mode, PC.R:181-187 — the full frame IS the population)
-    var sx = 0.0; var sy = 0.0; var sxy = 0.0; var sxx = 0.0; var m = 0
-    var r = 0
-    while (r < n) {
-      var a0 = 0
-      while (a0 < k) { t(a0) += aux(a0)(r); a0 += 1 }
-      if (inA(r) && inB(r)) {
-        sx += proxy(r); sy += y(r); sxy += proxy(r) * y(r)
-        sxx += proxy(r) * proxy(r); m += 1
-      }
-      if (inB(r)) {
-        var ii = 0
-        while (ii < k) {
-          xtd(ii) += dB * aux(ii)(r)
-          var jj = 0
-          while (jj < k) { xtdx(ii)(jj) += dB * aux(ii)(r) * aux(jj)(r); jj += 1 }
-          ii += 1
-        }
-      }
-      r += 1
-    }
-    val b1 = (sxy - sx * sy / m) / (sxx - sx * sx / m)
-    val b0 = sy / m - b1 * sx / m
-    val lambda =
-      if (k == 0) Array.empty[Double]
-      else solve(xtdx, Array.tabulate(k)(ii => t(ii) - xtd(ii)))
-    var acc = 0.0
-    r = 0
-    while (r < n) {
-      val yhat = b0 + b1 * proxy(r)
-      if (inB(r)) {
-        var xl = 0.0
-        var a = 0
-        while (a < k) { xl += lambda(a) * aux(a)(r); a += 1 }
-        acc += dB * (1.0 + xl) * yhat
-      }
-      if (inA(r)) acc += dA * (y(r) - yhat)
-      r += 1
-    }
-    acc / n
-  }
-
-  /** RegDI correction 0/1 with possibly distinct A/B outcome columns
-    * (scenario II passes ỹ as y_B — `RegDI2.R` y_A_col vs y_B_col). */
-  private[mc] def regdi2(n: Int, yA: Array[Double], yB: Array[Double],
-                         aux: Array[Array[Double]],
-                         inA: Array[Boolean], inB: Array[Boolean],
-                         dA: Double): Double = {
-    val k = 3 + aux.length
-    val t = new Array[Double](k)
-    t(0) = n.toDouble
-    var r = 0
-    while (r < n) {
-      if (inB(r)) {
-        t(1) += 1.0; t(2) += yB(r)
-        var a = 0
-        while (a < aux.length) { t(3 + a) += aux(a)(r); a += 1 }
-      }
-      r += 1
-    }
-    val xtdx = Array.ofDim[Double](k, k)
-    val xtd = new Array[Double](k)
-    r = 0
-    while (r < n) {
-      if (inA(r)) {
-        val f = new Array[Double](k)
-        f(0) = 1.0
-        if (inB(r)) {
-          f(1) = 1.0; f(2) = yB(r)
-          var a = 0
-          while (a < aux.length) { f(3 + a) = aux(a)(r); a += 1 }
-        }
-        var ii = 0
-        while (ii < k) {
-          xtd(ii) += dA * f(ii)
-          var jj = 0
-          while (jj < k) { xtdx(ii)(jj) += dA * f(ii) * f(jj); jj += 1 }
-          ii += 1
-        }
-      }
-      r += 1
-    }
-    val lambda = solve(xtdx, Array.tabulate(k)(ii => t(ii) - xtd(ii)))
-    var sw = 0.0; var swy = 0.0
-    r = 0
-    while (r < n) {
-      if (inA(r)) {
-        var xl = lambda(0)
-        if (inB(r)) {
-          xl += lambda(1) + lambda(2) * yB(r)
-          var a = 0
-          while (a < aux.length) { xl += lambda(3 + a) * aux(a)(r); a += 1 }
-        }
-        val w = dA * (1.0 + xl)
-        sw += w; swy += w * yA(r)
-      }
-      r += 1
-    }
-    swy / sw
-  }
-
-  /** RegDI correction 0/1, calibration vars (uno, δ_i, δ_y, δ_aux…) —
-    * the local form of `RegDI2.R:144-193,244-248`. */
-  private[mc] def regdi(n: Int, y: Array[Double], aux: Array[Array[Double]],
-                        inA: Array[Boolean], inB: Array[Boolean],
-                        dA: Double): Double = {
-    val k = 3 + aux.length
-    // calibration totals T = (N, Σ_B 1, Σ_B y, Σ_B aux…)
-    val t = new Array[Double](k)
-    t(0) = n.toDouble
-    var r = 0
-    while (r < n) {
-      if (inB(r)) {
-        t(1) += 1.0; t(2) += y(r)
-        var a = 0
-        while (a < aux.length) { t(3 + a) += aux(a)(r); a += 1 }
-      }
-      r += 1
-    }
-    // Gram over A rows: features x_r = (1, δ_i, δ_y, δ_aux…)
-    val xtdx = Array.ofDim[Double](k, k)
-    val xtd = new Array[Double](k)
-    r = 0
-    while (r < n) {
-      if (inA(r)) {
-        val f = new Array[Double](k)
-        f(0) = 1.0
-        if (inB(r)) {
-          f(1) = 1.0; f(2) = y(r)
-          var a = 0
-          while (a < aux.length) { f(3 + a) = aux(a)(r); a += 1 }
-        }
-        var ii = 0
-        while (ii < k) {
-          xtd(ii) += dA * f(ii)
-          var jj = 0
-          while (jj < k) { xtdx(ii)(jj) += dA * f(ii) * f(jj); jj += 1 }
-          ii += 1
-        }
-      }
-      r += 1
-    }
-    val rhs = Array.tabulate(k)(ii => t(ii) - xtd(ii))
-    val lambda = solve(xtdx, rhs)
-    // w = d(1 + xᵀλ);  est = Σ w·y_A / Σ w
-    var sw = 0.0; var swy = 0.0
-    r = 0
-    while (r < n) {
-      if (inA(r)) {
-        var xl = lambda(0)
-        if (inB(r)) {
-          xl += lambda(1) + lambda(2) * y(r)
-          var a = 0
-          while (a < aux.length) { xl += lambda(3 + a) * aux(a)(r); a += 1 }
-        }
-        val w = dA * (1.0 + xl)
-        sw += w; swy += w * y(r)
-      }
-      r += 1
-    }
-    swy / sw
-  }
-
-  /** PC scenario 1: calibrate the B design on aux vars against DIRECT
-    * population totals (one-table mode, `PC.R:181-187,216-237` — the
-    * reference's cell-4/23 calls pass the full population frame), then
-    * the calibrated B mean. */
-  private[mc] def pc(n: Int, y: Array[Double], aux: Array[Array[Double]],
-                     inA: Array[Boolean], inB: Array[Boolean],
-                     dA: Double, dB: Double): Double = {
-    val k = aux.length
-    val t = new Array[Double](k)       // direct population totals
-    val xtdx = Array.ofDim[Double](k, k)
-    val xtd = new Array[Double](k)
-    var r = 0
-    while (r < n) {
-      var a0 = 0
-      while (a0 < k) { t(a0) += aux(a0)(r); a0 += 1 }
-      if (inB(r)) {
-        var ii = 0
-        while (ii < k) {
-          xtd(ii) += dB * aux(ii)(r)
-          var jj = 0
-          while (jj < k) { xtdx(ii)(jj) += dB * aux(ii)(r) * aux(jj)(r); jj += 1 }
-          ii += 1
-        }
-      }
-      r += 1
-    }
-    val rhs = Array.tabulate(k)(ii => t(ii) - xtd(ii))
-    val lambda = solve(xtdx, rhs)
-    var sw = 0.0; var swy = 0.0
-    r = 0
-    while (r < n) {
-      if (inB(r)) {
-        var xl = 0.0
-        var a = 0
-        while (a < k) { xl += lambda(a) * aux(a)(r); a += 1 }
-        val w = dB * (1.0 + xl)
-        sw += w; swy += w * y(r)
-      }
-      r += 1
-    }
-    swy / sw
-  }
-
-  /** In-place Gaussian elimination with partial pivoting (k ≤ ~8). */
-  private[mc] def solve(a0: Array[Array[Double]], b0: Array[Double]): Array[Double] = {
-    val k = b0.length
-    val a = a0.map(_.clone())
-    val b = b0.clone()
-    var col = 0
-    while (col < k) {
-      var p = col
-      var r = col + 1
-      while (r < k) { if (math.abs(a(r)(col)) > math.abs(a(p)(col))) p = r; r += 1 }
-      val ta = a(col); a(col) = a(p); a(p) = ta
-      val tb = b(col); b(col) = b(p); b(p) = tb
-      require(math.abs(a(col)(col)) > 1e-12, "singular calibration system")
-      r = col + 1
-      while (r < k) {
-        val f = a(r)(col) / a(col)(col)
-        var c = col
-        while (c < k) { a(r)(c) -= f * a(col)(c); c += 1 }
-        b(r) -= f * b(col)
-        r += 1
-      }
-      col += 1
-    }
-    val out = new Array[Double](k)
-    var r = k - 1
-    while (r >= 0) {
-      var s = b(r)
-      var c = r + 1
-      while (c < k) { s -= a(r)(c) * out(c); c += 1 }
-      out(r) = s / a(r)(r)
-      r -= 1
     }
     out
   }

@@ -1,6 +1,6 @@
 package graft.mc
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.util.Tables.{dmean, dsum, dvarSamp}
@@ -50,27 +50,21 @@ object MonteCarlo {
   def runSim1(spark: SparkSession, nSim: Int, nPop: Int, nA: Int,
               nB1: Int, nB2: Int, seed0: Long = 0L): DataFrame = {
     import spark.implicits._
-    spark.createDataset(1 to nSim)
-      .repartition(math.min(nSim, spark.sparkContext.defaultParallelism * 2))
-      // 1e4 per-replicate spacing: runSim1's phase streams live at
-      // seedBase+500/+900, so spacing 1 made sim s's sample-draw RNG
-      // identical to sim s+500's population RNG at the 1000-replicate
-      // golden scale (r15 review)
-      .flatMap(s => LocalSim.runSim1(s, seed0 + 10000L * s, nPop, nA,
-        nB1, nB2))
-      .toDF()
+    // 1e4 per-replicate spacing: runSim1's phase streams live at
+    // seedBase+500/+900, so spacing 1 made sim s's sample-draw RNG
+    // identical to sim s+500's population RNG at the 1000-replicate
+    // golden scale
+    fanOut(spark, 1 to nSim)(s =>
+      LocalSim.runSim1(s, seed0 + 10000L * s, nPop, nA, nB1, nB2))
   }
 
   /** Stratified-sampling study (`ipynb` cell 12): nSim replicates. */
   def runSim2(spark: SparkSession, nSim: Int, nPop: Int, nATotal: Int,
               nBTotal: Int, seed0: Long = 0L): DataFrame = {
     import spark.implicits._
-    spark.createDataset(1 to nSim)
-      .repartition(math.min(nSim, spark.sparkContext.defaultParallelism * 2))
-      // same 1e4 spacing as runSim1 (phase streams at +500/+900 — r15)
-      .flatMap(s => LocalSim.runSim2(s, seed0 + 10000L * s, nPop,
-        nATotal, nBTotal))
-      .toDF()
+    // same 1e4 spacing as runSim1 (phase streams at +500/+900)
+    fanOut(spark, 1 to nSim)(s =>
+      LocalSim.runSim2(s, seed0 + 10000L * s, nPop, nATotal, nBTotal))
   }
 
   /** Portable-twin grid (o04): replicates × gamma values, each carrying
@@ -84,51 +78,43 @@ object MonteCarlo {
       s <- 1 to nSim
     } yield PortableConfig(s, gi, g, nPop)
 
-  /** Fan the portable grid out — the SAME fan-out shape as [[run]]
-    * (grid Dataset → repartition → task-local flatMap → SimResult
-    * rows), but over [[PortableSim.simulate]]'s engine-exact
-    * arithmetic, so the assembled rows are DuckDB-replayable and o04
-    * hash-grades this very code path. */
+  /** Fan the portable grid out — the SAME fan-out as [[run]], but over
+    * [[PortableSim.simulate]]'s engine-exact arithmetic, so the
+    * assembled rows are DuckDB-replayable and o04 hash-grades this very
+    * code path. */
   def runPortable(spark: SparkSession, grid: Seq[PortableConfig]): DataFrame = {
     import spark.implicits._
-    spark.createDataset(grid)
-      .repartition(math.min(grid.size,
-        spark.sparkContext.defaultParallelism * 2))
-      .flatMap(PortableSim.simulate)
-      .toDF()
+    fanOut(spark, grid)(PortableSim.simulate)
   }
 
   /** Fan the grid out; one task-local simulation per config. */
   def run(spark: SparkSession, grid: Seq[SimConfig]): DataFrame = {
     import spark.implicits._
-    spark.createDataset(grid)
-      .repartition(math.min(grid.size,
-        spark.sparkContext.defaultParallelism * 2))
-      .flatMap(LocalSim.run)
-      .toDF()
+    fanOut(spark, grid)(LocalSim.run)
   }
 
   /** NMAR-v2 study (`ipynb` cell 37): per (sim, γ) population with a
     * response column per sd in `sdVector`; 5 estimators × |sdVector|
-    * evaluations per replicate, emitted LONG. [[Reporting.toWide]]
-    * pivots to the reference's wide CSV layout. */
+    * evaluations per replicate, emitted LONG, over [[nmarGrid]]'s cells
+    * and seeds. [[Reporting.toWide]] pivots to the reference's wide CSV
+    * layout. */
   def runV2(spark: SparkSession, nSim: Int, gammas: Seq[Double],
             nPop: Int, nA: Int, nB: Int, sdVector: Seq[Double],
             seed0: Long = 1234L): DataFrame = {
     import spark.implicits._
-    // same disjoint-stream spacing as nmarGrid (r15)
-    val grid = for {
-      (g, gi) <- gammas.zipWithIndex
-      s <- 1 to nSim
-    } yield (s, g, seed0 + 10000L * gi + 100000000L * s)
-    spark.createDataset(grid)
-      .repartition(math.min(grid.size,
-        spark.sparkContext.defaultParallelism * 2))
-      .flatMap { case (s, g, seed) =>
-        LocalSim.runSimV2(s, g, seed, nPop, nA, nB, sdVector)
-      }
-      .toDF()
+    fanOut(spark, nmarGrid(nSim, gammas, nPop, nA, nB, seed0))(c =>
+      LocalSim.runSimV2(c.sim, c.gamma, c.seedBase, c.nPop, c.nA, c.nB, sdVector))
   }
+
+  /** The one task-local fan-out: the grid becomes a Dataset, spread over
+    * at most two tasks per core, and each task runs `simulate` on its
+    * configs; only the result rows leave the task. */
+  private def fanOut[C: Encoder, R: Encoder](spark: SparkSession, grid: Seq[C])
+                                            (simulate: C => Seq[R]): DataFrame =
+    spark.createDataset(grid)
+      .repartition(math.min(grid.size, spark.sparkContext.defaultParallelism * 2))
+      .flatMap(simulate)
+      .toDF()
 
   /** DISTRIBUTED mode (SCALE.md §Monte-Carlo): for per-replicate
     * populations too large for one task (N ≳ 10M), a driver loop of

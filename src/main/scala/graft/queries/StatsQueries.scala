@@ -88,10 +88,21 @@ object StatsQueries {
     * are the prefix sums' final values, already on the driver for
     * free, so callers needing totals skip a whole aggregation pass.
     * Internally byV is lease-pinned so the documents scan underneath
-    * runs once across the bucket-totals and windowed passes. */
-  private def withCumSums(byV: DataFrame): (DataFrame, (Long, Long)) = {
+    * runs once across the bucket-totals and windowed passes.
+    *
+    * Precondition: `v` is an integral column (byte, short, int or long).
+    * The ≤ 2^16-rows-per-bucket bound counts integers; a fractional v
+    * would put unboundedly many distinct values in one bucket (every
+    * |v| < 2^16 lands in bucket 0), so any other type is rejected with
+    * an IllegalArgumentException before a job runs. */
+  private[queries] def withCumSums(byV: DataFrame): (DataFrame, (Long, Long)) = {
     import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType,
+      StructField, StructType}
+    val vType = byV.schema("v").dataType
+    require(Seq(ByteType, ShortType, IntegerType, LongType).contains(vType),
+      s"withCumSums needs an integral value column v, got $vType: its " +
+        "2^16-wide buckets bound rows per task only for integer values")
     val base = graft.util.QueryLeases.leased(
       byV.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val vb = base.withColumn("__b", shiftright(col("v").cast("long"), 16))

@@ -181,9 +181,26 @@ class McSuite extends SparkSpec {
   }
 
   test("local solver matches a hand-computed 2x2 system") {
-    val x = LocalSim.solve(Array(Array(2.0, 1.0), Array(1.0, 3.0)),
-      Array(5.0, 10.0))
+    val x = graft.stats.Det.solve(IndexedSeq(IndexedSeq(2.0, 1.0),
+      IndexedSeq(1.0, 3.0)), IndexedSeq(5.0, 10.0))
     assert(math.abs(x(0) - 1.0) < 1e-12)
     assert(math.abs(x(1) - 3.0) < 1e-12)
+  }
+
+  test("a LocalSim design with an aux column zero on every B row raises " +
+    "Det's singular-system error instead of returning NaN") {
+    val n = 200
+    val y = Array.tabulate(n)(i => 3.0 + (i % 7) * 0.1)
+    val inA = Array.tabulate(n)(i => i % 3 == 0)
+    val inB = Array.tabulate(n)(i => i % 2 == 0)
+    val zeroOnB = Array.tabulate(n)(i => if (inB(i)) 0.0 else 1.0 + i)
+    val aux = Array(zeroOnB)
+    val dB = n.toDouble / inB.count(identity)
+    val cal = intercept[IllegalArgumentException](
+      LocalSim.calB(aux, inB, dB, LocalSim.colSums(aux)))
+    assert(cal.getMessage.contains("singular system"), cal.getMessage)
+    val reg = intercept[IllegalArgumentException](
+      LocalSim.regdi(y, y, aux, inA, inB, Array.fill(n)(4.0), n))
+    assert(reg.getMessage.contains("singular system"), reg.getMessage)
   }
 }

@@ -46,4 +46,11 @@ class DegenerateInputSuite extends SparkSpec {
     assert(m45.getLong(0) == 2L && m45.getLong(1) == 2L)
     assert(!m45.getDouble(3).isNaN)
   }
+
+  test("withCumSums rejects a non-integral value column with a named " +
+      "error (its per-bucket row bound holds only for integers)") {
+    val byV = Seq((0.5, 1L, 0L), (1.5, 2L, 1L)).toDF("v", "t", "t1")
+    val e = intercept[IllegalArgumentException](StatsQueries.withCumSums(byV))
+    assert(e.getMessage.contains("integral value column v"), e.getMessage)
+  }
 }

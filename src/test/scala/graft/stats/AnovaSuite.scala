@@ -194,10 +194,12 @@ class AnovaSuite extends SparkSpec {
     import scala.collection.parallel.CollectionConverters._
     import graft.mc.LocalSim
     val sds = Seq(0.0, 0.125, 0.25, 0.375, 0.5)
+    // runV2's γ spacing (1e4), but replicates spaced by 1 where runV2
+    // spaces them by 1e8: the stored bands were recorded with these seeds
     val grid = for {
       (g, gi) <- (0 to 10).map(_ / 10.0).zipWithIndex
       s <- 1 to 100
-    } yield (s, g, 1234L + 10000L * gi + s) // seed law of MonteCarlo.runV2
+    } yield (s, g, 1234L + 10000L * gi + s)
     val sims = grid.par.flatMap { case (s, g, seed) =>
       LocalSim.runSimV2(s, g, seed, n = 100000, nA = 1000, nB = 50000, sds)
     }.seq
