@@ -3,17 +3,19 @@ package graft.estimators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.core.{ColumnResolver, FormulaSpec, Fusion, SurveyDesign}
-import graft.stats.{Calibration, Gram, GramResult, GramSpec, Logistic, Ols, WeightedStats}
+import graft.core.SurveyDesign
+import graft.stats.{Gram, GramResult, GramSpec, WeightedStats}
 import graft.util.Tables.dsum
 
 /** PC pseudo-calibration estimator (Golini & Righi 2024), re-expressing
   * `PC.R:47-358` Spark-first.
   *
-  * Pipeline: fuse A/B → default/explicit weights → population totals of
-  * the aux vars (direct sum in one-table mode, Horvitz–Thompson from the
-  * A design in two-table mode, `PC.R:181-199`) → GREG-calibrate the
-  * B-row design on the aux vars (`PC.R:216-237`) → scenario:
+  * Pipeline: the [[Greg]] entry (fusion, indicators, sizes and N in one
+  * pass, default/explicit weights) → population totals of the aux vars
+  * (direct sum in one-table mode, Horvitz–Thompson from the A design in
+  * two-table mode, `PC.R:181-199`) → GREG-calibrate the B-row design on
+  * the aux vars (`PC.R:216-237`) → scenario. What is PC's own here: the
+  * totals, the scenario dispatch and the scenario-2/3 combinations:
   *   1 — `svymean(~y_B, calibrated_B)` (`PC.R:240-253`)
   *   2 — outcome model fit on A∩B via the dynamic `_A`/`_B` formula
   *       resolver, predict on A and B, combine
@@ -47,10 +49,7 @@ final case class PCConfig(
     outcomeModel: Option[String] = None,
     modelType: String = "normal",
     scenario: Int = 1,
-    evalModelPerformance: Boolean = false,
-    /** Broadcast the A side into the fusion join; false = sort-merge
-      * (see RegDIConfig.broadcastA). */
-    broadcastA: Boolean = true
+    evalModelPerformance: Boolean = false
 )
 
 object PC {
@@ -63,52 +62,31 @@ object PC {
       idVarB: String,
       cfg: PCConfig
   ): PCResult = {
-    val fusion = Fusion.fuse(dataA, dataB, idVarA, idVarB,
-      broadcastA = cfg.broadcastA)
     val yARaw = cfg.yACol.getOrElse(cfg.yBCol.getOrElse(
       throw new IllegalArgumentException("y_A_col or y_B_col required")))
     val yBRaw = cfg.yBCol.getOrElse(yARaw)
     // each y column must come from its OWN side: a defaulted y_A_col
-    // that only exists in dataB resolves to the bare B column after
-    // fusion, making ind_var_A ≡ ind_var_B — HT totals over the wrong
-    // row set with no error (r14 review). Same scenario-3 frame note
-    // as RegDI.twoSample: Σŷ sums over this fused frame (PC.R
-    // semantics); use oneTable with a population frame for the
-    // population-denominator estimator.
-    require(dataA.columns.contains(yARaw),
-      s"y_A_col (resolved '$yARaw') is not a column of dataA — pass " +
-        "yACol explicitly")
-    require(dataB.columns.contains(yBRaw),
-      s"y_B_col (resolved '$yBRaw') is not a column of dataB")
-    // aux vars are consumed on BOTH sides (A-side HT totals feed the
-    // population targets, B-side values feed the calibration design) —
-    // a var missing from either side would silently resolve to the
-    // other side's bare column after fusion, leaving the totals or the
-    // Gram partial with no error naming the cause (r15 review). Same
-    // own-side contract for the weight columns.
-    cfg.auxVars.foreach { v =>
-      require(dataA.columns.contains(v),
-        s"aux var '$v' is not a column of dataA — PC aux variables " +
-          "must be observed in both samples")
-      require(dataB.columns.contains(v),
-        s"aux var '$v' is not a column of dataB — PC aux variables " +
-          "must be observed in both samples")
-    }
-    cfg.weightsA.foreach(w => require(dataA.columns.contains(w),
-      s"weightsA '$w' is not a column of dataA"))
-    cfg.weightsB.foreach(w => require(dataB.columns.contains(w),
-      s"weightsB '$w' is not a column of dataB"))
-    val yA = fusion.fromA.getOrElse(yARaw, yARaw)
-    val yB = fusion.fromB.getOrElse(yBRaw, yBRaw)
-    val auxA = cfg.auxVars.map(v => fusion.fromA.getOrElse(v, v))
-    val auxB = cfg.auxVars.map(v => fusion.fromB.getOrElse(v, v))
-    val df = fusion.df
-      .withColumn("ind_var_A", col(yA).isNotNull.cast("int"))
-      .withColumn("ind_var_B", col(yB).isNotNull.cast("int"))
-    run(df, "ind_var_A", "ind_var_B", Some(yA), Some(yB), auxA, auxB,
-      cfg.weightsA.map(w => fusion.fromA.getOrElse(w, w)),
-      cfg.weightsB.map(w => fusion.fromB.getOrElse(w, w)),
-      cfg, popIsData = false)
+    // that only exists in dataB would make ind_var_A ≡ ind_var_B — HT
+    // totals over the wrong row set with no error (r14 review). Aux vars
+    // are consumed on BOTH sides (A-side HT totals feed the population
+    // targets, B-side values feed the calibration design), so each must
+    // be in both (r15 review). Same scenario-3 frame note as
+    // RegDI.twoSample: Σŷ sums over this fused frame (PC.R semantics);
+    // use oneTable with a population frame for the population-
+    // denominator estimator.
+    def aux(side: String) = cfg.auxVars.map(v => v -> (s"aux var '$v' is not " +
+      s"a column of data$side — PC aux variables must be observed in both samples"))
+    val f = Greg.fuse(dataA, dataB, idVarA, idVarB, yARaw, yBRaw,
+      ownA = ((yARaw -> (s"y_A_col (resolved '$yARaw') is not a column of " +
+        "dataA — pass yACol explicitly")) +: aux("A")) ++
+        cfg.weightsA.map(w => w -> s"weightsA '$w' is not a column of dataA"),
+      ownB = ((yBRaw -> s"y_B_col (resolved '$yBRaw') is not a column of dataB") +:
+        aux("B")) ++
+        cfg.weightsB.map(w => w -> s"weightsB '$w' is not a column of dataB"))
+    run(f.df, Greg.IndA, Greg.IndB, Some(f.resolveA(yARaw)),
+      Some(f.resolveB(yBRaw)), cfg.auxVars.map(f.resolveA),
+      cfg.auxVars.map(f.resolveB), cfg.weightsA.map(f.resolveA),
+      cfg.weightsB.map(f.resolveB), cfg, popIsData = false)
   }
 
   /** One-table API: `data` is the fused frame (or the full population),
@@ -139,151 +117,91 @@ object PC {
 
     // scenario prerequisites, checked before any job runs (PC.R:69-85
     // stop() contracts — same messages, failure just surfaces earlier)
-    val model: Option[String] = cfg.scenario match {
-      case 1 =>
-        if (yBOpt.isEmpty)
-          throw new IllegalArgumentException("Scenario 1 requires y_B_col")
-        None
-      case 2 =>
+    def need(y: Option[String], what: String): Unit =
+      if (y.isEmpty)
+        throw new IllegalArgumentException(s"Scenario ${cfg.scenario} requires $what")
+    val outcome: Option[Greg.Outcome] = cfg.scenario match {
+      case 1 => need(yBOpt, "y_B_col"); None
+      case s @ (2 | 3) =>
         val m = cfg.outcomeModel.getOrElse(throw new IllegalArgumentException(
-          "Scenario 2 requires 'outcomeModel'"))
-        if (yAOpt.isEmpty)
-          throw new IllegalArgumentException("Scenario 2 requires y_A_col")
-        Some(m)
-      case 3 =>
-        val m = cfg.outcomeModel.getOrElse(throw new IllegalArgumentException(
-          "Scenario 3 requires 'outcomeModel'"))
-        if (yAOpt.isEmpty)
-          throw new IllegalArgumentException("Scenario 3 requires y_A_col")
-        if (yBOpt.isEmpty)
-          throw new IllegalArgumentException("Scenario 3 requires y_B_col")
-        Some(m)
+          s"Scenario $s requires 'outcomeModel'"))
+        need(yAOpt, "y_A_col")
+        if (s == 3) need(yBOpt, "y_B_col")
+        Some(Greg.outcome(m, cfg.modelType, data0))
       case s => throw new IllegalArgumentException(s"scenario $s not in 1-3")
     }
+    // scenario 2 fits on A∩B, scenario 3 on A
+    val fitMask = if (cfg.scenario == 2) isA && isB else isA
 
-    // sizes + N_total + A∩B count + pop totals in ONE aggregate job
-    // (PC.R:134-199). The HT totals Σ_A w·z fold in when explicit
-    // A-weights exist (same addend multiset as svytotal over the
-    // A-filtered design ⇒ bit-identical); without them d_i_A = N/n_A
-    // needs n_A from this very job, so totals stay a second pass.
+    // the first pass also counts A∩B and, when it can, sums the
+    // population totals (PC.R:134-199): directly over the population in
+    // one-table mode; as the HT totals Σ_A w·z when explicit A-weights
+    // exist (same addend multiset as svytotal over the A-filtered design
+    // ⇒ bit-identical). Without them d_i_A = N/n_A needs n_A from this
+    // very pass, so the totals stay a second pass.
     val htFold = !popIsData && weightsA.nonEmpty && auxB.nonEmpty
-    val base = Seq(
-      coalesce(dsum(when(isA, lit(1.0))), lit(0.0)).as("nA"),
-      coalesce(dsum(when(isB, lit(1.0))), lit(0.0)).as("nB"),
-      count(lit(1)).cast("double").as("nrows"),
-      coalesce(weightsA.map(w => dsum(when(isA, col(w))))
-        .getOrElse(lit(0.0)), lit(0.0)).as("sWA"),
-      count(when(isA && isB, lit(1))).as("nAB"))
     val totAggs =
       if (popIsData) auxA.map(z => dsum(col(z)).as(s"t_$z"))
       else if (htFold)
         auxA.map(z => dsum(when(isA, col(weightsA.get) * col(z))).as(s"t_$z"))
       else Nil
-    val szRow = data0.agg(base.head, (base.tail ++ totAggs): _*).head()
-    val sizeA = szRow.getDouble(0)
-    val sizeB = szRow.getDouble(1)
-    require(sizeA > 0, "No units in sample A")
-    require(sizeB > 0, "No units in sample B")
-    val nAB = szRow.getLong(4)
-    val nTotal: Double = cfg.nTotal.getOrElse {
-      if (popIsData) szRow.getDouble(2)
-      else {
-        require(weightsA.nonEmpty,
-          "To approximate N_total, provide weights for sample A")
-        szRow.getDouble(3)
-      }
-    }
+    val (_, sizes) = Greg.firstPass(data0, isA, isB, weightsA, cfg.nTotal,
+      popIsData, Nil, count(when(isA && isB, lit(1))).as("nAB") +: totAggs)
     if (cfg.scenario == 2)
-      require(nAB > 0, "No units in S_A ∩ S_B to fit the model")
+      require(sizes("nAB") > 0, "No units in S_A ∩ S_B to fit the model")
 
-    // d_i_A / d_i_B defaulting (PC.R:149-171)
-    val dACol: Column = weightsA match {
-      case Some(w) => when(isA, col(w)).otherwise(lit(0.0))
-      case None    => when(isA, lit(nTotal / sizeA)).otherwise(lit(0.0))
-    }
-    val dB0: Column = weightsB match {
-      case Some(w) => when(isB, col(w)).otherwise(lit(0.0))
-      case None    => when(isB, lit(nTotal / sizeB)).otherwise(lit(0.0))
-    }
     val pre = data0
-      .withColumn("d_i_A", dACol)
-      .withColumn("d_b_pre", dB0)
+      .withColumn("d_i_A", sizes.dA(weightsA))
+      .withColumn("d_b_pre", sizes.dB(weightsB))
       .cache()
 
     try {
       // population totals of aux vars (PC.R:181-199)
       val popTotals: Seq[Double] =
         if (auxB.isEmpty) Nil
-        else if (popIsData || htFold) auxA.indices.map(i => szRow.getDouble(5 + i))
+        else if (popIsData || htFold) auxA.map(z => sizes(s"t_$z"))
         else {
-          val designA = SurveyDesign(pre.filter(isA), "d_i_A")
-          val t = WeightedStats.svytotal(designA, auxA)
+          val t = WeightedStats.svytotal(SurveyDesign(pre.filter(isA), "d_i_A"), auxA)
           auxA.map(t)
         }
 
       // ONE fused pass (Gram.momentsMulti) for every remaining Gram:
       //  - "cal": the B-design calibration Gram (PC.R:216-237), carrying
       //    y_B moments in scenario 1 so the calibrated-mean β reuses it
-      //  - "ols": the outcome-model Gram (scenario 2 on A∩B, 3 on A)
-      // Each spec is mask-restricted; exact-decimal sums make the fused
-      // results bit-identical to the per-filter jobs they replace.
-      val specBuf = Seq.newBuilder[(String, GramSpec)]
-      if (auxB.nonEmpty)
-        specBuf += "cal" -> GramSpec(auxB.map(col), col("d_b_pre"),
-          if (cfg.scenario == 1) Some(col(yBOpt.get)) else None, Some(isB))
-      val olsSpec: Option[FormulaSpec] = model.flatMap { m =>
-        if (cfg.modelType == "normal")
-          Some(ColumnResolver.resolve(FormulaSpec.parse(m), pre))
-        else if (cfg.modelType == "logistic") None
-        else throw new IllegalArgumentException(
-          s"model_type '${cfg.modelType}' unsupported")
-      }
-      val olsMask = if (cfg.scenario == 2) isA && isB else isA
-      olsSpec.foreach { sp =>
-        val resp = sp.response.getOrElse(
-          throw new IllegalArgumentException("OLS needs a response"))
-        // a model FIT (lm, PC.R:272) — complete-case like Ols.fit (r15)
-        specBuf += "ols" -> GramSpec(Ols.designCols(sp),
-          y = Some(col(resp)), mask = Some(olsMask), completeCase = true)
-      }
-      val specs = specBuf.result()
+      //  - "ols": the normal outcome model's Gram (PC.R:272)
+      val specs =
+        (if (auxB.isEmpty) Nil
+         else Seq("cal" -> GramSpec(auxB.map(col), col("d_b_pre"),
+           if (cfg.scenario == 1) Some(col(yBOpt.get)) else None, Some(isB)))) ++
+        outcome.toSeq.flatMap(_.gram(fitMask))
       val grams: Map[String, GramResult] =
         if (specs.nonEmpty) Gram.momentsMulti(pre, specs)._1 else Map.empty
 
       // closed-form calibrated B-weights re-applied over the FULL frame
-      val dBCal: Column = grams.get("cal") match {
-        case Some(g) =>
-          val info = Calibration.solveLambda(g, auxB, popTotals)
-          when(isB, col("d_b_pre") * Calibration.gWeightFactor(info))
-            .otherwise(lit(0.0))
+      val data = pre.withColumn("d_i_B", grams.get("cal") match {
+        case Some(g) => Greg.designWeight(isB,
+          Greg.calibrated(col("d_b_pre"), g, auxB, popTotals))
         case None => col("d_b_pre")
-      }
-      val data = pre.withColumn("d_i_B", dBCal)
+      })
       def bWeights: Option[DataFrame] = {
         val keep = (if (data.columns.contains("id")) Seq("id") else Nil) :+ "d_i_B"
         Some(data.filter(isB).select(keep.map(col): _*))
       }
-      def predictCol(mask: Column): Column = olsSpec match {
-        case Some(sp) => Ols.fitFromGram(sp, grams("ols")).predict
-        case None => // logistic: iterative IRLS, cannot fuse into one pass
-          val sp = ColumnResolver.resolve(FormulaSpec.parse(model.get), data)
-          Logistic.fit(data.filter(mask), sp).predict
-      }
+      def predict: Column = outcome.get.predict(grams, data, fitMask)
 
       cfg.scenario match {
         case 1 =>
-          val yB = yBOpt.get
-          val bRows = data.filter(isB)
           val m = grams.get("cal") match {
             case Some(g) =>
-              WeightedStats.svymeanCalibrated(bRows, yB, "d_i_B", auxB, g)
-            case None => WeightedStats.svymean(SurveyDesign(bRows, "d_i_B"), yB)
+              Greg.calibratedMean(data, isB, yBOpt.get, col("d_i_B"), auxB, g)
+            case None =>
+              WeightedStats.svymean(SurveyDesign(data.filter(isB), "d_i_B"), yBOpt.get)
           }
           PCResult(m.mean, se = Some(m.se), weightsB = bWeights)
 
         case 2 =>
           val yA = yAOpt.get
-          val predict = predictCol(isA && isB)
+          val p = predict
           // (Σ d_B·ŷ_B + Σ d_A·(y_A − ŷ_A)) / N in one whole-frame agg.
           // NULL predictions (a covariate resolved to one side) are
           // SKIPPED by the null-skipping dsum — deliberately: the
@@ -292,33 +210,23 @@ object PC {
           // The twoSample aux requires above keep the CALIBRATION side
           // loud; the outcome-model formula keeps reference semantics.
           val r = data.agg(
-            dsum(col("d_i_B") * predict).as("t1"),
-            dsum(when(isA, col("d_i_A") * (col(yA) - predict))).as("t2")).head()
-          PCResult((r.getDouble(0) + r.getDouble(1)) / nTotal, weightsB = bWeights)
+            dsum(col("d_i_B") * p).as("t1"),
+            dsum(when(isA, col("d_i_A") * (col(yA) - p))).as("t2")).head()
+          PCResult((r.getDouble(0) + r.getDouble(1)) / sizes.nTotal,
+            weightsB = bWeights)
 
         case 3 =>
-          val yA = yAOpt.get
-          val yB = yBOpt.get
-          val predict = predictCol(isA)
-          val scored = data.withColumn("hat_y_i", predict)
-          val sums = scored.agg(
-            dsum(col("hat_y_i")).as("s_pred"),
-            dsum(col("d_i_B") *
-              (when(isB, col(yB)).otherwise(lit(0.0)) - col("hat_y_i"))).as("t1"),
-            dsum(when(isA,
-              (col(yA) - col("hat_y_i")) * (col(yA) - col("hat_y_i")))).as("ssr"),
-            dsum(when(isA, col(yA))).as("s_yA")).head()
-          val est = (sums.getDouble(1) + sums.getDouble(0)) / nTotal
-          if (!cfg.evalModelPerformance) PCResult(est, weightsB = bWeights)
-          else {
-            val ssr = sums.getDouble(2)
-            val meanYA = sums.getDouble(3) / sizeA
-            val sst = scored.filter(isA)
-              .agg(dsum((col(yA) - lit(meanYA)) * (col(yA) - lit(meanYA))))
-              .head().getDouble(0)
-            PCResult(est, rmse = Some(math.sqrt(ssr / sizeA)),
-              r2 = Some(1.0 - ssr / sst), weightsB = bWeights)
-          }
+          // DR1 (Σ d_B·(y_B − ŷ) + Σ_U ŷ) / N (PC.R:299-354)
+          val hat = col("hat_y_i")
+          val (sums, fit) = Greg.score(data.withColumn("hat_y_i", predict),
+            isA, yAOpt.get, hat, Seq(
+              dsum(hat).as("s_pred"),
+              dsum(col("d_i_B") *
+                (when(isB, col(yBOpt.get)).otherwise(lit(0.0)) - hat)).as("t1")),
+            sizes.nA, cfg.evalModelPerformance)
+          PCResult(
+            (sums.getAs[Double]("t1") + sums.getAs[Double]("s_pred")) / sizes.nTotal,
+            rmse = fit.map(_.rmse), r2 = fit.map(_.r2), weightsB = bWeights)
       }
     } finally pre.unpersist()
   }

@@ -3,18 +3,20 @@ package graft.estimators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.core.{ColumnResolver, FormulaSpec, Fusion, SurveyDesign}
-import graft.stats.{Calibration, Gram, GramResult, GramSpec, Logistic, Ols, WeightedStats}
+import graft.core.FormulaSpec
+import graft.stats.{Gram, GramResult, GramSpec, Ols}
 import graft.util.Tables.{dsum, dvarSamp}
 
 /** RegDI calibration estimator (Kim & Tam 2021), re-expressing
   * `RegDI2.R:5-333` Spark-first.
   *
-  * Pipeline (one lazy plan + a handful of tiny-aggregate actions):
-  *   fuse A/B (broadcast-A full-outer join) → indicator + delta feature
-  *   columns → one multi-column totals agg → GREG calibration on the
-  *   A-rows (Gram agg + k×k driver solve, k = 3 + #aux) → weighted mean
-  *   with linearization variance. Corrections:
+  * Pipeline (one lazy plan + a handful of tiny-aggregate actions): the
+  * [[Greg]] entry (fusion, indicators, sizes and N in one pass) → delta
+  * feature columns, whose totals ride that pass → GREG calibration of the
+  * A design (Gram agg + k×k driver solve, k = 3 + #aux) → weighted mean
+  * with linearization variance. What is RegDI's own here: the delta
+  * features, the correction dispatch and correction 2's inversion.
+  * Corrections:
   *     0/1 — calibrated `svymean(~y_A)` (`RegDI2.R:244-248,320-325`)
   *     2   — measurement-error: OLS y_A ~ y_B on A∩B, invert, rebuild
   *           `delta_yi_corrected` totals, re-calibrate (`RegDI2.R:250-307`)
@@ -22,8 +24,8 @@ import graft.util.Tables.{dsum, dvarSamp}
   *           (`RegDI2.R:196-241,309-313`)
   *
   * Scale: no data rows ever reach the driver. Per-correction cost is
-  * O(#rows) scan work with O(k²) aggregate state; the only shuffle is the
-  * fusion join (avoided when A broadcasts).
+  * O(#rows) scan work with O(k²) aggregate state; the fusion join
+  * broadcasts A, so B is never shuffled.
   */
 final case class RegDIResult(
     mean: Double, variance: Double,
@@ -40,12 +42,7 @@ final case class RegDIConfig(
     outcomeModel: Option[String] = None,
     modelType: String = "normal",
     correction: Int = 0,
-    evalModelPerformance: Boolean = false,
-    /** Broadcast the (typically survey-sized) A side into the fusion
-      * join. Set false when dataA exceeds broadcast capacity — the
-      * sort-merge escape hatch Fusion.fuse always had but the public
-      * estimator API did not expose (r14 review). */
-    broadcastA: Boolean = true
+    evalModelPerformance: Boolean = false
 )
 
 object RegDI {
@@ -58,54 +55,35 @@ object RegDI {
       idVarB: String,
       cfg: RegDIConfig
   ): RegDIResult = {
-    // the y columns must come from their OWN side: a y_A_col absent
-    // from dataA would resolve to the bare B column after fusion and
-    // ind_var_A would mark the B rows (r14 review). NOTE the
+    // y, aux and weights must come from their OWN side (r14/r15 review):
+    // an aux var missing from B would leave delta_* NULL on every B-only
+    // row, the calibration Gram partial, wrong or singular. NOTE the
     // correction-3 contract (mirroring RegDI2.R:218 verbatim): the DR
     // prediction term sums Y_pred over THIS fused A∪B frame — for the
     // textbook population-frame DR estimator, use oneTable with a
     // population-coverage frame (the golden-run configuration).
-    require(dataA.columns.contains(cfg.yACol),
-      s"y_A_col '${cfg.yACol}' is not a column of dataA")
-    require(dataB.columns.contains(cfg.yBCol),
-      s"y_B_col '${cfg.yBCol}' is not a column of dataB")
-    // same own-side contract for aux and weights (r15 review): an aux
-    // var missing from B would silently resolve to the bare A column
-    // after fusion — delta_* NULL on every B-only row, the calibration
-    // Gram partial, wrong or singular with no error naming the cause
-    cfg.auxVars.foreach(v => require(dataB.columns.contains(v),
-      s"aux var '$v' is not a column of dataB — RegDI aux variables " +
-        "are the B-side (big data) covariates"))
-    cfg.weightsA.foreach(w => require(dataA.columns.contains(w),
-      s"weightsA '$w' is not a column of dataA"))
-    val fusion = Fusion.fuse(dataA, dataB, idVarA, idVarB,
-      broadcastA = cfg.broadcastA)
+    val f = Greg.fuse(dataA, dataB, idVarA, idVarB, cfg.yACol, cfg.yBCol,
+      ownA = (cfg.yACol -> s"y_A_col '${cfg.yACol}' is not a column of dataA") +:
+        cfg.weightsA.toSeq.map(w => w -> s"weightsA '$w' is not a column of dataA"),
+      ownB = (cfg.yBCol -> s"y_B_col '${cfg.yBCol}' is not a column of dataB") +:
+        cfg.auxVars.map(v => v -> (s"aux var '$v' is not a column of dataB — " +
+          "RegDI aux variables are the B-side (big data) covariates")))
     // side-aware resolution (fixes the reference's cell-10 rename bug)
-    val yA = fusion.fromA.getOrElse(cfg.yACol, cfg.yACol)
-    val yB = fusion.fromB.getOrElse(cfg.yBCol, cfg.yBCol)
-    val aux = cfg.auxVars.map(v => fusion.fromB.getOrElse(v, v))
-    val df = fusion.df
-      .withColumn("ind_var_A", col(yA).isNotNull.cast("int"))
-      .withColumn("ind_var_B", col(yB).isNotNull.cast("int"))
-    run(df, "ind_var_A", "ind_var_B", yA, yB, aux,
-      cfg.weightsA.map(w => fusion.fromA.getOrElse(w, w)), cfg,
-      nTotalDirect = None)
+    run(f.df, Greg.IndA, Greg.IndB, f.resolveA(cfg.yACol), f.resolveB(cfg.yBCol),
+      cfg.auxVars.map(f.resolveB), cfg.weightsA.map(f.resolveA), cfg,
+      popIsData = false)
   }
 
-  /** One-table API (`RegDI2.R` with `data` + indicator columns). */
+  /** One-table API (`RegDI2.R` with `data` + indicator columns); without
+    * `nTotal`, N is the frame's row count. */
   def oneTable(
       data: DataFrame,
       indVarA: String,
       indVarB: String,
       cfg: RegDIConfig
   ): RegDIResult =
-    // the frame count is only the nTotal FALLBACK (cfg.nTotal wins via
-    // orElse) — counting unconditionally was a full extra scan whose
-    // result was discarded whenever the caller supplied N
     run(data, indVarA, indVarB, cfg.yACol, cfg.yBCol, cfg.auxVars,
-      cfg.weightsA, cfg,
-      nTotalDirect =
-        if (cfg.nTotal.isDefined) None else Some(data.count().toDouble))
+      cfg.weightsA, cfg, popIsData = true)
 
   // ------------------------------------------------------------------
 
@@ -116,7 +94,7 @@ object RegDI {
       aux: Seq[String],
       weightsA: Option[String],
       cfg: RegDIConfig,
-      nTotalDirect: Option[Double]
+      popIsData: Boolean
   ): RegDIResult = {
     val isA = col(indA) === 1
     val isB = col(indB) === 1
@@ -124,16 +102,11 @@ object RegDI {
     if (cfg.correction < 0 || cfg.correction > 3)
       throw new IllegalArgumentException(s"correction ${cfg.correction} not in 0-3")
     // correction-3 prerequisites fail fast, before any job (RegDI2.R:26-42)
-    val outcomeSpec: Option[FormulaSpec] =
+    val outcome: Option[Greg.Outcome] =
       if (cfg.correction != 3) None
-      else {
-        val m = cfg.outcomeModel.getOrElse(throw new IllegalArgumentException(
-          "Correction 3 requires 'outcomeModel'"))
-        if (cfg.modelType != "normal" && cfg.modelType != "logistic")
-          throw new IllegalArgumentException(
-            s"model_type '${cfg.modelType}' unsupported")
-        Some(ColumnResolver.resolve(FormulaSpec.parse(m), data0))
-      }
+      else Some(Greg.outcome(cfg.outcomeModel.getOrElse(
+        throw new IllegalArgumentException("Correction 3 requires 'outcomeModel'")),
+        cfg.modelType, data0))
 
     // delta feature columns (RegDI2.R:126-141) as expressions — usable
     // both over data0 (first fused pass) and as materialized columns
@@ -143,70 +116,30 @@ object RegDI {
     val calExprs: Seq[Column] =
       lit(1.0) +: deltaIExpr +: deltaYiExpr +: deltaAuxExpr.map(_._2)
 
-    // FIRST fused pass over data0 (RegDI2.R:91-103,144-168):
-    // sizes + N_total + calibration totals in one job — the delta totals
-    // don't involve d_i_A, so they never needed the derived frame. When
-    // explicit A-weights exist, d_i_A = w is a static expression and the
-    // szRow-independent Grams fuse in here too:
-    //  - "cal": the A-design calibration Gram (corrections 0/1/3), with
-    //    y_A moments attached so the calibrated-mean β reuses it (0/1)
-    //  - "me": the measurement-error OLS y_A ~ y_B on A∩B (correction 2)
+    // the first pass (RegDI2.R:91-103,144-168) carries the calibration
+    // totals — the delta totals don't involve d_i_A — and the Grams that
+    // do not need n_A:
+    //  - "cal": the A-design calibration Gram (corrections 0/1/3) when
+    //    d_i_A = w is static, with y_A moments attached so the calibrated
+    //    mean's β reuses it (0/1)
+    //  - "me": the measurement-error OLS y_A ~ y_B on A∩B (correction 2),
+    //    a model FIT (lm), so complete-case
     //  - "ols": the outcome-model Gram on A (correction 3, normal)
-    // Exact-decimal sums make every mask-fused result bit-identical to
-    // the standalone filtered job it replaces.
-    // (coalesce: an empty sample sums to NULL, which must surface as the
-    // "No units" contract below, not a null-value read)
-    val szAggs = Seq(
-      coalesce(dsum(when(isA, lit(1.0))), lit(0.0)).as("nA"),
-      coalesce(dsum(when(isB, lit(1.0))), lit(0.0)).as("nB"),
-      coalesce(weightsA.map(w => dsum(when(isA, col(w))))
-        .getOrElse(lit(0.0)), lit(0.0)).as("sumWA"))
     val totAggs = dsum(deltaIExpr).as("t_di") +: dsum(deltaYiExpr).as("t_dyi") +:
       deltaAuxExpr.map { case (z, e) => dsum(e).as(s"t_d$z") }
-
-    val dAStatic = weightsA.isDefined
-    val dAExprStatic: Column =
-      weightsA.map(w => when(isA, col(w)).otherwise(lit(0.0))).getOrElse(lit(0.0))
-    val firstSpecs = Seq.newBuilder[(String, GramSpec)]
-    // "cal" is the only spec weighted by d_i_A, so only it needs the
-    // static-weights condition; "me"/"ols" are unweighted and always fuse
-    if (dAStatic && cfg.correction != 2)
-      firstSpecs += "cal" -> GramSpec(calExprs, dAExprStatic,
-        if (cfg.correction <= 1) Some(col(yA)) else None, Some(isA))
-    // the me/ols specs are model FITS (lm in RegDI2.R:209) —
-    // complete-case like Ols.fit, not per-term na.rm (r15)
-    if (cfg.correction == 2)
-      firstSpecs += "me" -> GramSpec(Seq(lit(1.0), col(yB)),
-        y = Some(col(yA)), mask = Some(isA && isB), completeCase = true)
-    if (cfg.correction == 3 && cfg.modelType == "normal")
-      outcomeSpec.foreach { sp =>
-        firstSpecs += "ols" -> GramSpec(Ols.designCols(sp),
-          y = Some(col(sp.response.getOrElse(throw new IllegalArgumentException(
-            "OLS needs a response")))), mask = Some(isA),
-          completeCase = true)
-      }
-    val (grams0, szRow) =
-      Gram.momentsMulti(data0, firstSpecs.result(), szAggs ++ totAggs)
-    val sizeA = szRow.getAs[Double]("nA")
-    val sizeB = szRow.getAs[Double]("nB")
-    require(sizeA > 0, "No units in sample A")
-    require(sizeB > 0, "No units in sample B")
-    val nTotal: Double = cfg.nTotal
-      .orElse(nTotalDirect)
-      .getOrElse {
-        require(weightsA.nonEmpty,
-          "To approximate N_total, provide weights for sample A")
-        szRow.getAs[Double]("sumWA")
-      }
-
-    // d_i_A (RegDI2.R:106-116): given weights on A-rows, else N/n_A
-    val dA: Column = weightsA match {
-      case Some(w) => when(isA, col(w)).otherwise(lit(0.0))
-      case None    => when(isA, lit(nTotal / sizeA)).otherwise(lit(0.0))
-    }
+    val firstSpecs =
+      (if (cfg.correction == 2)
+         Seq("me" -> GramSpec(Seq(lit(1.0), col(yB)), y = Some(col(yA)),
+           mask = Some(isA && isB), completeCase = true))
+       else weightsA.toSeq.map(w => "cal" -> GramSpec(calExprs,
+         Greg.designWeight(isA, col(w)),
+         if (cfg.correction <= 1) Some(col(yA)) else None, Some(isA)))) ++
+      outcome.toSeq.flatMap(_.gram(isA))
+    val (grams0, sizes) = Greg.firstPass(data0, isA, isB, weightsA,
+      cfg.nTotal, popIsData, firstSpecs, totAggs)
 
     val data = data0
-      .withColumn("d_i_A", dA)
+      .withColumn("d_i_A", sizes.dA(weightsA))
       .withColumn("uno", lit(1.0))
       .withColumn("delta_i", deltaIExpr)
       .withColumn("delta_yi", deltaYiExpr)
@@ -217,12 +150,8 @@ object RegDI {
 
     try {
       val calCols = "uno" +: "delta_i" +: "delta_yi" +: aux.map(z => s"delta_$z")
-      def tot(name: String): Double = {
-        val i = szRow.fieldIndex(name)
-        if (szRow.isNullAt(i)) 0.0 else szRow.getDouble(i)
-      }
-      val totals = nTotal +: (("t_di" +: "t_dyi" +: aux.map(z => s"t_d$z"))
-        .map(tot))
+      val totals = sizes.nTotal +:
+        ("t_di" +: "t_dyi" +: aux.map(z => s"t_d$z")).map(sizes(_))
 
       // calibration Gram: fused above when d_i_A was static, else one
       // masked pass over the derived frame now
@@ -235,19 +164,16 @@ object RegDI {
         case 0 | 1 =>
           // GREG calibration of the A-row design (RegDI2.R:181-193)
           val g = calGram(withY = true)
-          val info = Calibration.solveLambda(g, calCols, totals)
-          val calDf = data.filter(isA).withColumn("w_cal",
-            col("d_i_A") * Calibration.gWeightFactor(info))
-          val m = WeightedStats.svymeanCalibrated(calDf, yA, "w_cal", calCols, g)
+          val m = Greg.calibratedMean(data, isA, yA,
+            Greg.calibrated(col("d_i_A"), g, calCols, totals), calCols, g)
           RegDIResult(m.mean, m.variance)
 
         case 2 =>
-          measurementError(data, grams0.get("me"), isA, isB, yA, yB, aux,
-            nTotal, totals)
+          measurementError(data, grams0("me"), isA, isB, yA, yB, aux, totals)
 
         case _ =>
-          doublyRobust(data, grams0.get("ols"), calGram(withY = false),
-            outcomeSpec.get, isA, yA, calCols, totals, nTotal, sizeA, cfg)
+          doublyRobust(data, grams0, calGram(withY = false), outcome.get,
+            isA, yA, calCols, totals, sizes, cfg.evalModelPerformance)
       }
     } finally data.unpersist()
   }
@@ -259,18 +185,13 @@ object RegDI {
     * for the calibrated mean's β) share the second. */
   private def measurementError(
       data: DataFrame,
-      meGram: Option[GramResult],
+      meGram: GramResult,
       isA: Column, isB: Column,
       yA: String, yB: String,
       aux: Seq[String],
-      nTotal: Double,
       totals: Seq[Double]
   ): RegDIResult = {
-    val meSpec = FormulaSpec(Some(yA), Seq(yB), intercept = true)
-    val fit = meGram match {
-      case Some(g) => Ols.fitFromGram(meSpec, g)
-      case None    => Ols.fit(data.filter(isA && isB), meSpec)
-    }
+    val fit = Ols.fitFromGram(FormulaSpec(Some(yA), Seq(yB), intercept = true), meGram)
     // Guard BEFORE touching the coefficients: a degenerate overlap makes
     // the Cramer solve emit NaN betas, and the clean contract message must
     // surface ahead of any NaN-poisoned arithmetic.
@@ -299,68 +220,46 @@ object RegDI {
       Seq("cal" -> GramSpec(calCols.map(col), col("d_i_A"),
         Some(col("y_corrected")), Some(isA))),
       Seq(dsum(col("delta_yi_corrected")).as("t_corr")))
-    val tCorr = exRow.getAs[Double]("t_corr")
-    val totalsCorr = totals(0) +: totals(1) +: tCorr +: totals.drop(3)
-
+    val totalsCorr = totals(0) +: totals(1) +: exRow.getAs[Double]("t_corr") +:
+      totals.drop(3)
     val g = grams("cal")
-    val info = Calibration.solveLambda(g, calCols, totalsCorr)
-    val calDf = corrected.filter(isA).withColumn("w_cal",
-      col("d_i_A") * Calibration.gWeightFactor(info))
-    val m = WeightedStats.svymeanCalibrated(
-      calDf, "y_corrected", "w_cal", calCols, g)
+    val m = Greg.calibratedMean(corrected, isA, "y_corrected",
+      Greg.calibrated(col("d_i_A"), g, calCols, totalsCorr), calCols, g)
     RegDIResult(m.mean, m.variance)
   }
 
   /** Correction 3 (RegDI2.R:196-241): outcome model on A, predict all,
-    * DR combination (Σ w_cal·e + Σ ŷ)/N with its variance. The model Gram
-    * rode the first fused pass (normal model); the A-side and whole-frame
-    * score sums fuse into one pass here via isA-masking (bit-identical:
-    * masked rows contribute NULL, which the exact-decimal sums skip). */
+    * DR combination (Σ w_cal·e + Σ ŷ)/N with its variance. The normal
+    * model's Gram rode the first pass; the A-side and whole-frame score
+    * sums share one scoring pass via isA-masking (masked rows contribute
+    * NULL, which the exact-decimal sums skip). */
   private def doublyRobust(
       data: DataFrame,
-      olsGram: Option[GramResult],
+      grams0: Map[String, GramResult],
       calG: GramResult,
-      spec: FormulaSpec,
+      outcome: Greg.Outcome,
       isA: Column,
       yA: String,
       calCols: Seq[String],
       totals: Seq[Double],
-      nTotal: Double,
-      sizeA: Double,
-      cfg: RegDIConfig
+      sizes: Greg.Sizes,
+      evalModel: Boolean
   ): RegDIResult = {
-    val predict: Column = (cfg.modelType, olsGram) match {
-      case (_, Some(g))  => Ols.fitFromGram(spec, g).predict
-      case ("normal", _) => Ols.fit(data.filter(isA), spec).predict
-      case _             => Logistic.fit(data.filter(isA), spec).predict
-    }
-    val info = Calibration.solveLambda(calG, calCols, totals)
-    val wCal = col("d_i_A") * Calibration.gWeightFactor(info)
-
-    // w_cal and predict are pure column expressions, so the A-side sums
-    // need no pre-materialized calibrated frame — score in place.
-    val scored = data.withColumn("Y_pred", predict).withColumn("w_cal", wCal)
-    val wres = (col(yA) - col("Y_pred")) * col("w_cal")
-    def aMask(c: Column): Column = when(isA, c)
-    val sums = scored.agg(
-      dsum(aMask(wres)).as("s_wres"),
-      (dvarSamp(aMask(wres)) / lit(sizeA)).as("v_wres"),
-      dsum(aMask(col(yA))).as("s_yA"),
-      dsum(aMask((col(yA) - col("Y_pred")) * (col(yA) - col("Y_pred")))).as("ssr"),
+    // w_cal and ŷ are pure column expressions, so the A-side sums need
+    // no pre-materialized calibrated frame — score in place
+    val scored = data
+      .withColumn("Y_pred", outcome.predict(grams0, data, isA))
+      .withColumn("w_cal", Greg.calibrated(col("d_i_A"), calG, calCols, totals))
+    val wres = when(isA, (col(yA) - col("Y_pred")) * col("w_cal"))
+    val (sums, fit) = Greg.score(scored, isA, yA, col("Y_pred"), Seq(
+      dsum(wres).as("s_wres"),
+      (dvarSamp(wres) / lit(sizes.nA)).as("v_wres"),
       dsum(col("Y_pred")).as("s_pred"),
-      (dvarSamp(col("Y_pred")) / lit(nTotal)).as("v_pred")).head()
-
-    val mean = (sums.getDouble(0) + sums.getDouble(4)) / nTotal
-    val variance = sums.getDouble(1) + sums.getDouble(5)
-    if (!cfg.evalModelPerformance) RegDIResult(mean, variance)
-    else {
-      val ssr = sums.getDouble(3)
-      val meanYA = sums.getDouble(2) / sizeA
-      val sst = scored
-        .agg(dsum(aMask((col(yA) - lit(meanYA)) * (col(yA) - lit(meanYA)))))
-        .head().getDouble(0)
-      RegDIResult(mean, variance,
-        rmse = Some(math.sqrt(ssr / sizeA)), r2 = Some(1.0 - ssr / sst))
-    }
+      (dvarSamp(col("Y_pred")) / lit(sizes.nTotal)).as("v_pred")),
+      sizes.nA, evalModel)
+    RegDIResult(
+      (sums.getAs[Double]("s_wres") + sums.getAs[Double]("s_pred")) / sizes.nTotal,
+      sums.getAs[Double]("v_wres") + sums.getAs[Double]("v_pred"),
+      rmse = fit.map(_.rmse), r2 = fit.map(_.r2))
   }
 }

@@ -13,10 +13,11 @@ import graft.util.Tables.sqlDsum
   * calibration/OLS solves go through [[Det.solve]], whose SQL instance
   * renders the structurally identical Cramer expression the driver
   * evaluates in doubles. The oracle text below therefore mirrors the
-  * exact expression tree of `RegDI.run` / `PC.run` — any change to the
-  * fold orders there (e.g. the `1 + Σ xλ` calibration projection in
-  * `Calibration.calibrate`) must be mirrored here, which is why each
-  * fragment cites the Scala line it transliterates.
+  * exact expression tree of `RegDI.run` / `PC.run` and the `Greg` core
+  * they share — any change to the fold orders there (e.g. the `1 + Σ xλ`
+  * calibration projection in `Calibration.gWeightFactor`) must be
+  * mirrored here, which is why each fragment cites the Scala symbol it
+  * transliterates.
   *
   * Sample carve (must match `MiscQueries.abSamples`):
   *   A = customers with custkey%37==1, design weight 20+custkey%40
@@ -27,7 +28,7 @@ object EstimatorOracles {
   private val S = Det.SqlArith
 
   /** Fused A∪B frame (`Fusion.fuse` full-outer on cid) plus the RegDI
-    * delta columns (`RegDI.scala:120-127`). `yB` parameterizes the B-side
+    * delta columns (`RegDI.run`'s `deltaIExpr`/`deltaYiExpr`/`deltaAuxExpr`). `yB` parameterizes the B-side
     * response (m21 mismeasures it before fusing). */
   private def rowsCte(yB: String = "bal"): String =
     s"""fused AS (
@@ -56,7 +57,7 @@ object EstimatorOracles {
 
   /** Gram-moment CTE over weight `w` and columns `cs` (+ optional `y`),
     * mirroring `Gram.moments`'s `(w * xi) * xj` / `(w * xi) * y`
-    * association order (`Gram.scala:58-63`). */
+    * association order (`Gram.momentsMulti`). */
   private def gramCte(name: String, from: String, w: String,
                       cs: Seq[String], y: Option[String]): String = {
     val k = cs.size
@@ -80,8 +81,8 @@ object EstimatorOracles {
     Det.solve(gramRefs(tbl, k), rhs)(S).zip(names)
       .map { case (e, n) => s"$e AS $n" }.mkString(",\n    ")
 
-  /** `Calibration.calibrate`'s weight projection
-    * `d · (((1 + c0·λ0) + c1·λ1) + …)` (`Calibration.scala:44-47`). */
+  /** `Greg.calibrated`'s weight projection
+    * `d · (((1 + c0·λ0) + c1·λ1) + …)` (`Calibration.gWeightFactor`). */
   private def wCal(d: String, cs: Seq[String], ls: Seq[String]): String = {
     val xl = cs.zip(ls).foldLeft("1.0") { case (acc, (c, l)) =>
       S.add(acc, S.mul(c, l))
@@ -90,18 +91,18 @@ object EstimatorOracles {
   }
 
   /** `WeightedStats.svymeanCalibrated`'s residual fold
-    * `(((y − c0·b0) − c1·b1) − …)` (`WeightedStats.scala:51-53`). */
+    * `(((y − c0·b0) − c1·b1) − …)`. */
   private def resid(y: String, cs: Seq[String], bs: Seq[String]): String =
     cs.zip(bs).foldLeft(y) { case (acc, (c, b)) => S.sub(acc, S.mul(c, b)) }
 
   /** `meanWithScores`'s variance `n/(n−1) · (Σz² − (Σz)²/n)`
-    * (`WeightedStats.scala:80-81`). */
+    * (`WeightedStats.scoreVariance`). */
   private def varEst(szz: String, sz: String, n: String): String =
     S.mul(S.div(n, S.sub(n, "1.0")),
       S.sub(szz, S.div(S.mul(sz, sz), n)))
 
   /** `Tables.dvarSamp` as SQL over a named column: exact-decimal sums of c
-    * and c·c, then `(Σc² − Σc·Σc/n) / (n−1)` (`Tables.scala:48-51`). */
+    * and c·c, then `(Σc² − Σc·Σc/n) / (n−1)`. */
   private def dvar(c: String, n: String): String =
     S.div(S.sub(sqlDsum(s"(($c) * ($c))"),
       S.div(S.mul(sqlDsum(c), sqlDsum(c)), n)), S.sub(n, "1.0"))
@@ -110,14 +111,14 @@ object EstimatorOracles {
   private val lamN = Seq("l0", "l1", "l2", "l3")
   private val betaN = Seq("b0", "b1", "b2", "b3")
 
-  /** RegDI calibration rhs: totals − Σw·x (`Calibration.scala:43`), with
-    * totals = (N, Σδᵢ, Σδyᵢ, Σδx₁) (`RegDI.scala:133-139`). */
+  /** RegDI calibration rhs: totals − Σw·x (`Calibration.solveLambda`),
+    * with totals = (N, Σδᵢ, Σδyᵢ, Σδx₁) (`RegDI.run`'s `totals`). */
   private def regdiRhs(yiTot: String): IndexedSeq[String] = IndexedSeq(
     "(np.n_pop - g.xw_0)", "(tot.t_di - g.xw_1)",
     s"($yiTot - g.xw_2)", "(tot.t_dx1 - g.xw_3)")
 
   /** Shared m20/m21 tail: calibrated-design svymean with linearization
-    * variance over the A rows (`RegDI.scala:147-149` → `WeightedStats
+    * variance over the A rows (`Greg.calibratedMean` → `WeightedStats
     * .svymeanCalibrated`). `yCol`/`dyiCol` differ under correction 2.
     * Scores are UNNORMALIZED (s = w_cal·resid; the /Σw happens once
     * after aggregation — WeightedStats.scoreVariance's decimal-quantum

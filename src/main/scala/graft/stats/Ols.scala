@@ -86,11 +86,17 @@ object Ols {
     val sy = r.getDouble(1)
     val syy = r.getDouble(2)
     val n = r.getLong(3).toDouble
-    val sst = syy - sy * sy / n
+    fitMetrics(ssr, syy - sy * sy / n, n, yCol, "Ols.metrics")
+  }
+
+  /** RMSE = sqrt(SSR/n) and R² = 1 − SSR/SST; `fn` names the caller in
+    * the error for a constant response. */
+  def fitMetrics(ssr: Double, sst: Double, n: Double, yCol: String,
+                 fn: String): FitMetrics = {
     // constant y: SST = 0 makes R² = 1 − ssr/0 a silent −Inf/NaN that
     // poisons any fit comparison downstream (r15 review)
     require(sst != 0.0,
-      s"Ols.metrics: '$yCol' is constant — R² is undefined (SST = 0)")
+      s"$fn: '$yCol' is constant — R² is undefined (SST = 0)")
     FitMetrics(rmse = math.sqrt(ssr / n), r2 = 1.0 - ssr / sst)
   }
 }

@@ -75,4 +75,41 @@ class JobCountSuite extends SparkSpec {
     }
     assert(jobs <= 3, s"scenario 2 ran $jobs actions; fusion regressed")
   }
+
+  // without nTotal or weights: N is the frame's row count, which rides
+  // the first aggregate pass instead of a separate count action
+  private def regdiNoN(correction: Int) = RegDIConfig(yACol = "y", yBCol = "y",
+    auxVars = Seq("x1"), correction = correction,
+    outcomeModel = Some("y ~ x1"))
+  private def pcNoN(scenario: Int) = PCConfig(yACol = Some("y"),
+    yBCol = Some("y"), auxVars = Seq("x1"), scenario = scenario,
+    outcomeModel = Some("y ~ x1"))
+
+  test("RegDI correction 1 without nTotal runs in at most 4 actions") {
+    val jobs = countActions {
+      assert(!RegDI.oneTable(pop, "in_A", "in_B", regdiNoN(1)).mean.isNaN)
+    }
+    assert(jobs <= 4, s"correction 1 without nTotal ran $jobs actions")
+  }
+
+  test("RegDI correction 3 without nTotal runs in at most 3 actions") {
+    val jobs = countActions {
+      assert(!RegDI.oneTable(pop, "in_A", "in_B", regdiNoN(3)).mean.isNaN)
+    }
+    assert(jobs <= 3, s"correction 3 without nTotal ran $jobs actions")
+  }
+
+  test("PC scenario 1 without nTotal runs in at most 4 actions") {
+    val jobs = countActions {
+      assert(!PC.oneTable(pop, "in_A", "in_B", pcNoN(1)).estimator.isNaN)
+    }
+    assert(jobs <= 4, s"scenario 1 without nTotal ran $jobs actions")
+  }
+
+  test("PC scenario 3 without nTotal runs in at most 3 actions") {
+    val jobs = countActions {
+      assert(!PC.oneTable(pop, "in_A", "in_B", pcNoN(3)).estimator.isNaN)
+    }
+    assert(jobs <= 3, s"scenario 3 without nTotal ran $jobs actions")
+  }
 }

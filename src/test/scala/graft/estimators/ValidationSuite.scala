@@ -225,4 +225,28 @@ class ValidationSuite extends SparkSpec {
       e4.getMessage)
   }
 
+  // y_A constant on A while y_B varies: the outcome model fits exactly
+  // (SSR = 0) and SST = 0, so R² = 1 − 0/0 has no value
+  private lazy val constYA = (1 to 60).map(i =>
+      (i.toLong, 5.0, i * 1.7 % 11.0, (i % 7).toDouble,
+        if (i % 3 == 0) 1 else 0, if (i % 2 == 0) 1 else 0))
+    .toDF("id", "ya", "y", "x1", "in_A", "in_B")
+
+  test("RegDI correction 3 names a constant y_A instead of returning R² = NaN") {
+    val e = intercept[IllegalArgumentException](
+      RegDI.oneTable(constYA, "in_A", "in_B",
+        RegDIConfig(yACol = "ya", yBCol = "y", auxVars = Seq("x1"),
+          correction = 3, outcomeModel = Some("ya ~ x1"),
+          evalModelPerformance = true)))
+    assert(e.getMessage.contains("R² is undefined (SST = 0)"), e.getMessage)
+  }
+
+  test("PC scenario 3 names a constant y_A instead of returning R² = NaN") {
+    val e = intercept[IllegalArgumentException](
+      PC.oneTable(constYA, "in_A", "in_B",
+        PCConfig(yACol = Some("ya"), yBCol = Some("y"), auxVars = Seq("x1"),
+          scenario = 3, outcomeModel = Some("ya ~ x1"),
+          evalModelPerformance = true)))
+    assert(e.getMessage.contains("R² is undefined (SST = 0)"), e.getMessage)
+  }
 }

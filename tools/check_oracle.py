@@ -8,6 +8,11 @@ run the matching oracle SQL from oracle_sql.json in DuckDB over the same
 sf tables, sort columns by name and rows by all columns, and compare
 values exactly (the driver hash-matches, so exact is the bar).
 
+Two more ways a query fails: an output with no oracle SQL and zero rows
+(the rows-only check has nothing to stand on), and an oracle keyed by the
+bare query name but not by the output's "<name>.parquet" basename, the
+key the driver looks up (it would grade that query no_oracle).
+
 Dev tooling only — the Scala library never depends on this.
 """
 import json
@@ -53,6 +58,12 @@ def main(sf_dir: str, out_dir: str) -> int:
             f"SELECT * FROM '{qdir}/*.parquet'").fetch_arrow_table()
         got_cols = sorted(got.column_names)
         entry = {"rows_spark": got.num_rows, "oracle": name in oracle}
+        bare = name.removesuffix(".parquet")
+        if name not in oracle and bare != name and bare in oracle:
+            entry["error"] = (f"key drift: oracle keyed '{bare}' but not "
+                              f"'{name}', which the driver looks up")
+            results[name] = entry
+            continue
         if name in oracle:
             try:
                 exp = con.execute(oracle[name]).fetch_arrow_table()
@@ -85,6 +96,9 @@ def main(sf_dir: str, out_dir: str) -> int:
     for name, entry in sorted(results.items()):
         if "error" in entry:
             status = "ERROR " + entry["error"][:120]
+            bad += 1
+        elif not entry["oracle"] and entry["rows_spark"] == 0:
+            status = "EMPTY rows-only output (0 rows)"
             bad += 1
         elif not entry["oracle"]:
             status = f"rows-only ({entry['rows_spark']} rows)"
