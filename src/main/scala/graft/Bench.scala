@@ -77,112 +77,11 @@ object Bench {
     // (not just outliers) keeps the policy one-sided-bias-free — upward
     // noise is clipped identically for fast and slow queries. Both
     // passes are recorded in the side file for auditability.
-    // HOST-DRIFT MARKERS (BENCH_FULL.json): system load average plus
-    // TWO fixed sentinel queries re-timed every 50 queries through the
-    // run — a01 (one scan + one scalar agg: the cheap-scan class) and
-    // t27 (a full documents text scan with per-char aggregation: the
-    // heavy codegen/corpus class). A future round comparing per-query
-    // numbers can then separate UNIFORM drift (sentinels moved too)
-    // from a real per-query regression (sentinels flat) without a
-    // re-run — the ambiguity that cost a round each for e03 and a24.
-    // The r13 t23/t28 episode showed one cheap sentinel is not enough:
-    // a01 stayed flat while the driver-heavy text queries spiked 2.6×,
-    // so cheap-scan drift and heap/driver-pressure drift need separate
-    // series (t27 shares t23/t28's corpus scan but not their
-    // driver-side vocab build, so it marks executor-side text cost
-    // without re-warming the suspect path itself). Sentinel timings
-    // are NOT part of the graded results.
+    // host load at the start and end of the run (BENCH_FULL.json)
     def loadAvg(): Double = java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage
-    val sentinelName = "a01_sum_global"
-    val heavySentinelName = "t27_char_entropy"
-    val sentinelFn = SparkEntry.queries.get(sentinelName)
-    val heavyFn = SparkEntry.queries.get(heavySentinelName)
-    // Each drift entry also carries its GLOBAL position on the run's
-    // query timeline (pass-1 queries occupy [0, n), pass-2 [n, 2n),
-    // the end probe sits at 2n) so per-query normalization below can
-    // linearly interpolate the sentinel level at the moment each
-    // query actually ran.
-    val drift =
-      scala.collection.mutable.ArrayBuffer[(String, Int, Double, Double, Double)]()
-    def probeDrift(at: String, pos: Int): Unit = sentinelFn.foreach { fn =>
-      // a crashing sentinel records -1 (the query-timing convention):
-      // logging its time-to-crash would read as "sentinel flat" and
-      // steer the drift-vs-regression verdict exactly backwards
-      def run(f: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-          : Double = {
-        val t0 = System.nanoTime()
-        try { f(spark, sfDir).write.format("noop").mode("overwrite").save()
-              (System.nanoTime() - t0) / 1e9 }
-        catch { case _: Throwable => -1.0 }
-        // the heavy sentinel (t27) leases a cache per probe run — same
-        // untimed drain as the graded runs
-        finally graft.util.QueryLeases.releaseAll()
-      }
-      val sec = run(fn)
-      val heavySec = heavyFn.map(run).getOrElse(-1.0)
-      drift += ((at, pos, sec, heavySec, loadAvg()))
-    }
     val loadStart = loadAvg()
-    val nSel = selected.size
     val sfName = new java.io.File(sfDir).getName
-    // QUIET GATE (r16 verdict finding 2): two consecutive rounds had a
-    // graded run start under heavy external load — min-of-2 absorbed it
-    // in r16, but r15's a38 fiasco was both runs loaded, and each episode
-    // cost a judge/builder adjudication cycle. Before each graded pass,
-    // spin-wait (bounded, logged, recorded in BENCH_FULL) until EITHER
-    // the 1-min load average drops below 2·cores/16 OR the a01 sentinel
-    // lands within 1.5× its pinned quiet value — the sentinel early-exit
-    // matters because the load average includes OUR OWN just-finished
-    // pass and decays over ~minutes, while an actual a01 run measures
-    // the thing the gate protects (achievable query latency, CPU
-    // availability) directly. Gated only at the graded sf0.1, where the
-    // pinned sentinel reference exists; other SFs are local profiling
-    // runs where 3 minutes of dead time buys nothing.
-    // pinned_r18_quiet references (sf0.1 only) — the SINGLE source of
-    // truth for BOTH the quiet gate's sentinel early-exit and the
-    // normalization refs below: a re-pin that only updated one of two
-    // hand-maintained copies would silently leave the gate threshold
-    // stale (too loose after a regression re-pin, burning the full
-    // timeout after an optimization re-pin) — r17 review. Provenance
-    // and re-pin procedure documented at the refSource0 binding.
-    val a01PinnedQuiet = 0.23
-    val heavyPinnedQuiet = 1.85
-    val gates = scala.collection.mutable.ArrayBuffer[
-      (String, Double, Double, Double, Double, Boolean)]()
-    def quietGate(label: String): Unit = {
-      if (sfName != "sf0.1") return
-      val threshold = 2.0 * cpus.toDouble / 16.0
-      val a01Quiet = 1.5 * a01PinnedQuiet
-      val deadlineMs = System.currentTimeMillis() + 180000L
-      val l0 = loadAvg()
-      var l = l0
-      var lastSentinel = -1.0
-      var open = l <= threshold
-      def trySentinel(): Unit = sentinelFn.foreach { fn =>
-        val t0 = System.nanoTime()
-        try {
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          lastSentinel = (System.nanoTime() - t0) / 1e9
-          if (lastSentinel <= a01Quiet) open = true
-        } catch { case _: Throwable => () }
-        finally graft.util.QueryLeases.releaseAll()
-      }
-      if (!open) trySentinel()
-      while (!open && System.currentTimeMillis() < deadlineMs) {
-        Thread.sleep(10000)
-        l = loadAvg()
-        if (l <= threshold) open = true else trySentinel()
-      }
-      val timedOut = !open
-      val waited = (180000L - math.max(0L,
-        deadlineMs - System.currentTimeMillis())) / 1e3
-      if (waited >= 1.0 || timedOut) System.err.println(
-        f"[bench] quiet gate '$label': load $l0%.2f -> $l%.2f, " +
-          f"sentinel ${lastSentinel}%.2fs, waited ${waited}%.0fs" +
-          (if (timedOut) " (TIMEOUT — proceeding loaded)" else ""))
-      gates += ((label, l0, l, lastSentinel, waited, timedOut))
-    }
     // Per-query executed-task totals and peak concurrency (r17 verdict
     // finding 1: at sf0.1 every query is dominated by fixed per-query
     // costs, so 8-vs-32-core totals are indistinguishable and the
@@ -209,8 +108,7 @@ object Bench {
     val taskStats =
       scala.collection.mutable.Map[String, (Long, Long)]()
     def runPass(pass: Int): Seq[(String, Double)] = {
-      selected.zipWithIndex.map { case ((name, fn), i) =>
-        if (i % 50 == 0) probeDrift(f"p${pass}_q$i%03d", (pass - 1) * nSel + i)
+      selected.map { case (name, fn) =>
         val t0 = tasksStarted.get()
         taskPeak.set(tasksRunning.get())
         val sec = time(name, fn)
@@ -219,11 +117,8 @@ object Bench {
         name -> sec
       }
     }
-    quietGate("pass1")
     val firstPass = runPass(1)
-    quietGate("pass2")
     val secondPass = runPass(2)
-    probeDrift("end", 2 * nSel)
     val loadEnd = loadAvg()
     // SCALING PROBE (r17 verdict finding 1), OUTSIDE the graded totals:
     // one fixed CPU-bound codegen leg — 4e9 rows through a 4-deep
@@ -254,84 +149,6 @@ object Bench {
         System.err.println(f"[bench] $name passes $a%.2fs / $b%.2fs -> reported ${best}%.2fs")
       name -> best
     }
-    // SENTINEL-NORMALIZED SERIES (r14 verdict task 3): two consecutive
-    // graded benches ran under host contention and each cost a
-    // judge/builder cycle re-attributing uniform drift. Alongside every
-    // raw min, record min / f where f is the geometric mean of the two
-    // sentinel ratios (cheap-scan a01, heavy-class t27) linearly
-    // interpolated to the position — within the pass that produced the
-    // min — at which the query ran. At the graded sf0.1 the ratio
-    // denominators are the PINNED quiet references defined ONCE above
-    // (a01PinnedQuiet / heavyPinnedQuiet — provenance at the
-    // refSource0 binding), making `total_norm` comparable across
-    // rounds regardless of host load; at other SFs no
-    // pinned reference exists, so the run's own sentinel minimum is the
-    // unit (removes within-run drift only; source is recorded). The
-    // normalization is a LENS, not the grade — raw totals stay primary,
-    // and a ratio can undershoot 1 on a quiet host (not clipped: a
-    // clipped series could only ever flatter the run).
-    def interp(series: IndexedSeq[(Int, Double)], pos: Int): Double = {
-      val right = series.indexWhere(_._1 >= pos)
-      if (right < 0) series.last._2
-      else if (right == 0) series.head._2
-      else {
-        val (p1, v1) = series(right - 1); val (p2, v2) = series(right)
-        if (p2 == p1) v2 else v1 + (v2 - v1) * (pos - p1).toDouble / (p2 - p1)
-      }
-    }
-    val a01Series = drift.collect { case (_, p, s, _, _) if s > 0 => (p, s) }
-      .sortBy(_._1).toIndexedSeq
-    val heavySeries = drift.collect { case (_, p, _, h, _) if h > 0 => (p, h) }
-      .sortBy(_._1).toIndexedSeq
-    // The pinned references are a UNIT tied to the sentinel queries'
-    // round-14 code: if a01_sum_global or t27_char_entropy themselves
-    // are ever optimized (or regressed), re-pin these constants in the
-    // same change, or every query's norm silently rescales. The
-    // staleness flag below makes that misread detectable from the
-    // artifact: a sentinel running >30% FASTER than its pinned quiet
-    // minimum can only mean the sentinel's own code changed.
-    val (a01Ref0, heavyRef0, refSource0) =
-      // re-pinned r18: t27_char_entropy ITSELF was optimized this
-      // round (native CharHistogramExpr replaced the per-char explode
-      // — 3.41 → 1.85 s isolated min-of-2 at sf0.1, 2026-08-19), so
-      // the r17 pin (3.55, the explode-rendition quiet minimum) is a
-      // different query's unit and every cross-round `norm`
-      // comparison through it is VOID (r17 verdict finding 4: the
-      // source tag carries the pin round precisely so a stale-pin
-      // norm can't masquerade as comparable). Pin history: r15 1.20
-      // (extrapolated under load), r16 1.38 (cache-riding regime),
-      // r17 3.55 (leased honest rebuild), r18 1.85 (histogram
-      // rendition). a01 unchanged at 0.23 (its query is untouched;
-      // r17/r18 samples 0.28–0.44, same band).
-      if (sfName == "sf0.1") (a01PinnedQuiet, heavyPinnedQuiet,
-        "pinned_r18_quiet")
-      else (a01Series.map(_._2).minOption.getOrElse(1.0),
-        heavySeries.map(_._2).minOption.getOrElse(1.0), "run_min")
-    val refsStale = refSource0 == "pinned_r18_quiet" &&
-      (a01Series.map(_._2).minOption.exists(_ < 0.7 * a01Ref0) ||
-        heavySeries.map(_._2).minOption.exists(_ < 0.7 * heavyRef0))
-    if (refsStale) System.err.println(
-      "[bench] WARNING: a sentinel ran >30% below its pinned quiet " +
-        "reference — sentinel code changed? Re-pin norm refs.")
-    val (a01Ref, heavyRef, refSource) = (a01Ref0, heavyRef0,
-      if (refsStale) refSource0 + "(stale?)" else refSource0)
-    def sentinelFactor(pos: Int): Double = {
-      val r1 = if (a01Series.nonEmpty && a01Ref > 0)
-        interp(a01Series, pos) / a01Ref else 1.0
-      val r2 = if (heavySeries.nonEmpty && heavyRef > 0)
-        interp(heavySeries, pos) / heavyRef else 1.0
-      math.sqrt(math.max(r1, 1e-9) * math.max(r2, 1e-9))
-    }
-    val normByName: Map[String, Double] = results.zipWithIndex.map {
-      case ((name, v), i) =>
-        if (v < 0) name -> -1.0
-        else {
-          val (a, b) = (firstPass(i)._2, secondPass(i)._2)
-          val minPass = if (a < 0 || b < 0 || a <= b) 1 else 2
-          name -> v / sentinelFactor((minPass - 1) * nSel + i)
-        }
-    }.toMap
-    val totalNorm = normByName.values.filter(_ >= 0).sum
     // The harness that consumes this output keeps only the LAST ~2000
     // chars, and sbt appends its own "[success] Total time" line after
     // ours — a single line carrying all 200 per-query timings (~2400
@@ -369,33 +186,18 @@ object Bench {
     val fullQs = results.map { case (k, v) =>
       val (nTasks, conc) = taskStats.getOrElse(k, (-1L, -1L))
       "\"" + k + "\":{\"min\":" + v + ",\"run1\":" + passMap(k) +
-        ",\"run2\":" + pass2Map(k) + ",\"norm\":" + normByName(k) +
+        ",\"run2\":" + pass2Map(k) +
         ",\"tasks\":" + nTasks + ",\"conc\":" + conc + "}"
     }.mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum
     val failed = results.count(_._2 < 0)
     // Best-effort full-JSON files: must never prevent the primary lines
     // from printing (an unwritable path would otherwise void the run).
-    val driftJson = drift.map { case (at, pos, sec, heavySec, ld) =>
-      s"""{"at":"$at","pos":$pos,"sec":${fmt(sec)},""" +
-        s""""heavy_sec":${fmt(heavySec)},"load":${fmt(ld)}}"""
-    }.mkString("[", ",", "]")
-    // gate outcomes make a loaded start VISIBLE in the artifact (the
-    // verdict's done-condition: either the spread shrinks or the gate
-    // timeout shows here)
-    val gatesJson = gates.map { case (at, l0, l1, sent, waited, timedOut) =>
-      s"""{"at":"$at","load_before":${fmt(l0)},"load_after":${fmt(l1)},""" +
-        s""""sentinel_sec":${fmt(sent)},"waited_sec":${fmt(waited)},""" +
-        s""""timed_out":$timedOut}"""
-    }.mkString("[", ",", "]")
-    val fullJson = s"""{"sf":"$sfDir","total":${fmt(total)},""" +
-      s""""total_norm":${fmt(totalNorm)},"failed":$failed,""" +
-      s""""norm_ref":{"a01":$a01Ref,"heavy":$heavyRef,"source":"$refSource"},""" +
+    val fullJson = s"""{"sf":"$sfDir","total":${fmt(total)},"failed":$failed,""" +
       s""""load_start":${fmt(loadStart)},"load_end":${fmt(loadEnd)},""" +
-      s""""sentinel":"$sentinelName","heavy_sentinel":"$heavySentinelName",""" +
       s""""scaling_probe":{"sec":${fmt(probeSec)},"cpus":$cpus,""" +
       s""""partitions":$probeParts,"rows":4000000000},""" +
-      s""""gates":$gatesJson,"drift":$driftJson,"queries":$fullQs}"""
+      s""""queries":$fullQs}"""
     // repo-root copy derived from the working directory (sbt runs from
     // the project root), NOT a hardcoded absolute path
     val repoFull = new java.io.File(
@@ -434,7 +236,7 @@ object Bench {
       if (perQuery.length <= 1500) s""""queries":$perQuery"""
       else s""""families":$fams"""
     val line =
-      s"""{"metric":"total","value":${fmt(total)},"norm":${fmt(totalNorm)},"norm_src":"$refSource","unit":"sec","failed":$failed,"nq":${results.size},"probe_sec":${fmt(probeSec)},$detail$fullField,"sf":"$sfName"}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","failed":$failed,"nq":${results.size},"probe_sec":${fmt(probeSec)},$detail$fullField,"sf":"$sfName"}"""
     if (line.length > 1800)
       System.err.println(s"[bench] WARNING: JSON line ${line.length} chars > 1800 — may be truncated by the harness tail window")
     println(line)

@@ -532,9 +532,9 @@ object Ann {
     * (8 B stored as bytes in parquet dictionary encoding) — a ~32×
     * reduction of what the scoring scan touches, at the cost of
     * quantization error in the scores (ranking recall is MEASURED, in
-    * AnnSuite + AnnScaleProbe; precision can be recovered by exact
-    * re-ranking of the PQ top-k', k' > k — composition left to the
-    * caller). Compose with IVF cells ([[ivfTopK]]'s assignment) for
+    * AnnSuite + the `ScaleProbes` ann leg; precision can be recovered
+    * by exact re-ranking of the PQ top-k', k' > k — composition left to
+    * the caller). Compose with IVF cells ([[ivfTopK]]'s assignment) for
     * the full IVF-PQ: cell-restrict first, ADC-score inside cells.
     *
     * `rerankFrom > 0` adds the standard PQ precision-recovery stage:
@@ -608,7 +608,8 @@ object Ann {
     * need the nCells·m·k cross-term table a LUT-only formulation
     * would. `residual = false` keeps the raw-vector layout (one
     * codebook, no per-cell terms; both recalls are measured in
-    * AnnSuite + AnnScaleProbe — the probe pins residual ≥ raw). */
+    * AnnSuite + the `ScaleProbes` ann leg — the leg pins residual ≥
+    * raw). */
   def ivfPqTopK(queries: DataFrame, cand: DataFrame, idCol: String,
                 vecCol: String, dim: Int, k: Int, nCells: Int = 256,
                 nProbe: Int = 4, m: Int = 8, kCodes: Int = 256,

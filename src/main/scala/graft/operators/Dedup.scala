@@ -144,8 +144,8 @@ object Dedup {
     // the ingest-time stored columns: pass the corpus's (id, band,
     // band_key) frame ([[lshBands]] output) and (id, shingles) frame to
     // amortize the corpus-side computation across batches —
-    // DedupScaleProbe measures the difference (corpus-scan-bound vs
-    // batch-bound)
+    // the `ScaleProbes` dedup leg measures the difference
+    // (corpus-scan-bound vs batch-bound)
     val bCorp = corpusBands.getOrElse(
       lshBands(corpus, idCol, textCol, shingleN, numHashes, bands))
     val cand = bNew.as("n").join(bCorp.as("c"), Seq("band", "band_key"))
@@ -375,7 +375,6 @@ object Dedup {
                           hashMinRounds: Int = 12,
                           maxIter: Int = 50): DataFrame = {
     import org.apache.spark.sql.types.LongType
-    val spark = pairs.sparkSession
     // the label rows are declared LongType — a string/int id column
     // would otherwise die mid-job with an opaque executor-side
     // ClassCastException; fail at construction with the column named
@@ -412,16 +411,15 @@ object Dedup {
     // per-round shape as the graph censuses: cached edges joined with a
     // stats-less node-sized frame planned as an edge-sized exchange
     // every round). Constant across rounds — the label frame stays
-    // keyed by the same id set — so ONE decision serves the loop; this
-    // count also pre-materializes the seed (and edges) round 1 reads.
+    // keyed by the same id set; this count also pre-materializes the
+    // seed (and edges) round 1 reads.
     val nLabels = labelsRdd.count()
-    val bcastLbl = Graphs.bcastAuto(spark, nLabels)
     var converged = false
     var i = 0
     while (!converged && i < math.min(hashMinRounds, maxIter)) {
       val fromNeighbors = edges
         .join(Graphs.bcastIfSmall(labels.withColumnRenamed("id", "dst"),
-          nLabels, Some(bcastLbl)), "dst")
+          nLabels), "dst")
         .select(col("src").as("id"), col("cluster"))
       val (next, nextRdd) = Graphs.truncated(
         labels.union(fromNeighbors)

@@ -129,9 +129,8 @@ object Graphs {
     * node set) the shuffle join stands — measured at the boundary: a
     * FORCED broadcast of a ~1M-node rank frame ranged wash-to-loss
     * across the two probe batteries (min ratio 0.97 loaded, 1.10 on
-    * the re-leg — PageRankBcastProbe), so the conservative auto gate
-    * gives up nothing and forcing past it buys nothing. `force` is
-    * the probe/caller override (None = auto). */
+    * the re-leg — SCALE.md, round 17), so the conservative auto gate
+    * gives up nothing and forcing past it buys nothing. */
   private[operators] def bcastAuto(
       spark: org.apache.spark.sql.SparkSession, n: Long): Boolean = {
     val thr = spark.sessionState.conf.autoBroadcastJoinThreshold
@@ -140,10 +139,8 @@ object Graphs {
 
   // package-visible: Dedup.connectedComponents' hash-min loop has the
   // identical per-round shape (edge cache ⋈ stats-less node frame)
-  private[operators] def bcastIfSmall(df: DataFrame, n: Long,
-                                      force: Option[Boolean]): DataFrame =
-    if (force.getOrElse(bcastAuto(df.sparkSession, n))) broadcast(df)
-    else df
+  private[operators] def bcastIfSmall(df: DataFrame, n: Long): DataFrame =
+    if (bcastAuto(df.sparkSession, n)) broadcast(df) else df
 
   /** One rank round. Name-based (USING) joins throughout: column-
     * reference joins on frames rebuilt from the same `nodes`/`edges`
@@ -213,15 +210,15 @@ object Graphs {
     * checkpoint when the session has a checkpoint dir; executor-local
     * otherwise — the right default for local mode, where "reliable"
     * storage is the same disks anyway). 0 disables (the graded 5-round
-    * fixture needs no truncation). GraphScaleProbe's 25-round leg
-    * measures the shape. */
+    * fixture needs no truncation). The `ScaleProbes` graph leg's
+    * 25-round run measures the shape. */
   def pageRankTopK(edges: DataFrame, iters: Int, k: Int,
                    damping: Double = 0.85,
                    completeInbound: Boolean = false,
                    symmetrizeInput: Boolean = false,
                    checkpointEvery: Int = 0,
-                   onRound: (Int, Double) => Unit = (_, _) => (),
-                   broadcastRanks: Option[Boolean] = None): DataFrame = {
+                   onRound: (Int, Double) => Unit = (_, _) => ())
+      : DataFrame = {
     import org.apache.spark.storage.StorageLevel
     require(iters >= 1, s"iters=$iters must be >= 1")
     require(damping > 0 && damping < 1, s"damping=$damping not in (0,1)")
@@ -271,15 +268,16 @@ object Graphs {
       if (inputRdd != null) inputRdd.unpersist(blocking = false)
       // the bcastIfSmall decision (see its scaladoc), driver-known n:
       // the rank frame is exactly n (id, pr) rows every round
-      val bcastPr = broadcastRanks.getOrElse(bcastAuto(spark, n))
+      val bcastPr = bcastAuto(spark, n)
       val base = lit(1.0 - damping) / lit(n.toDouble)
       var pr = nodes.select(col("id"), (lit(1.0) / lit(n.toDouble)).as("pr"))
       val reliable = spark.sparkContext.getCheckpointDir.isDefined
       for (i <- 1 to iters) {
         // per-round wall clock handed to `onRound` AFTER the round's
         // materializing count — the probe hook that pins "flat
-        // per-round time under lineage truncation" (GraphScaleProbe
-        // leg 2b); the default no-op costs nothing on graded paths
+        // per-round time under lineage truncation" (the `ScaleProbes`
+        // graph leg, 2b); the default no-op costs nothing on graded
+        // paths
         val tRound0 = System.nanoTime()
         val stepDf = step(edgesDeg, pr, base, damping, noDangling, nodes,
           identity, bcastPr = bcastPr)
@@ -422,8 +420,7 @@ object Graphs {
     * path — GraphsSuite pins it.
     * Returns (role, id, score, rk) with rk = 1..k per role by
     * (score DESC, id). */
-  def hitsTopK(edges: DataFrame, iters: Int, k: Int,
-               broadcastScores: Option[Boolean] = None): DataFrame = {
+  def hitsTopK(edges: DataFrame, iters: Int, k: Int): DataFrame = {
     require(iters >= 1, s"iters=$iters must be >= 1")
     require(k >= 1, s"k=$k must be >= 1")
     val (e, eRdd) = truncated(edges.select("src", "dst"))
@@ -437,8 +434,7 @@ object Graphs {
       def halfRound(scores: DataFrame, nScores: Long, joinKey: String,
                     groupKey: String): (DataFrame, Long) = {
         val (raw, rdd) = truncated(
-          e.join(bcastIfSmall(scores, nScores, broadcastScores),
-              Seq(joinKey))
+          e.join(bcastIfSmall(scores, nScores), Seq(joinKey))
             .groupBy(groupKey).agg(dsum(col("score")).as("score")))
         val n = rdd.count()
         rdds.drop(2).foreach(_.unpersist(blocking = false))
@@ -529,8 +525,7 @@ object Graphs {
     * Returns (community, n_members, min_id, max_id), largest first,
     * label tie-break. */
   def labelPropCensus(edges: DataFrame, iters: Int, k: Int,
-                      symmetrizeInput: Boolean = false,
-                      broadcastLabels: Option[Boolean] = None): DataFrame = {
+                      symmetrizeInput: Boolean = false): DataFrame = {
     require(iters >= 1, s"iters=$iters must be >= 1")
     require(k >= 1, s"k=$k must be >= 1")
     val (input, inputRdd) = truncated(
@@ -539,7 +534,7 @@ object Graphs {
     var last: org.apache.spark.rdd.RDD[_] = null
     try {
       inputRdd.count()
-      val (lbl, rdd, _) = lpaAssign(full, iters, broadcastLabels)
+      val (lbl, rdd, _) = lpaAssign(full, iters)
       last = rdd
       val census = lbl.groupBy(col("lbl").as("community"))
         .agg(count(lit(1)).as("n_members"), min("id").as("min_id"),
@@ -563,8 +558,7 @@ object Graphs {
     * it — the CALLER unpersists that RDD when done — and the node
     * count (the label frame is n rows every round, so callers reuse it
     * instead of recounting). */
-  private def lpaAssign(full: DataFrame, iters: Int,
-                        broadcastLabels: Option[Boolean] = None)
+  private def lpaAssign(full: DataFrame, iters: Int)
       : (DataFrame, org.apache.spark.rdd.RDD[_], Long) = {
     // symmetrized contract: every node appears as a source, so the
     // source set IS the node list — and every node has neighbors, so
@@ -600,11 +594,10 @@ object Graphs {
       lbl = lbl0
       prevRdd = rdd0
       n = rdd0.count()
-      val bcast = broadcastLabels.getOrElse(bcastAuto(full.sparkSession, n))
       for (_ <- 1 to iters) {
         val (next, rdd) = truncated(
-          full.join(bcastIfSmall(lbl.withColumnRenamed("id", "src"), n,
-              Some(bcast)), Seq("src"))
+          full.join(bcastIfSmall(lbl.withColumnRenamed("id", "src"), n),
+              Seq("src"))
             .groupBy(col("dst"), col("lbl")).agg(count(lit(1)).as("__n"))
             .withColumn("__rk", row_number().over(win))
             .filter(col("__rk") === 1)
@@ -641,8 +634,7 @@ object Graphs {
     * the cached edge count (the k×k Gram convention), never a global
     * window over data rows. */
   def modularityCensus(edges: DataFrame, iters: Int, k: Int,
-                       symmetrizeInput: Boolean = false,
-                       broadcastLabels: Option[Boolean] = None): DataFrame = {
+                       symmetrizeInput: Boolean = false): DataFrame = {
     require(iters >= 1, s"iters=$iters must be >= 1")
     require(k >= 1, s"k=$k must be >= 1")
     val (input, inputRdd) = truncated(
@@ -655,7 +647,7 @@ object Graphs {
       val nDirected = inputRdd.count()
       val full = if (symmetrizeInput) symmetrize(input) else input
       val m2 = if (symmetrizeInput) 2L * nDirected else nDirected
-      val (lbl, rdd, nL) = lpaAssign(full, iters, broadcastLabels)
+      val (lbl, rdd, nL) = lpaAssign(full, iters)
       last = rdd
       val deg = full.groupBy(col("src").as("id"))
         .agg(count(lit(1)).as("__d"))
@@ -664,11 +656,11 @@ object Graphs {
         .agg(sum(col("__d")).as("d_c"), count(lit(1)).as("n_members"))
       val ei = full
         .join(bcastIfSmall(
-            lbl.select(col("id").as("src"), col("lbl").as("__ls")),
-            nL, broadcastLabels), Seq("src"))
+            lbl.select(col("id").as("src"), col("lbl").as("__ls")), nL),
+          Seq("src"))
         .join(bcastIfSmall(
-            lbl.select(col("id").as("dst"), col("lbl").as("__ld")),
-            nL, broadcastLabels), Seq("dst"))
+            lbl.select(col("id").as("dst"), col("lbl").as("__ld")), nL),
+          Seq("dst"))
         .filter(col("__ls") === col("__ld"))
         .groupBy(col("__ls").as("lbl")).agg(count(lit(1)).as("__e2"))
       val out = dc.join(ei, Seq("lbl"), "left")
@@ -699,8 +691,7 @@ object Graphs {
     * (dist, n_nodes, min_id, max_id) — a ≤ maxHops+1-row result —
     * collected into a local relation with every cache dropped. */
   def bfsCensus(edges: DataFrame, seedPred: Column, maxHops: Int,
-                symmetrizeInput: Boolean = false,
-                broadcastFrontier: Option[Boolean] = None): DataFrame = {
+                symmetrizeInput: Boolean = false): DataFrame = {
     require(maxHops >= 0, s"maxHops=$maxHops must be >= 0")
     val (input, inputRdd) = truncated(
       if (symmetrizeInput) edges else edges.select("src", "dst"))
@@ -720,8 +711,8 @@ object Graphs {
       var nDist = rdd0.count()
       for (_ <- 1 to maxHops) {
         val expanded = full
-          .join(bcastIfSmall(dist.withColumnRenamed("id", "src"), nDist,
-            broadcastFrontier), Seq("src"))
+          .join(bcastIfSmall(dist.withColumnRenamed("id", "src"), nDist),
+            Seq("src"))
           .select(col("dst").as("id"), (col("dist") + lit(1)).as("dist"))
         val (next, rdd) = truncated(
           dist.unionByName(expanded)
@@ -758,8 +749,7 @@ object Graphs {
     * min, materialized per round (the [[lpaAssign]] eager pattern).
     * Label rows are two longs — nothing edge-sized accumulates. */
   def ccCensus(edges: DataFrame, rounds: Int, k: Int,
-               symmetrizeInput: Boolean = false,
-               broadcastLabels: Option[Boolean] = None): DataFrame = {
+               symmetrizeInput: Boolean = false): DataFrame = {
     require(rounds >= 1, s"rounds=$rounds must be >= 1")
     require(k >= 1, s"k=$k must be >= 1")
     val (input, inputRdd) = truncated(
@@ -788,12 +778,10 @@ object Graphs {
       lbl = lbl0
       prevRdd = rdd0 // registered BEFORE the count (r17 review)
       val n = rdd0.count()
-      val bcast =
-        broadcastLabels.getOrElse(bcastAuto(full.sparkSession, n))
       for (_ <- 1 to rounds) {
         val spread = full
-          .join(bcastIfSmall(lbl.withColumnRenamed("id", "src"), n,
-            Some(bcast)), Seq("src"))
+          .join(bcastIfSmall(lbl.withColumnRenamed("id", "src"), n),
+            Seq("src"))
           .select(col("dst").as("id"), col("lbl"))
         val (next, rdd) = truncated(
           lbl.unionByName(spread).groupBy("id").agg(min("lbl").as("lbl")))
@@ -840,8 +828,8 @@ object Graphs {
     * census. All outputs are exact integers → full hash oracle. */
   def kcoreCensus(edges: DataFrame, k: Int, rounds: Int,
                   symmetrizeInput: Boolean = false,
-                  onRound: (Int, Double) => Unit = (_, _) => (),
-                  broadcastSurvivors: Option[Boolean] = None): DataFrame = {
+                  onRound: (Int, Double) => Unit = (_, _) => ())
+      : DataFrame = {
     require(k >= 1, s"k=$k must be >= 1")
     require(rounds >= 1, s"rounds=$rounds must be >= 1")
     val (input, inputRdd) = truncated(
@@ -863,8 +851,7 @@ object Graphs {
     def induced(): DataFrame =
       if (surv == null) full
       else {
-        val b = bcastIfSmall(surv.select(col("src").as("__node")), nSurv,
-          broadcastSurvivors)
+        val b = bcastIfSmall(surv.select(col("src").as("__node")), nSurv)
         full
           .join(b, col("src") === col("__node"), "left_semi")
           .join(b, col("dst") === col("__node"), "left_semi")

@@ -51,8 +51,8 @@ object Samplers {
     * rows (~2⁻¹⁰⁶ per pair — none expected below ~2⁵⁰ rows), and
     * remaining ties are identical rows, which only swap across the cut
     * line without changing the selected multiset (the [[rowUniform]]
-    * contract). SamplerScaleProbe pins multiset-identity of the two
-    * paths at n = 5M. */
+    * contract). The `ScaleProbes` sampler leg pins multiset-identity of
+    * the two paths at n = 5M. */
   private[graft] def keepTopNByKey(df: DataFrame, key: Column, tie: Column,
                                    n: Int,
                                    descending: Boolean = false,

@@ -67,7 +67,7 @@ object TemporalJoins {
     * The plain shape windows over partitionBy(keys); windows cannot be
     * skew-split by AQE (only joins can), so ONE pathologically hot key
     * puts that key's entire history into one straggler task (knee
-    * measured in SCALE.md via TemporalScaleProbe's planted-skew sweep).
+    * measured in SCALE.md via the `ScaleProbes` temporal-skew leg).
     * This variant bounds every task at (key, time-slice) granularity:
     *
     *  1. the same union + running-last window, but partitioned by

@@ -830,8 +830,8 @@ object AnnQueries {
     *    near-zero collision probability by design — measured avg
     *    overlap 0.06–0.3 across SFs. Low overlap on near-orthogonal
     *    neighbors is correct ANN behavior, not a defect (the planted-
-    *    cluster suite and AnnScaleProbe measure recall where neighbors
-    *    ARE near: ≥ 0.9 / 0.9998).
+    *    cluster suite and the `ScaleProbes` ann leg measure recall
+    *    where neighbors ARE near: ≥ 0.9 / 0.9998).
     *  - `strong_recall` / `recall_ok` — the LOAD-BEARING invariant:
     *    among exact-top-k members with cosine ≥ `strongThr` (the
     *    fixture's planted near-dup level), the fraction the
@@ -847,10 +847,10 @@ object AnnQueries {
     * Memoizing the collected rows (≤ |Q|·k) makes one Verify/Bench pass
     * pay the O(|Q|·n) cross join once instead of five times; whichever
     * query runs first is timed at full cost. (The r10→r8 e03 "2.4×
-    * regression" was NOT the operator: tools.AnnAbProbe measured the r8
-    * lazy shape leaking its caches into the bench's second pass, so r8's
-    * min-of-2 reported a warm-cache 0.80 s against the honest 1.75 s —
-    * the bare operator is 0.76 s at sf0.1 either way.) */
+    * regression" was NOT the operator: an A/B probe (SCALE.md, round
+    * 11) measured the r8 lazy shape leaking its caches into the bench's
+    * second pass, so r8's min-of-2 reported a warm-cache 0.80 s against
+    * the honest 1.75 s — the bare operator is 0.76 s at sf0.1 either way.) */
   private val exactMemo = new java.util.concurrent.ConcurrentHashMap[
     (String, String, Int), Array[Row]]()
 

@@ -332,14 +332,15 @@ object DedupQueries {
     // d03's banded MinHash there is no near-certain recall bound from a
     // gap — and at θ ≈ 63° ANY LSH shape that keeps every true pair
     // admits a dense candidate set (see SCALE.md §Similarity search for
-    // the math; AnnScaleProbe measures the sparse production regime at
+    // the math; the `ScaleProbes` ann leg measures the sparse regime at
     // threshold 0.9 instead). Because the hyperplanes are SEEDED, recall
     // here is deterministic and checkable, so the shape was chosen by
-    // measurement: tools.AnnTune swept (bits, tables) and (6, 64) is the
-    // cheapest grid point whose pair set EQUALS Ann.nearDupExact's at
-    // sf0.001, sf0.01 and sf0.1 (1.46 s vs 2.08 s for the old (5, 64)
-    // at sf0.1). AnnSuite pins the equality; the DuckDB oracle below
-    // re-checks it all-pairs at the graded SF.
+    // measurement: the (bits, tables) sweep in SCALE.md §Similarity
+    // search found (6, 64) the cheapest grid point whose pair set
+    // EQUALS Ann.nearDupExact's at sf0.001, sf0.01 and sf0.1 (1.46 s
+    // vs 2.08 s for the old (5, 64) at sf0.1). AnnSuite pins the
+    // equality; the DuckDB oracle below re-checks it all-pairs at the
+    // graded SF.
     Q("e02_embed_neardup",
       (s, d) => Ann.nearDupLsh(
           AnnQueries.spreadForExpr(load(s, d, "embeddings")),
@@ -494,7 +495,7 @@ object DedupQueries {
     // cos ≥ 0.45 level must be found — see AnnQueries.withExactRecall).
     // Shape retuned (8, 6) → (6, 64): the old shape had ~17% collision
     // probability for a cos-0.45 pair, so even PLANTED near-dups were
-    // usually missed; (6, 64) is the e02 shape AnnTune measured
+    // usually missed; (6, 64) is the e02 shape the SCALE.md sweep measured
     // zero-miss at 0.45 at every graded SF, making strong recall = 1.0
     // a checkable property instead of luck.
     Q("e03_ann_lsh_topk",
@@ -590,8 +591,8 @@ object DedupQueries {
     // stays one broadcast probe join with row-local pieces (driver
     // per-probe dot(q, c) + fused LUT sum + encode-scan reconstruction
     // norm — see Ann.ivfPqTopK). Same strong-neighbor invariant, floor
-    // 1.0 measured at all three SFs; AnnScaleProbe pins residual recall
-    // ≥ the raw-vector path at 1M vectors / 256 cells.
+    // 1.0 measured at all three SFs; the `ScaleProbes` ann leg pins
+    // residual recall ≥ the raw-vector path at 1M vectors / 256 cells.
     Q("e09_ann_ivfpq_residual",
       (s, d) => {
         val emb = load(s, d, "embeddings")

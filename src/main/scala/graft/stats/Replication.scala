@@ -192,7 +192,7 @@ object Replication {
 
   /** The ×(R+1) expansion + ONE grouped pass behind
     * [[poissonBootstrapMean]], exposed lazily (R+1 rows, uncollected)
-    * so BootstrapScaleProbe can pin the plan shape — partial agg,
+    * so the `ScaleProbes` bootstrap leg can pin the plan shape — partial agg,
     * broadcast expansion, no cartesian — without running it. */
   private[graft] def poissonBootstrapMeanPlan(
       df: DataFrame, y: Column, w: Column,

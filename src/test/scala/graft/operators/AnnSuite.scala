@@ -81,9 +81,10 @@ class AnnSuite extends SparkSpec {
     // The graded e02 configuration on the real fixture: no similarity
     // gap, so recall = 1 is a measured property of the seeded
     // hyperplanes, not a banding bound — this pins it at the two suite
-    // SFs ((6, 64) additionally verified zero-miss at sf0.1 by
-    // tools.AnnTune, which is how the shape was chosen: cheapest grid
-    // point with exact-equality at ALL graded SFs).
+    // SFs ((6, 64) additionally verified zero-miss at sf0.1 by the
+    // (bits, tables) sweep in SCALE.md §Similarity search, which is how
+    // the shape was chosen: cheapest grid point with exact-equality at
+    // ALL graded SFs).
     def pairs(df: org.apache.spark.sql.DataFrame) =
       df.select("id_a", "id_b", "cos").as[(Long, Long, Float)].collect().toSet
     for ((sf, nTrue) <- Seq("sf0.001" -> 7, "sf0.01" -> 14)) {
@@ -407,7 +408,7 @@ class AnnSuite extends SparkSpec {
     // the strong head, so per-query overlap is noisy (min 0) — but the
     // pipelines are DETERMINISTIC, so the total hit count across the
     // 10 fixed queries is a per-SF constant. Pinning exact EQUALITY to
-    // the measured constant (AnnTwinProbe, round-14 HEAD) is the
+    // the measured constant (round-14 HEAD, SCALE.md) is the
     // regression pin: a silent production-path break (seed drift,
     // bucketing bug) almost surely moves the count, and the twin side
     // is re-anchored to DuckDB by its own hash row every round.
@@ -439,8 +440,8 @@ class AnnSuite extends SparkSpec {
         .agg(round(sum(col("o") * 5)).cast("long")).head().getLong(0)
       assert(hits === twinHits((sf, name)),
         s"$sf $name twin hit count moved: $hits (production path or " +
-          "portable twin changed — remeasure with AnnTwinProbe and " +
-          "update deliberately)")
+          s"portable twin changed — if intended, re-record $hits in " +
+          "twinHits deliberately)")
     }
   }
 

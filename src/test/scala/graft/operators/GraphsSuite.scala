@@ -313,31 +313,36 @@ class GraphsSuite extends SparkSpec {
 
   test("r17: every kernel returns IDENTICAL rows under both join " +
       "strategies of the broadcast-node-frame lever") {
-    // the bcastIfSmall lever (probe-adjudicated for timing in
-    // PageRankBcastProbe) must be invisible in values: all kernels sum
-    // through exact-decimal or integer aggregation, so the join
+    // the bcastIfSmall lever (timing adjudicated in SCALE.md, round
+    // 17) must be invisible in values: all kernels sum through
+    // exact-decimal or integer aggregation, so the join
     // strategy cannot move a result. Pin that contract in the suite —
     // a future kernel edit that makes a result depend on partitioning
     // (e.g. an IEEE-double fold) would fail HERE, not in a probe.
+    // The arms set the session threshold bcastAuto reads: -1 (never
+    // broadcast) and the default (these 7-node frames always fit).
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 5L),
       (5L, 3L), (6L, 7L)).toDF("src", "dst")
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq
-    val arms = Seq(Some(false), Some(true)).map { b =>
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prior = spark.conf.getOption(key)
+    val arms = try Seq(Some("-1"), None).map { thr =>
+      thr.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+      assert(Graphs.bcastAuto(spark, 7L) == thr.isEmpty)
       (rows(Graphs.pageRankTopK(edges, iters = 3, k = 10,
-         symmetrizeInput = true, broadcastRanks = b)),
+         symmetrizeInput = true)),
        rows(Graphs.labelPropCensus(edges, iters = 2, k = 10,
-         symmetrizeInput = true, broadcastLabels = b)),
+         symmetrizeInput = true)),
        rows(Graphs.modularityCensus(edges, iters = 2, k = 10,
-         symmetrizeInput = true, broadcastLabels = b)),
+         symmetrizeInput = true)),
        rows(Graphs.ccCensus(edges, rounds = 3, k = 10,
-         symmetrizeInput = true, broadcastLabels = b)),
-       rows(Graphs.hitsTopK(edges, iters = 2, k = 5,
-         broadcastScores = b)),
+         symmetrizeInput = true)),
+       rows(Graphs.hitsTopK(edges, iters = 2, k = 5)),
        rows(Graphs.bfsCensus(edges, seedPred = col("id") === 1, maxHops = 3,
-         symmetrizeInput = true, broadcastFrontier = b)),
+         symmetrizeInput = true)),
        rows(Graphs.kcoreCensus(edges, k = 2, rounds = 3,
-         symmetrizeInput = true, broadcastSurvivors = b)))
-    }
+         symmetrizeInput = true)))
+    } finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
     assert(arms(0) == arms(1))
   }
 }
