@@ -1,6 +1,8 @@
 package graft.mc
 
-import graft.stats.Det
+import breeze.linalg.DenseVector
+
+import graft.stats.{Calibration, Gram}
 
 /** One task-local simulation replicate: population synthesis, sample
   * draws, and the estimator battery — pure JVM arrays, no Spark.
@@ -22,13 +24,16 @@ import graft.stats.Det
   *  - [[calB]]: PC (Golini & Righi 2024) calibrates the B design, and
   *    [[pcMean]], [[pcModel]] and [[pcDr1]] combine its λ into the
   *    scenario-1, -2 and -3 estimates.
-  * Every calibration solve is [[graft.stats.Det.solve]], the Cramer solve
-  * `GramResult.solve` uses for k ≤ 6 (the designs here have k ≤ 5), so a
-  * singular design raises Det's named `singular system` error.
-  * [[solveAliased]] is the one alias-tolerant solve, for the scenario-3
-  * outcome model. In two-table calls a proxy ỹ observed only on B is NaN
-  * on every other row — R's NA — and [[pcModel]] drops the NaN
-  * predictions from its A-residual sum, as the reference's `na.rm` does.
+  * What is LocalSim's own is the synthesis, the draws and the array sums.
+  * Every Gram is [[graft.stats.Gram.local]]'s `GramResult`, and every
+  * solve is the Spark estimators' own: λ from
+  * [[graft.stats.Calibration.lambda]], the scenario-2 β from
+  * `GramResult.solve` (both the Cramer solve of `Det`, so a singular
+  * design raises its named `singular system` error), the scenario-3 β
+  * from the alias-tolerant `GramResult.solveAliased`. In two-table calls
+  * a proxy ỹ observed only on B is NaN on every other row — R's NA — and
+  * [[pcModel]] drops the NaN predictions from its A-residual sum, as the
+  * reference's `na.rm` does.
   */
 object LocalSim {
 
@@ -293,11 +298,16 @@ object LocalSim {
     s
   }
 
-  /** λ = (XᵀDX)⁻¹(T − Xᵀd) through the estimators' shared solve. */
-  private def gregLambda(xtdx: Array[Array[Double]], t: Array[Double],
-                         xtd: Array[Double]): Array[Double] =
-    Det.solve(IndexedSeq.tabulate(t.length, t.length)((i, j) => xtdx(i)(j)),
-      IndexedSeq.tabulate(t.length)(i => t(i) - xtd(i))).toArray
+  /** Row r's design (1, aux…) with `intercept`, else (aux…), for
+    * [[graft.stats.Gram.local]]. */
+  private def design(aux: Array[Array[Double]], intercept: Boolean): Gram.Features = {
+    val off = if (intercept) 1 else 0
+    (r, f) => {
+      if (intercept) f(0) = 1.0
+      var a = 0
+      while (a < aux.length) { f(off + a) = aux(a)(r); a += 1 }
+    }
+  }
 
   // ---- estimator kernels ---------------------------------------------
 
@@ -310,47 +320,38 @@ object LocalSim {
                         aux: Array[Array[Double]],
                         inA: Array[Boolean], inB: Array[Boolean],
                         d: Array[Double], nTotal: Double): Double = {
-    val n = yA.length
     val k = 3 + aux.length
+    val x: Gram.Features = (r, f) => {
+      f(0) = 1.0
+      if (inB(r)) {
+        f(1) = 1.0; f(2) = yB(r)
+        var a = 0
+        while (a < aux.length) { f(3 + a) = aux(a)(r); a += 1 }
+      } else java.util.Arrays.fill(f, 1, k, 0.0)
+    }
     val t = new Array[Double](k)
     t(0) = nTotal
-    val xtdx = Array.ofDim[Double](k, k)
-    val xtd = new Array[Double](k)
-    val f = new Array[Double](k)
-    f(0) = 1.0
     var r = 0
-    while (r < n) {
+    while (r < inB.length) {
       if (inB(r)) {
         t(1) += 1.0; t(2) += yB(r)
         var a = 0
         while (a < aux.length) { t(3 + a) += aux(a)(r); a += 1 }
       }
-      if (inA(r)) {
-        if (inB(r)) {
-          f(1) = 1.0; f(2) = yB(r)
-          var a = 0
-          while (a < aux.length) { f(3 + a) = aux(a)(r); a += 1 }
-        } else java.util.Arrays.fill(f, 1, k, 0.0)
-        var ii = 0
-        while (ii < k) {
-          xtd(ii) += d(r) * f(ii)
-          var jj = 0
-          while (jj < k) { xtdx(ii)(jj) += d(r) * f(ii) * f(jj); jj += 1 }
-          ii += 1
-        }
-      }
       r += 1
     }
-    val lambda = gregLambda(xtdx, t, xtd)
+    val lambda =
+      Calibration.lambda(Gram.local(inA, d(_), k, x), DenseVector(t)).toArray
+    // w = d·(((1 + x₀λ₀) + x₁λ₁) + …), Calibration.gWeightFactor's fold
+    val f = new Array[Double](k)
     var sw = 0.0; var swy = 0.0
     r = 0
-    while (r < n) {
+    while (r < inA.length) {
       if (inA(r)) {
-        val xl =
-          if (inB(r))
-            lin(lambda(0) + (lambda(1) + lambda(2) * yB(r)), lambda, 3, aux, r)
-          else lambda(0)
-        val w = d(r) * (1.0 + xl)
+        x.fill(r, f)
+        var g = 1.0; var i = 0
+        while (i < k) { g += f(i) * lambda(i); i += 1 }
+        val w = d(r) * g
         sw += w; swy += w * yA(r)
       }
       r += 1
@@ -361,25 +362,9 @@ object LocalSim {
   /** PC's B-side calibration (`PC.R:216-237`): the λ that makes the
     * calibrated weights d_B(1 + auxᵀλ) over B reproduce `totals`. */
   private[mc] def calB(aux: Array[Array[Double]], inB: Array[Boolean],
-                       dB: Double, totals: Array[Double]): Array[Double] = {
-    val k = aux.length
-    val xtdx = Array.ofDim[Double](k, k)
-    val xtd = new Array[Double](k)
-    var r = 0
-    while (r < inB.length) {
-      if (inB(r)) {
-        var ii = 0
-        while (ii < k) {
-          xtd(ii) += dB * aux(ii)(r)
-          var jj = 0
-          while (jj < k) { xtdx(ii)(jj) += dB * aux(ii)(r) * aux(jj)(r); jj += 1 }
-          ii += 1
-        }
-      }
-      r += 1
-    }
-    gregLambda(xtdx, totals, xtd)
-  }
+                       dB: Double, totals: Array[Double]): Array[Double] =
+    Calibration.lambda(Gram.local(inB, _ => dB, aux.length,
+      design(aux, intercept = false)), DenseVector(totals)).toArray
 
   /** PC scenario 1 (`PC.R:240-253`): the calibrated B mean of y. */
   private[mc] def pcMean(y: Array[Double], aux: Array[Array[Double]],
@@ -405,17 +390,12 @@ object LocalSim {
                           d: Array[Double], dB: Double,
                           lambda: Array[Double], nTotal: Double): Double = {
     val n = y.length
-    var sx = 0.0; var sy = 0.0; var sxy = 0.0; var sxx = 0.0; var m = 0
+    val both = new Array[Boolean](n)
     var r = 0
-    while (r < n) {
-      if (inA(r) && inB(r)) {
-        sx += proxy(r); sy += y(r); sxy += proxy(r) * y(r)
-        sxx += proxy(r) * proxy(r); m += 1
-      }
-      r += 1
-    }
-    val b1 = (sxy - sx * sy / m) / (sxx - sx * sx / m)
-    val b0 = sy / m - b1 * sx / m
+    while (r < n) { both(r) = inA(r) && inB(r); r += 1 }
+    val beta = Gram.local(both, _ => 1.0, 2, design(Array(proxy), intercept = true),
+      Some(y)).solve()
+    val (b0, b1) = (beta(0), beta(1))
     var acc = 0.0
     r = 0
     while (r < n) {
@@ -435,29 +415,10 @@ object LocalSim {
                         inA: Array[Boolean], inB: Array[Boolean],
                         dB: Double, lambda: Array[Double]): Double = {
     val n = y.length
-    val p = aux.length + 1
-    val f = new Array[Double](p)
-    f(0) = 1.0
-    val oXtX = Array.ofDim[Double](p, p)
-    val oXty = new Array[Double](p)
-    var r = 0
-    while (r < n) {
-      if (inA(r)) {
-        var a = 0
-        while (a < aux.length) { f(1 + a) = aux(a)(r); a += 1 }
-        var ii = 0
-        while (ii < p) {
-          oXty(ii) += f(ii) * y(r)
-          var jj = 0
-          while (jj < p) { oXtX(ii)(jj) += f(ii) * f(jj); jj += 1 }
-          ii += 1
-        }
-      }
-      r += 1
-    }
-    val beta = solveAliased(oXtX, oXty)
+    val beta = Gram.local(inA, _ => 1.0, aux.length + 1,
+      design(aux, intercept = true), Some(y)).solveAliased().toArray
     var acc = 0.0
-    r = 0
+    var r = 0
     while (r < n) {
       val yhat = lin(beta(0), beta, 1, aux, r)
       acc += yhat
@@ -465,54 +426,5 @@ object LocalSim {
       r += 1
     }
     acc / n
-  }
-
-  /** Gaussian elimination that DROPS aliased (collinear) columns — the
-    * coefficient is forced to 0, as R's lm reports NA for aliased terms
-    * and predicts without them. */
-  private[mc] def solveAliased(a0: Array[Array[Double]],
-                               b0: Array[Double]): Array[Double] = {
-    val k = b0.length
-    val a = a0.map(_.clone())
-    val b = b0.clone()
-    val dropped = new Array[Boolean](k)
-    val scale = math.max(1e-300, a.map(_.map(math.abs).max).max)
-    var col = 0
-    while (col < k) {
-      var pv = col
-      var r = col + 1
-      while (r < k) { if (math.abs(a(r)(col)) > math.abs(a(pv)(col))) pv = r; r += 1 }
-      if (math.abs(a(pv)(col)) < 1e-9 * scale) {
-        dropped(col) = true
-        // zero the column so back-substitution ignores it
-        r = 0
-        while (r < k) { a(r)(col) = 0.0; r += 1 }
-        a(col)(col) = 1.0; b(col) = 0.0
-      } else {
-        val ta = a(col); a(col) = a(pv); a(pv) = ta
-        val tb = b(col); b(col) = b(pv); b(pv) = tb
-        r = col + 1
-        while (r < k) {
-          val f = a(r)(col) / a(col)(col)
-          var c = col
-          while (c < k) { a(r)(c) -= f * a(col)(c); c += 1 }
-          b(r) -= f * b(col)
-          r += 1
-        }
-      }
-      col += 1
-    }
-    val out = new Array[Double](k)
-    var r2 = k - 1
-    while (r2 >= 0) {
-      if (!dropped(r2)) {
-        var s = b(r2)
-        var c = r2 + 1
-        while (c < k) { s -= a(r2)(c) * out(c); c += 1 }
-        out(r2) = s / a(r2)(r2)
-      }
-      r2 -= 1
-    }
-    out
   }
 }

@@ -111,7 +111,7 @@ object EstimatorOracles {
   private val lamN = Seq("l0", "l1", "l2", "l3")
   private val betaN = Seq("b0", "b1", "b2", "b3")
 
-  /** RegDI calibration rhs: totals − Σw·x (`Calibration.solveLambda`),
+  /** RegDI calibration rhs: totals − Σw·x (`Calibration.lambda`),
     * with totals = (N, Σδᵢ, Σδyᵢ, Σδx₁) (`RegDI.run`'s `totals`). */
   private def regdiRhs(yiTot: String): IndexedSeq[String] = IndexedSeq(
     "(np.n_pop - g.xw_0)", "(tot.t_di - g.xw_1)",

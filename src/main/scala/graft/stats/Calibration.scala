@@ -14,8 +14,9 @@ import graft.core.SurveyDesign
   *   λ = (XᵀDX)⁻¹ (T − Xᵀd),   wᵢ = dᵢ · (1 + xᵢᵀλ)
   * which minimizes the chi-square distance Σ (wᵢ−dᵢ)²/dᵢ subject to
   * Σ wᵢ xᵢ = T. One Gram pass over the design rows (O(k²) partial state per
-  * task), one k×k driver solve, then a codegen'd projection — no iteration,
-  * no data collected to the driver.
+  * task), one k×k driver solve ([[Calibration.lambda]], the one λ solve of
+  * the Spark estimators and the Monte-Carlo kernels), then a codegen'd
+  * projection — no iteration, no data collected to the driver.
   */
 final case class CalibrationInfo(
     xCols: Seq[String],
@@ -54,8 +55,15 @@ object Calibration {
     require(xCols.size == totals.size,
       s"xCols (${xCols.size}) and totals (${totals.size}) differ in length")
     val t = DenseVector(totals.toArray)
-    CalibrationInfo(xCols, g.solve(t - g.xtw), t)
+    CalibrationInfo(xCols, lambda(g, t), t)
   }
+
+  /** The GREG step λ = (XᵀDX)⁻¹(T − Xᵀd) from the design-weighted Gram
+    * `g` of the calibration variables and their population `totals`.
+    * [[solveLambda]] and the Monte-Carlo kernels (`graft.mc.LocalSim`,
+    * whose Gram is [[Gram.local]]) both solve through it. */
+  def lambda(g: GramResult, totals: DenseVector[Double]): DenseVector[Double] =
+    g.solve(totals - g.xtw)
 
   /** The linear-calfun g-weight multiplier `1 + xᵀλ` as a broadcast-λ
     * column; calibrated weight = design weight × this. */

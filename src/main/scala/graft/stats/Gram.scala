@@ -20,6 +20,12 @@ import org.apache.spark.sql.functions._
   * instead comes from per-cell moments ([[Anova.sequential]]). The k×k
   * solve happens on the driver via breeze (`\`), and the solution is
   * broadcast back implicitly as literals in subsequent projections.
+  *
+  * A `GramResult` is the sufficient statistic of every linear fit here:
+  * [[solve]] gives OLS/WLS β and (through [[Calibration.lambda]]) the GREG
+  * λ, [[solveAliased]] the β of a saturated outcome model. The
+  * Monte-Carlo kernels fill the same result from JVM arrays
+  * ([[Gram.local]]) and call the same solves.
   */
 final case class GramResult(
     xtwx: DenseMatrix[Double], // Σ w · x xᵀ   (k×k)
@@ -43,6 +49,55 @@ final case class GramResult(
       val m = IndexedSeq.tabulate(k, k)((i, j) => xtwx(i, j))
       DenseVector(Det.solve(m, IndexedSeq.tabulate(k)(rhs(_))).toArray)
     } else xtwx \ rhs
+  }
+
+  /** Solve (XᵀWX) b = XᵀWy by Gaussian elimination that DROPS aliased
+    * (collinear) columns: a pivot below 1e-9 of the largest |entry|
+    * forces that coefficient to 0, as R's lm reports NA for an aliased
+    * term and predicts without it. */
+  def solveAliased(): DenseVector[Double] = {
+    val k = xtwy.length
+    val a = Array.tabulate(k, k)((i, j) => xtwx(i, j))
+    val b = Array.tabulate(k)(xtwy(_))
+    val dropped = new Array[Boolean](k)
+    val scale = math.max(1e-300, a.map(_.map(math.abs).max).max)
+    var col = 0
+    while (col < k) {
+      var pv = col
+      var r = col + 1
+      while (r < k) { if (math.abs(a(r)(col)) > math.abs(a(pv)(col))) pv = r; r += 1 }
+      if (math.abs(a(pv)(col)) < 1e-9 * scale) {
+        dropped(col) = true
+        // zero the column so back-substitution ignores it
+        r = 0
+        while (r < k) { a(r)(col) = 0.0; r += 1 }
+        a(col)(col) = 1.0; b(col) = 0.0
+      } else {
+        val ta = a(col); a(col) = a(pv); a(pv) = ta
+        val tb = b(col); b(col) = b(pv); b(pv) = tb
+        r = col + 1
+        while (r < k) {
+          val f = a(r)(col) / a(col)(col)
+          var c = col
+          while (c < k) { a(r)(c) -= f * a(col)(c); c += 1 }
+          b(r) -= f * b(col)
+          r += 1
+        }
+      }
+      col += 1
+    }
+    val out = new Array[Double](k)
+    var r2 = k - 1
+    while (r2 >= 0) {
+      if (!dropped(r2)) {
+        var s = b(r2)
+        var c = r2 + 1
+        while (c < k) { s -= a(r2)(c) * out(c); c += 1 }
+        out(r2) = s / a(r2)(r2)
+      }
+      r2 -= 1
+    }
+    DenseVector(out)
   }
 }
 
@@ -172,6 +227,49 @@ object Gram {
       )
     }.toMap
     (results, row)
+  }
+
+  /** Writes row r's features into `f`: one design row of [[local]]. A
+    * trait rather than a function type, so the row index is not boxed. */
+  trait Features { def fill(r: Int, f: Array[Double]): Unit }
+
+  /** One [[momentsMulti]] spec over JVM arrays, for the task-local
+    * Monte-Carlo kernels (`graft.mc.LocalSim`): the rows r with `mask(r)`,
+    * weight `w(r)` (a constant weight is `_ => c`), the `k` features that
+    * `x.fill(r, f)` writes into `f`, and optionally the response `y`.
+    * Plain double sums in row order, not exact-decimal ones, but the same
+    * `(w·xᵢ)·xⱼ` (i ≤ j, mirrored) and `(w·xᵢ)·y` association. No
+    * NULL/complete-case mode: a NaN in a masked row reaches the sums. */
+  def local(mask: Array[Boolean], w: Int => Double, k: Int, x: Features,
+            y: Option[Array[Double]] = None): GramResult = {
+    val xx = Array.ofDim[Double](k, k)
+    val xw = new Array[Double](k)
+    val xy = new Array[Double](k)
+    val f = new Array[Double](k)
+    val ys = y.orNull
+    var sw = 0.0; var swy = 0.0; var swyy = 0.0; var n = 0L
+    var r = 0
+    while (r < mask.length) {
+      if (mask(r)) {
+        val wr = w(r)
+        x.fill(r, f)
+        var i = 0
+        while (i < k) {
+          val wx = wr * f(i)
+          xw(i) += wx
+          var j = i
+          while (j < k) { xx(i)(j) += wx * f(j); j += 1 }
+          if (ys != null) xy(i) += wx * ys(r)
+          i += 1
+        }
+        sw += wr
+        if (ys != null) { val wy = wr * ys(r); swy += wy; swyy += wy * ys(r) }
+        n += 1
+      }
+      r += 1
+    }
+    GramResult(DenseMatrix.tabulate(k, k)((i, j) => xx(math.min(i, j))(math.max(i, j))),
+      DenseVector(xw), DenseVector(xy), sw, swy, swyy, n)
   }
 
   def moments(df: DataFrame, xCols: Seq[String], wCol: Option[String],

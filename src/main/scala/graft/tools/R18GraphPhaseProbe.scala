@@ -33,7 +33,9 @@ object R18GraphPhaseProbe {
 
     // job-level trace: how many Spark jobs each round launches and what
     // each costs — the lever-(a) sizing (per-round job launches)
-    val jobStart = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
+    // boxed values: `remove` of a job whose start was not seen is null,
+    // which the end handler skips (a Scala Long would unbox it to 0)
+    val jobStart = new java.util.concurrent.ConcurrentHashMap[Int, java.lang.Long]()
     spark.sparkContext.addSparkListener(
       new org.apache.spark.scheduler.SparkListener {
         override def onJobStart(

@@ -6,12 +6,13 @@ import graft.SparkSpec
 import graft.estimators.{PC, PCConfig, RegDI, RegDIConfig}
 
 /** Cross-implementation consistency: the DISTRIBUTED estimators
-  * (graft.estimators, exact-decimal Gram aggregates over DataFrames) and
-  * the TASK-LOCAL ones (graft.mc.LocalSim, primitive-array sums) implement
-  * the same closed forms behind the same Cramer solve (`Det.solve`) — on
-  * identical data they must agree to summation precision. One test per
-  * call shape of LocalSim's RegDI kernel and PC combinations pins the
-  * Monte-Carlo harness to the production estimators. */
+  * (graft.estimators, exact-decimal `Gram.momentsMulti` sums over
+  * DataFrames) and the TASK-LOCAL ones (graft.mc.LocalSim, plain-double
+  * `Gram.local` sums over arrays) fill the same `GramResult` and solve it
+  * with the same functions (`Calibration.lambda`, `GramResult.solve`) —
+  * on identical data they must agree to summation precision. One test per
+  * call shape the Monte-Carlo studies run pins the harness to the
+  * production estimators. */
 class CrossImplSuite extends SparkSpec {
   import spark.implicits._
 
@@ -38,15 +39,25 @@ class CrossImplSuite extends SparkSpec {
 
   private lazy val dA = Array.fill(n)(n.toDouble / inA.count(identity))
   private lazy val dB = n.toDouble / inB.count(identity)
-  private def close(local: Double, dist: Double): Unit =
+  private def close(local: Double, dist: Double): Unit = {
+    info(f"|local - dist| = ${math.abs(local - dist)}%.2e")
     assert(math.abs(local - dist) < 1e-9, s"local $local vs dist $dist")
+  }
 
   test("RegDI correction 1: distributed == task-local to 1e-9") {
     val local = LocalSim.regdi(y, y, Array(x1), inA, inB, dA, n)
     val dist = RegDI.oneTable(df, "in_A", "in_B",
       RegDIConfig(yACol = "y_i", yBCol = "y_i", auxVars = Seq("x1_i"),
         correction = 1)).mean
-    assert(math.abs(local - dist) < 1e-9, s"local $local vs dist $dist")
+    close(local, dist)
+  }
+
+  test("RegDI with no aux (sim-1 RegDI, NMAR-v2 RegDI_no_aux): " +
+    "distributed == task-local to 1e-9") {
+    val local = LocalSim.regdi(y, y, Array.empty, inA, inB, dA, n)
+    val dist = RegDI.oneTable(df, "in_A", "in_B",
+      RegDIConfig(yACol = "y_i", yBCol = "y_i", correction = 1)).mean
+    close(local, dist)
   }
 
   test("PC scenario 1 (direct totals): distributed == task-local to 1e-9") {
@@ -56,7 +67,7 @@ class CrossImplSuite extends SparkSpec {
     val dist = PC.oneTable(df, "in_A", "in_B",
       PCConfig(yACol = Some("y_i"), yBCol = Some("y_i"),
         auxVars = Seq("x1_i", "x2_i"), scenario = 1)).estimator
-    assert(math.abs(local - dist) < 1e-9, s"local $local vs dist $dist")
+    close(local, dist)
   }
 
   test("RegDI with per-row A weights and N = sum of d_A: distributed == " +
@@ -101,6 +112,24 @@ class CrossImplSuite extends SparkSpec {
       PCConfig(yACol = Some("y_i"), yBCol = Some("y_i"),
         auxVars = Seq("x1_i", "x2_i"), outcomeModel = Some("y_i ~ ty_i"),
         scenario = 2)).estimator
+    close(local, dist)
+  }
+
+  test("PC scenario 2 with HT totals and a proxy observed on B only " +
+    "(sim-2 PC_X1_II): twoSample == task-local to 1e-9") {
+    val aux = Array(x1, x2)
+    val nHat = dW.sum
+    val dBHat = nHat / inB.count(identity)
+    // R's NA off B: NaN in the arrays, absent from data A in the frames
+    val tyB = Array.tabulate(n)(i => if (inB(i)) ty(i) else Double.NaN)
+    val local = LocalSim.pcModel(y, tyB, aux, inA, inB, dW, dBHat,
+      LocalSim.calB(aux, inB, dBHat, LocalSim.htTotals(aux, inA, dW)), nHat)
+    val dataA = df.filter(col("in_A") === 1).select("id", "y_i", "x1_i", "x2_i", "d_A")
+    val dataB = df.filter(col("in_B") === 1).select("id", "y_i", "x1_i", "x2_i", "ty_i")
+    val dist = PC.twoSample(dataA, dataB, "id", "id",
+      PCConfig(yACol = Some("y_i"), yBCol = Some("y_i"),
+        auxVars = Seq("x1_i", "x2_i"), weightsA = Some("d_A"),
+        outcomeModel = Some("y_i ~ ty_i"), scenario = 2)).estimator
     close(local, dist)
   }
 

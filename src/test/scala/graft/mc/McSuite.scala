@@ -202,5 +202,11 @@ class McSuite extends SparkSpec {
     val reg = intercept[IllegalArgumentException](
       LocalSim.regdi(y, y, aux, inA, inB, Array.fill(n)(4.0), n))
     assert(reg.getMessage.contains("singular system"), reg.getMessage)
+    // one A∩B row (row 0): the scenario-2 fit y ~ 1 + proxy has no slope
+    val oneOverlap = Array.tabulate(n)(i => i == 0 || i % 2 == 1)
+    val model = intercept[IllegalArgumentException](
+      LocalSim.pcModel(y, y, Array.empty, oneOverlap, inB, Array.fill(n)(2.0),
+        dB, Array.empty, n))
+    assert(model.getMessage.contains("singular system"), model.getMessage)
   }
 }

@@ -9,28 +9,86 @@ import graft.core.{FormulaSpec, SurveyDesign}
 class GramSuite extends SparkSpec {
   import spark.implicits._
 
-  private lazy val df = Seq(
-    (1.0, 2.0, 10.0, 1.0),
-    (2.0, 1.0, 20.0, 2.0),
-    (3.0, 4.0, 30.0, 1.5),
-    (4.0, 3.0, 40.0, 0.5)
-  ).toDF("x1", "x2", "y", "w")
+  private val (x1, x2, y, w) = (Array(1.0, 2.0, 3.0, 4.0),
+    Array(2.0, 1.0, 4.0, 3.0), Array(10.0, 20.0, 30.0, 40.0),
+    Array(1.0, 2.0, 1.5, 0.5))
+  private lazy val df = x1.indices.map(r => (x1(r), x2(r), y(r), w(r)))
+    .toDF("x1", "x2", "y", "w")
+
+  /** Gram.local over the same four rows: features `xs`, weight w. */
+  private def local(xs: Seq[Array[Double]], yv: Option[Array[Double]]) =
+    Gram.local(Array.fill(4)(true), w(_), xs.size,
+      (r, f) => xs.indices.foreach(i => f(i) = xs(i)(r)), yv)
 
   test("moments match hand-computed values to 1e-12") {
-    val g = Gram.moments(df, Seq("x1", "x2"), Some("w"), Some("y"))
-    // Σw·x1² = 1+8+13.5+8 = 30.5 ; Σw·x1·x2 = 2+4+18+6 = 30
-    assert(math.abs(g.xtwx(0, 0) - 30.5) < 1e-12)
-    assert(math.abs(g.xtwx(0, 1) - 30.0) < 1e-12)
-    assert(math.abs(g.xtwx(1, 0) - 30.0) < 1e-12)
-    // Σw·x2² = 4+2+24+4.5 = 34.5
-    assert(math.abs(g.xtwx(1, 1) - 34.5) < 1e-12)
-    // Σw·x1 = 1+4+4.5+2 = 11.5 ; Σw·x2 = 2+2+6+1.5 = 11.5
-    assert(math.abs(g.xtw(0) - 11.5) < 1e-12)
-    assert(math.abs(g.xtw(1) - 11.5) < 1e-12)
-    // Σw·x1·y = 10+80+135+80 = 305
-    assert(math.abs(g.xtwy(0) - 305.0) < 1e-12)
-    assert(g.n == 4)
-    assert(math.abs(g.sw - 5.0) < 1e-12)
+    for (g <- Seq(Gram.moments(df, Seq("x1", "x2"), Some("w"), Some("y")),
+                  local(Seq(x1, x2), Some(y)))) {
+      // Σw·x1² = 1+8+13.5+8 = 30.5 ; Σw·x1·x2 = 2+4+18+6 = 30
+      assert(math.abs(g.xtwx(0, 0) - 30.5) < 1e-12)
+      assert(math.abs(g.xtwx(0, 1) - 30.0) < 1e-12)
+      assert(math.abs(g.xtwx(1, 0) - 30.0) < 1e-12)
+      // Σw·x2² = 4+2+24+4.5 = 34.5
+      assert(math.abs(g.xtwx(1, 1) - 34.5) < 1e-12)
+      // Σw·x1 = 1+4+4.5+2 = 11.5 ; Σw·x2 = 2+2+6+1.5 = 11.5
+      assert(math.abs(g.xtw(0) - 11.5) < 1e-12)
+      assert(math.abs(g.xtw(1) - 11.5) < 1e-12)
+      // Σw·x1·y = 10+80+135+80 = 305
+      assert(math.abs(g.xtwy(0) - 305.0) < 1e-12)
+      assert(g.n == 4)
+      assert(math.abs(g.sw - 5.0) < 1e-12)
+    }
+  }
+
+  test("Gram.local equals Gram.moments on 5,000 masked, weighted rows to " +
+    "1e-12 relative") {
+    val n = 5000
+    val xa = Array.tabulate(n)(r => (r + 1) * 0.001 + 0.1)
+    val xb = Array.tabulate(n)(r => (r + 1) % 7 * 1.5)
+    val ya = Array.tabulate(n)(r => (r + 1) * 0.01)
+    val wa = Array.tabulate(n)(r => 1.0 + (r + 1) % 3)
+    val mask = Array.tabulate(n)(r => r % 4 != 1)
+    val frame = (0 until n).map(r => (xa(r), xb(r), ya(r), wa(r), mask(r)))
+      .toDF("xa", "xb", "y", "w", "m")
+    val want = Gram.moments(frame.filter(col("m")),
+      Seq(lit(1.0), col("xa"), col("xb")), col("w"), Some(col("y")))
+    val got = Gram.local(mask, wa(_), 3,
+      (r, f) => { f(0) = 1.0; f(1) = xa(r); f(2) = xb(r) }, Some(ya))
+    def close(what: String, a: Double, b: Double): Unit =
+      assert(math.abs(a - b) <= 1e-12 * math.abs(b), s"$what: local $a vs $b")
+    for (i <- 0 until 3) {
+      for (j <- 0 until 3) close(s"xtwx($i,$j)", got.xtwx(i, j), want.xtwx(i, j))
+      close(s"xtw($i)", got.xtw(i), want.xtw(i))
+      close(s"xtwy($i)", got.xtwy(i), want.xtwy(i))
+    }
+    close("sw", got.sw, want.sw)
+    close("swy", got.swy, want.swy)
+    assert(got.n === want.n)
+  }
+
+  test("solveAliased zeroes one coefficient of a saturated design and fits " +
+    "what y ~ x1 fits, as R's lm does") {
+    val n = 90
+    val d1 = Array.tabulate(n)(r => if (r % 3 == 0) 1.0 else 0.0)
+    val d2 = d1.map(1.0 - _) // d1 + d2 = 1: aliased with the intercept
+    val yv = Array.tabulate(n)(r => 2.0 + 3.0 * d1(r) + (r % 5) * 0.1)
+    val all = Array.fill(n)(true)
+    val sat = Gram.local(all, _ => 1.0, 3,
+      (r, f) => { f(0) = 1.0; f(1) = d1(r); f(2) = d2(r) }, Some(yv)).solveAliased()
+    assert(sat.toArray.count(_ == 0.0) === 1, s"coefficients $sat")
+    val sub = Gram.local(all, _ => 1.0, 2,
+      (r, f) => { f(0) = 1.0; f(1) = d1(r) }, Some(yv)).solve()
+    for (r <- 0 until n) {
+      val got = sat(0) + sat(1) * d1(r) + sat(2) * d2(r)
+      val want = sub(0) + sub(1) * d1(r)
+      assert(math.abs(got - want) < 1e-12, s"row $r: $got vs $want")
+    }
+  }
+
+  test("solveAliased equals solve on a nonsingular system") {
+    val g = local(Seq(Array.fill(4)(1.0), x1, x2), Some(y))
+    val (a, b) = (g.solveAliased(), g.solve())
+    for (i <- 0 until 3)
+      assert(math.abs(a(i) - b(i)) < 1e-12, s"coefficient $i: ${a(i)} vs ${b(i)}")
   }
 
   test("moments are invariant under repartitioning (exact-decimal sums)") {
@@ -71,9 +129,10 @@ class GramSuite extends SparkSpec {
 
   test("y-less Gram specs skip the y aggregates and report zero y " +
     "moments (r15 review)") {
-    val g = Gram.moments(df, Seq("x1"), Some("w"), None)
-    assert(g.swy === 0.0 && g.swyy === 0.0 && g.xtwy(0) === 0.0)
-    assert(g.n === 4L)
+    for (g <- Seq(Gram.moments(df, Seq("x1"), Some("w"), None), local(Seq(x1), None))) {
+      assert(g.swy === 0.0 && g.swyy === 0.0 && g.xtwy(0) === 0.0)
+      assert(g.n === 4L)
+    }
   }
 }
 
