@@ -1,6 +1,6 @@
 package graft.mc
 
-import breeze.linalg.DenseVector
+import scala.collection.immutable.ArraySeq
 
 import graft.stats.{Calibration, Gram}
 
@@ -341,7 +341,7 @@ object LocalSim {
       r += 1
     }
     val lambda =
-      Calibration.lambda(Gram.local(inA, d(_), k, x), DenseVector(t)).toArray
+      Calibration.lambda(Gram.local(inA, d(_), k, x), ArraySeq.unsafeWrapArray(t)).toArray
     // w = d·(((1 + x₀λ₀) + x₁λ₁) + …), Calibration.gWeightFactor's fold
     val f = new Array[Double](k)
     var sw = 0.0; var swy = 0.0
@@ -364,7 +364,7 @@ object LocalSim {
   private[mc] def calB(aux: Array[Array[Double]], inB: Array[Boolean],
                        dB: Double, totals: Array[Double]): Array[Double] =
     Calibration.lambda(Gram.local(inB, _ => dB, aux.length,
-      design(aux, intercept = false)), DenseVector(totals)).toArray
+      design(aux, intercept = false)), ArraySeq.unsafeWrapArray(totals)).toArray
 
   /** PC scenario 1 (`PC.R:240-253`): the calibrated B mean of y. */
   private[mc] def pcMean(y: Array[Double], aux: Array[Array[Double]],

@@ -18,9 +18,8 @@ import graft.util.Tables.{dsum, dvarSamp, load, sqlDsum, sqlDsum18, sqlDvarSamp}
   * variance, and the DR combinations are all CLOSED FORM, every formula
   * is written with the same expression tree in Spark and in SQL over
   * exact-decimal sums — so results are bit-identical and hash-checkable.
-  * (The breeze-solved library versions in graft.stats are covered by
-  * ScalaTest with 1e-10 tolerances instead; a k×k LU solve is not
-  * bit-reproducible in SQL.)
+  * (The library versions in graft.stats are covered by ScalaTest with
+  * 1e-10 tolerances instead.)
   *
   * Scale note (100 TB): every query here is one or two aggregation jobs
   * of O(k²) state plus a codegen'd projection — no data rows ever reach

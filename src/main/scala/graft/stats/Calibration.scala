@@ -1,6 +1,5 @@
 package graft.stats
 
-import breeze.linalg.DenseVector
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -20,8 +19,8 @@ import graft.core.SurveyDesign
   */
 final case class CalibrationInfo(
     xCols: Seq[String],
-    lambda: DenseVector[Double],
-    totals: DenseVector[Double]
+    lambda: IndexedSeq[Double],
+    totals: IndexedSeq[Double]
 )
 
 object Calibration {
@@ -54,7 +53,7 @@ object Calibration {
     require(xCols.nonEmpty, "calibration requires at least one variable")
     require(xCols.size == totals.size,
       s"xCols (${xCols.size}) and totals (${totals.size}) differ in length")
-    val t = DenseVector(totals.toArray)
+    val t = totals.toIndexedSeq
     CalibrationInfo(xCols, lambda(g, t), t)
   }
 
@@ -62,8 +61,11 @@ object Calibration {
     * `g` of the calibration variables and their population `totals`.
     * [[solveLambda]] and the Monte-Carlo kernels (`graft.mc.LocalSim`,
     * whose Gram is [[Gram.local]]) both solve through it. */
-  def lambda(g: GramResult, totals: DenseVector[Double]): DenseVector[Double] =
-    g.solve(totals - g.xtw)
+  def lambda(g: GramResult, totals: IndexedSeq[Double]): IndexedSeq[Double] = {
+    require(totals.length == g.xtw.length,
+      s"${totals.length} totals for ${g.xtw.length} calibration variables")
+    g.solve(totals.indices.map(i => totals(i) - g.xtw(i)))
+  }
 
   /** The linear-calfun g-weight multiplier `1 + xᵀλ` as a broadcast-λ
     * column; calibrated weight = design weight × this. */

@@ -16,9 +16,10 @@ package graft.stats
   * the driver's value-exact correctness gate.
   *
   * Numerics: Cramer expands to O(k!) products and is less robust than
-  * pivoted LU on ill-conditioned systems, so [[GramResult.solve]] uses it
-  * only for k ≤ [[Det.maxCramerK]] (the calibration/OLS designs here have
-  * k ≤ 4) and falls back to breeze LU above that.
+  * pivoted elimination on ill-conditioned systems, so [[GramResult.solve]]
+  * uses it only for k ≤ [[Det.maxCramerK]] (the calibration/OLS designs
+  * here have k ≤ 6) and falls back to partial-pivot Gaussian elimination
+  * above that.
   */
 object Det {
 
@@ -69,20 +70,23 @@ object Det {
     }
   }
 
+  /** The named error of a system with no unique solution. */
+  def requireNonSingular(ok: Boolean, detail: => String): Unit =
+    require(ok, s"singular system ($detail): collinear or constant columns")
+
   /** Cramer's rule: x_j = det(A with column j replaced by rhs) / det(A). */
   def solve[T](a: IndexedSeq[IndexedSeq[T]], rhs: IndexedSeq[T])
               (implicit A: Arith[T]): IndexedSeq[T] = {
     require(a.size == rhs.size, "matrix/rhs size mismatch")
     val d = det(a)
-    // the k > maxCramerK breeze path throws MatrixSingularException; an
-    // unguarded Cramer divide would instead return silent Inf/NaN
-    // coefficients that poison every downstream estimate (r14 review).
+    // an unguarded Cramer divide would return silent Inf/NaN coefficients
+    // that poison every downstream estimate (r14 review); the k >
+    // maxCramerK elimination raises the same error on a zero pivot.
     // T is generic (symbolic renditions build Columns — nothing to test
     // driver-side); the numeric instantiation is guarded here.
     d match {
       case dd: Double =>
-        require(dd != 0.0 && java.lang.Double.isFinite(dd),
-          s"singular system (det = $dd): collinear or constant columns")
+        requireNonSingular(dd != 0.0 && java.lang.Double.isFinite(dd), s"det = $dd")
       case _ => ()
     }
     rhs.indices.map { j =>

@@ -1,6 +1,7 @@
 package graft.stats
 
-import breeze.linalg.{DenseMatrix, DenseVector}
+import scala.collection.immutable.ArraySeq
+
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
@@ -18,8 +19,8 @@ import org.apache.spark.sql.functions._
   * aggregates is planned and compiled per call, so this suits the
   * estimators' narrow designs (k ≤ ~8); a wide factor design (ANOVA)
   * instead comes from per-cell moments ([[Anova.sequential]]). The k×k
-  * solve happens on the driver via breeze (`\`), and the solution is
-  * broadcast back implicitly as literals in subsequent projections.
+  * solve happens on the driver ([[GramResult.solve]]), and the solution
+  * is broadcast back implicitly as literals in subsequent projections.
   *
   * A `GramResult` is the sufficient statistic of every linear fit here:
   * [[solve]] gives OLS/WLS β and (through [[Calibration.lambda]]) the GREG
@@ -28,45 +29,49 @@ import org.apache.spark.sql.functions._
   * ([[Gram.local]]) and call the same solves.
   */
 final case class GramResult(
-    xtwx: DenseMatrix[Double], // Σ w · x xᵀ   (k×k)
-    xtw: DenseVector[Double],  // Σ w · x      (k)
-    xtwy: DenseVector[Double], // Σ w · x · y  (k; zeros when y absent)
-    sw: Double,                // Σ w
-    swy: Double,               // Σ w · y
-    swyy: Double,              // Σ w · y²
-    n: Long                    // row count
+    xtwx: IndexedSeq[IndexedSeq[Double]], // Σ w · x xᵀ   (k×k)
+    xtw: IndexedSeq[Double],              // Σ w · x      (k)
+    xtwy: IndexedSeq[Double],             // Σ w · x · y  (k; zeros when y absent)
+    sw: Double,                           // Σ w
+    swy: Double,                          // Σ w · y
+    swyy: Double,                         // Σ w · y²
+    n: Long                               // row count
 ) {
   /** Solve (XᵀWX) b = XᵀWy — WLS/OLS coefficients. */
-  def solve(): DenseVector[Double] = solve(xtwy)
+  def solve(): IndexedSeq[Double] = solve(xtwy)
   /** Solve (XᵀWX) b = rhs — e.g. calibration λ.
     *
     * k ≤ [[Det.maxCramerK]] uses the deterministic Cramer expansion so the
     * result is the exact expression the SQL oracles evaluate (see [[Det]]);
-    * larger systems fall back to pivoted LU. */
-  def solve(rhs: DenseVector[Double]): DenseVector[Double] = {
-    val k = rhs.length
-    if (k <= Det.maxCramerK) {
-      val m = IndexedSeq.tabulate(k, k)((i, j) => xtwx(i, j))
-      DenseVector(Det.solve(m, IndexedSeq.tabulate(k)(rhs(_))).toArray)
-    } else xtwx \ rhs
-  }
+    * larger systems use [[eliminate]] with no tolerance, which raises
+    * Det's `singular system` error on an exactly zero pivot. */
+  def solve(rhs: IndexedSeq[Double]): IndexedSeq[Double] =
+    if (rhs.length <= Det.maxCramerK) Det.solve(xtwx, rhs)
+    else eliminate(rhs, dropBelow = 0.0)
 
-  /** Solve (XᵀWX) b = XᵀWy by Gaussian elimination that DROPS aliased
-    * (collinear) columns: a pivot below 1e-9 of the largest |entry|
-    * forces that coefficient to 0, as R's lm reports NA for an aliased
-    * term and predicts without it. */
-  def solveAliased(): DenseVector[Double] = {
-    val k = xtwy.length
-    val a = Array.tabulate(k, k)((i, j) => xtwx(i, j))
-    val b = Array.tabulate(k)(xtwy(_))
+  /** Solve (XᵀWX) b = XᵀWy, DROPPING aliased (collinear) columns: a pivot
+    * below 1e-9 of the largest |entry| forces that coefficient to 0, as
+    * R's lm reports NA for an aliased term and predicts without it. */
+  def solveAliased(): IndexedSeq[Double] =
+    eliminate(xtwy, 1e-9 * math.max(1e-300, xtwx.map(_.map(math.abs).max).max))
+
+  /** Gaussian elimination with partial pivoting of (XᵀWX | rhs). A column
+    * whose largest remaining |pivot| is below `dropBelow` gets
+    * coefficient 0; with `dropBelow = 0` nothing is dropped, and an
+    * exactly zero pivot or a non-finite solution raises instead. */
+  private def eliminate(rhs: IndexedSeq[Double], dropBelow: Double): IndexedSeq[Double] = {
+    val k = rhs.length
+    val a = xtwx.map(_.toArray).toArray
+    val b = rhs.toArray
     val dropped = new Array[Boolean](k)
-    val scale = math.max(1e-300, a.map(_.map(math.abs).max).max)
     var col = 0
     while (col < k) {
       var pv = col
       var r = col + 1
       while (r < k) { if (math.abs(a(r)(col)) > math.abs(a(pv)(col))) pv = r; r += 1 }
-      if (math.abs(a(pv)(col)) < 1e-9 * scale) {
+      val p = math.abs(a(pv)(col))
+      if (p < dropBelow || p == 0.0) {
+        Det.requireNonSingular(dropBelow > 0.0, s"zero pivot in column $col")
         dropped(col) = true
         // zero the column so back-substitution ignores it
         r = 0
@@ -97,7 +102,9 @@ final case class GramResult(
       }
       r2 -= 1
     }
-    DenseVector(out)
+    if (dropBelow == 0.0)
+      Det.requireNonSingular(out.forall(java.lang.Double.isFinite), "non-finite solution")
+    ArraySeq.unsafeWrapArray(out)
   }
 }
 
@@ -210,16 +217,13 @@ object Gram {
 
     val results = specs.map { case (p, s) =>
       val k = s.xCols.size
-      val m = DenseMatrix.zeros[Double](k, k)
-      for { i <- 0 until k; j <- i until k } {
-        val v = d(s"${p}_xx_${i}_$j"); m(i, j) = v; m(j, i) = v
-      }
       p -> GramResult(
-        xtwx = m,
-        xtw = DenseVector((0 until k).map(i => d(s"${p}_xw_$i")).toArray),
+        xtwx = ArraySeq.tabulate(k, k)((i, j) =>
+          d(s"${p}_xx_${math.min(i, j)}_${math.max(i, j)}")),
+        xtw = ArraySeq.tabulate(k)(i => d(s"${p}_xw_$i")),
         xtwy =
-          if (s.y.isEmpty) DenseVector.zeros[Double](k)
-          else DenseVector((0 until k).map(i => d(s"${p}_xy_$i")).toArray),
+          if (s.y.isEmpty) ArraySeq.fill(k)(0.0)
+          else ArraySeq.tabulate(k)(i => d(s"${p}_xy_$i")),
         sw = d(s"${p}_sw"),
         swy = if (s.y.isEmpty) 0.0 else d(s"${p}_swy"),
         swyy = if (s.y.isEmpty) 0.0 else d(s"${p}_swyy"),
@@ -268,8 +272,8 @@ object Gram {
       }
       r += 1
     }
-    GramResult(DenseMatrix.tabulate(k, k)((i, j) => xx(math.min(i, j))(math.max(i, j))),
-      DenseVector(xw), DenseVector(xy), sw, swy, swyy, n)
+    GramResult(ArraySeq.tabulate(k, k)((i, j) => xx(math.min(i, j))(math.max(i, j))),
+      ArraySeq.unsafeWrapArray(xw), ArraySeq.unsafeWrapArray(xy), sw, swy, swyy, n)
   }
 
   def moments(df: DataFrame, xCols: Seq[String], wCol: Option[String],
@@ -280,10 +284,9 @@ object Gram {
   /** Linear predictor `b0? + Σ bᵢ·termᵢ` as a Column (broadcast-β score,
     * `RegDI2.R:212`, `PC.R:280-283`). `beta` is laid out intercept-first
     * when `intercept` is true. */
-  def linearPredictor(terms: Seq[String], beta: DenseVector[Double],
+  def linearPredictor(terms: Seq[String], beta: IndexedSeq[Double],
                       intercept: Boolean): Column = {
-    val (b0, bs) =
-      if (intercept) (beta(0), beta.toArray.drop(1)) else (0.0, beta.toArray)
+    val (b0, bs) = if (intercept) (beta(0), beta.drop(1)) else (0.0, beta)
     terms.zip(bs).foldLeft(lit(b0): Column) { case (acc, (t, b)) =>
       acc + col(t) * lit(b)
     }

@@ -1,6 +1,5 @@
 package graft.stats
 
-import breeze.linalg.{norm, DenseVector}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -17,7 +16,7 @@ import graft.core.FormulaSpec
   */
 final case class LogisticFit(
     spec: FormulaSpec,
-    beta: DenseVector[Double],
+    beta: IndexedSeq[Double],
     iterations: Int,
     converged: Boolean
 ) {
@@ -43,7 +42,7 @@ object Logistic {
     // re-reading (and re-filtering) the source per iteration
     val work = df.select((respName +: spec.terms).distinct.map(col): _*).cache()
     try {
-      var beta = DenseVector.zeros[Double](k)
+      var beta = IndexedSeq.fill(k)(0.0)
       var iter = 0
       var converged = false
       while (iter < maxIter && !converged) {
@@ -59,7 +58,8 @@ object Logistic {
         // (XtWX keeps it) — silently shrunk coefficients (r15)
         val g = Gram.moments(work, xs, w, Some(z), completeCase = true)
         val newBeta = g.solve()
-        converged = norm(newBeta - beta) < tol
+        val step = beta.indices.map { i => val d = newBeta(i) - beta(i); d * d }
+        converged = math.sqrt(step.sum) < tol
         beta = newBeta
         iter += 1
       }

@@ -1,6 +1,5 @@
 package graft.stats
 
-import breeze.linalg.DenseVector
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -13,24 +12,23 @@ import graft.core.FormulaSpec
   */
 final case class OlsFit(
     spec: FormulaSpec,
-    beta: DenseVector[Double],
+    beta: IndexedSeq[Double],
     n: Long
 ) {
   /** Score new data: ŷ = β₀ + Σ βⱼ xⱼ with broadcast coefficients
     * (`predict(model, newdata)`, `RegDI2.R:212`). */
   def predict: Column = Gram.linearPredictor(spec.terms, beta, spec.intercept)
-  def coef(term: String): Double = {
-    val off = if (spec.intercept) 1 else 0
-    if (term == "(Intercept)") { require(spec.intercept); beta(0) }
-    else {
-      // indexOf(-1) + off would silently return the intercept (or,
-      // without one, breeze's negative indexing returns the LAST
-      // coefficient) — a plausible wrong number for a typo'd term
+  def coef(term: String): Double =
+    if (term == "(Intercept)") {
+      require(spec.intercept, "coef: the model has no intercept")
+      beta(0)
+    } else {
+      // indexOf(-1) + 1 would silently return the intercept — a
+      // plausible wrong number for a typo'd term
       val i = spec.terms.indexOf(term)
       require(i >= 0, s"unknown term '$term'; terms: ${spec.terms.mkString(", ")}")
-      beta(i + off)
+      beta(if (spec.intercept) i + 1 else i)
     }
-  }
 }
 
 final case class FitMetrics(rmse: Double, r2: Double)

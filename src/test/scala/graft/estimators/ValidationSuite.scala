@@ -205,6 +205,12 @@ class ValidationSuite extends SparkSpec {
       graft.core.FormulaSpec.parse("y ~ x1"))
     val e3 = intercept[IllegalArgumentException] { fit.coef("x9") }
     assert(e3.getMessage.contains("unknown term"), e3.getMessage)
+    val noIntercept = graft.stats.Ols.fit(df,
+      graft.core.FormulaSpec.parse("y ~ 0 + x1"))
+    val e3b = intercept[IllegalArgumentException] {
+      noIntercept.coef("(Intercept)")
+    }
+    assert(e3b.getMessage.contains("no intercept"), e3b.getMessage)
     // constant y_B over the overlap: singular Gram, NaN betas — raise
     val pop = Seq(
       (1L, Some(1.0), Some(5.0), 1.0), (2L, Some(2.0), Some(5.0), 1.0),

@@ -118,8 +118,8 @@ class AnovaSuite extends SparkSpec {
     val g = Gram.moments(df, lit(1.0) +: blocks.flatMap(_._2), lit(1.0),
       Some(col("y")))
     def rss(p: Int): Double = {
-      val sub = g.xtwx(0 until p, 0 until p).toDenseMatrix
-      val rhs = g.xtwy(0 until p).toDenseVector
+      val sub = breeze.linalg.DenseMatrix.tabulate(p, p)(g.xtwx(_)(_))
+      val rhs = breeze.linalg.DenseVector(g.xtwy.take(p).toArray)
       g.swyy - ((sub \ rhs) dot rhs)
     }
     val refRss = blocks.scanLeft(1)(_ + _._2.size).map(rss)

@@ -37,7 +37,7 @@ class PropertySuite extends SparkSpec {
           Some(col("y")))
         val g7 = Gram.moments(df.repartition(7), Seq(col("x")), col("w"),
           Some(col("y")))
-        assert(g1.xtwx(0, 0) === g7.xtwx(0, 0))
+        assert(g1.xtwx(0)(0) === g7.xtwx(0)(0))
         assert(g1.xtwy(0) === g7.xtwy(0))
         assert(g1.sw === g7.sw)
       }
@@ -80,11 +80,11 @@ class PropertySuite extends SparkSpec {
             "ols" -> GramSpec(Seq(lit(1.0), col("x")), y = Some(col("y")))),
           Seq(graft.util.Tables.dsum(col("w")).as("sw_all")))
         val fCal = grams("cal"); val fOls = grams("ols")
-        assert(fCal.xtwx(0, 0) === gCal.xtwx(0, 0))
+        assert(fCal.xtwx(0)(0) === gCal.xtwx(0)(0))
         assert(fCal.xtwy(0) === gCal.xtwy(0))
         assert(fCal.sw === gCal.sw)
         assert(fCal.n === gCal.n)
-        assert(fOls.xtwx(0, 1) === gOls.xtwx(0, 1))
+        assert(fOls.xtwx(0)(1) === gOls.xtwx(0)(1))
         assert(fOls.xtwy(1) === gOls.xtwy(1))
         assert(fOls.n === gOls.n)
         val swAll = df.agg(graft.util.Tables.dsum(col("w"))).head().getDouble(0)

@@ -1,6 +1,6 @@
 package graft.stats
 
-import breeze.linalg.DenseVector
+import breeze.linalg.{DenseMatrix, DenseVector}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -24,11 +24,11 @@ class GramSuite extends SparkSpec {
     for (g <- Seq(Gram.moments(df, Seq("x1", "x2"), Some("w"), Some("y")),
                   local(Seq(x1, x2), Some(y)))) {
       // Σw·x1² = 1+8+13.5+8 = 30.5 ; Σw·x1·x2 = 2+4+18+6 = 30
-      assert(math.abs(g.xtwx(0, 0) - 30.5) < 1e-12)
-      assert(math.abs(g.xtwx(0, 1) - 30.0) < 1e-12)
-      assert(math.abs(g.xtwx(1, 0) - 30.0) < 1e-12)
+      assert(math.abs(g.xtwx(0)(0) - 30.5) < 1e-12)
+      assert(math.abs(g.xtwx(0)(1) - 30.0) < 1e-12)
+      assert(math.abs(g.xtwx(1)(0) - 30.0) < 1e-12)
       // Σw·x2² = 4+2+24+4.5 = 34.5
-      assert(math.abs(g.xtwx(1, 1) - 34.5) < 1e-12)
+      assert(math.abs(g.xtwx(1)(1) - 34.5) < 1e-12)
       // Σw·x1 = 1+4+4.5+2 = 11.5 ; Σw·x2 = 2+2+6+1.5 = 11.5
       assert(math.abs(g.xtw(0) - 11.5) < 1e-12)
       assert(math.abs(g.xtw(1) - 11.5) < 1e-12)
@@ -56,7 +56,7 @@ class GramSuite extends SparkSpec {
     def close(what: String, a: Double, b: Double): Unit =
       assert(math.abs(a - b) <= 1e-12 * math.abs(b), s"$what: local $a vs $b")
     for (i <- 0 until 3) {
-      for (j <- 0 until 3) close(s"xtwx($i,$j)", got.xtwx(i, j), want.xtwx(i, j))
+      for (j <- 0 until 3) close(s"xtwx($i,$j)", got.xtwx(i)(j), want.xtwx(i)(j))
       close(s"xtw($i)", got.xtw(i), want.xtw(i))
       close(s"xtwy($i)", got.xtwy(i), want.xtwy(i))
     }
@@ -89,6 +89,39 @@ class GramSuite extends SparkSpec {
     val (a, b) = (g.solveAliased(), g.solve())
     for (i <- 0 until 3)
       assert(math.abs(a(i) - b(i)) < 1e-12, s"coefficient $i: ${a(i)} vs ${b(i)}")
+  }
+
+  test("solve above k = 6 (partial-pivot elimination) matches a breeze LU " +
+    "to 1e-10 relative on a well-conditioned k = 8 system") {
+    val n = 400
+    // near-orthogonal cosine features; y = Σ (i+1)·fᵢ + noise, so no
+    // coefficient is near 0 and a relative check is meaningful
+    val feats = Array.tabulate(n, 8)((r, i) =>
+      if (i == 0) 1.0 else math.cos(0.37 * i * r + i))
+    val yv = Array.tabulate(n)(r =>
+      (0 until 8).map(i => (i + 1) * feats(r)(i)).sum + 0.1 * math.sin(r))
+    val g = Gram.local(Array.fill(n)(true), r => 1.0 + r % 3, 8,
+      (r, f) => feats(r).copyToArray(f), Some(yv))
+    val got = g.solve()
+    val want = DenseMatrix.tabulate(8, 8)(g.xtwx(_)(_)) \ DenseVector(g.xtwy.toArray)
+    for (i <- 0 until 8)
+      assert(math.abs(got(i) - want(i)) <= 1e-10 * math.abs(want(i)),
+        s"coefficient $i: ${got(i)} vs breeze ${want(i)}")
+  }
+
+  test("a k = 7 Gram with a duplicated column raises Det's singular-system " +
+    "error") {
+    // unit weights keep the two columns' rows of XᵀX bit-identical, and
+    // identical rows stay identical under the same row operations, so the
+    // elimination meets an exactly zero pivot
+    val n = 400
+    val g = Gram.local(Array.fill(n)(true), _ => 1.0, 7, (r, f) => {
+      f(0) = 1.0
+      for (i <- 1 until 6) f(i) = math.cos(0.37 * i * r + i)
+      f(6) = f(3)
+    }, Some(Array.tabulate(n)(r => math.sin(0.1 * r))))
+    val e = intercept[IllegalArgumentException](g.solve())
+    assert(e.getMessage.contains("singular system"), e.getMessage)
   }
 
   test("moments are invariant under repartitioning (exact-decimal sums)") {
@@ -231,6 +264,9 @@ class LogisticSuite extends SparkSpec {
       .withColumn("yb", (col("u") < col("p")).cast("double"))
     val fit = Logistic.fit(df, FormulaSpec.parse("yb ~ x"))
     assert(fit.converged, s"IRLS did not converge in ${fit.iterations} iters")
+    // the stopping rule ‖βₙ₊₁ − βₙ‖₂ < 1e-9, pinned at its recorded outcome
+    assert(fit.iterations === 6)
+    assert(fit.converged === true)
     // score: Σ (y − p̂)·x_j ≈ 0 for each covariate (incl. intercept)
     val phat = fit.predict
     val sc = df.agg(
