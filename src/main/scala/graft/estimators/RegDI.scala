@@ -191,12 +191,12 @@ object RegDI {
       aux: Seq[String],
       totals: Seq[Double]
   ): RegDIResult = {
-    val fit = Ols.fitFromGram(FormulaSpec(Some(yA), Seq(yB), intercept = true), meGram)
-    // Guard BEFORE touching the coefficients: a degenerate overlap makes
-    // the Cramer solve emit NaN betas, and the clean contract message must
-    // surface ahead of any NaN-poisoned arithmetic.
-    require(fit.n >= 2,
+    // Guard BEFORE the solve: a one-row overlap makes the Gram singular,
+    // and the contract message must surface ahead of Det's generic
+    // singular-system error.
+    require(meGram.n >= 2,
       "Not enough validation data in sample A for the measurement-error model")
+    val fit = Ols.fitFromGram(FormulaSpec(Some(yA), Seq(yB), intercept = true), meGram)
     val (b0, b1) = (fit.beta(0), fit.beta(1))
     // a SINGULAR overlap Gram (constant y_B across A∩B) passes n >= 2
     // but Cramer emits NaN betas — and a near-zero slope turns the

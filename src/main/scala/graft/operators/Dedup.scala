@@ -9,7 +9,8 @@ import org.apache.spark.sql.functions._
   * (nearDuplicates, simhashBandedPairs, editDistance1Pairs,
   * corpusOverlap) pin their signature frames via
   * `graft.util.QueryLeases` — MEMORY_AND_DISK Dataset caches that are
-  * NOT ContextCleaner-reclaimed. The harnesses drain them per query;
+  * NOT ContextCleaner-reclaimed — and connectedComponents leases its
+  * result generation the same way. The harnesses drain them per query;
   * long-lived non-harness callers must call
   * `QueryLeases.releaseAll()` after materializing results, or each
   * invocation leaves cache entries resident.
@@ -346,30 +347,30 @@ object Dedup {
     * a 4000-hop path included — in logarithmically many rounds.
     * Min-labels make the output deterministic under any partitioning.
     *
-    * Per-round resource discipline (r18 rendition, shared with the
-    * [[Graphs.truncated]] kernels): each generation is a
-    * lineage-TRUNCATED local checkpoint re-wrapped as a fresh
-    * `LogicalRDD` frame, so (a) the LOGICAL plan stays one round deep —
-    * the naive loop's plan doubles per round because `labels` appears
-    * twice (join + union) and explodes exponentially with graph
-    * diameter — (b) the superseded generation's blocks are explicitly
-    * unpersisted instead of lingering until a GC-triggered cleaner
-    * pass, and (c) the RDD lineage does NOT grow per round: the old
-    * `df.rdd.persist` rewrap shipped a task binary that carried the
-    * whole upstream plan (the LSH pair pipeline!) plus one lineage
-    * level per round — the measured per-round fixed cost of every
-    * fixpoint loop here. Fault model: a truncated generation is not
-    * recomputable — in local mode block loss is process death; on a
-    * production cluster set a checkpoint dir in the wrapping job.
+    * Per-round resource discipline (shared with the [[Graphs]] kernels
+    * through one [[Rounds]] scope): each generation is a
+    * lineage-TRUNCATED checkpoint re-wrapped as a fresh `LogicalRDD`
+    * frame, so (a) the LOGICAL plan stays one round deep — the naive
+    * loop's plan doubles per round because `labels` appears twice
+    * (join + union) and explodes exponentially with graph diameter —
+    * (b) the superseded generation's blocks are released at once
+    * instead of lingering until a GC-triggered cleaner pass, and (c)
+    * the RDD lineage does NOT grow per round: the old `df.rdd.persist`
+    * rewrap shipped a task binary that carried the whole upstream plan
+    * (the LSH pair pipeline!) plus one lineage level per round — the
+    * measured per-round fixed cost of every fixpoint loop here. Fault
+    * model: generations are local checkpoints, which a lost executor
+    * block fails (in local mode block loss is process death); when the
+    * session's SparkContext has a checkpoint dir they are reliable
+    * checkpoints, re-read from the dir after a loss.
     *
-    * Returns (id, cluster) where cluster = min reachable id. The final
-    * generation stays checkpoint-persisted at the RDD level (node-sized
-    * — two longs per node), which a Dataset-level `.unpersist()` on the
-    * returned frame can NOT release; the blocks are reclaimed by
-    * Spark's ContextCleaner once the frame is unreferenced, so a
-    * long-lived session holds at most the generations still reachable
-    * from live results. All internal intermediate generations (hash-min
-    * rounds, star generations) are unpersisted before returning. */
+    * Returns (id, cluster) where cluster = min reachable id, a LAZY
+    * frame over the final generation, which stays stored (node-sized —
+    * two longs per node) until the next `QueryLeases.releaseAll()`:
+    * call it once whatever reads the result is materialized (the
+    * harnesses do after every query). Every other generation (hash-min
+    * rounds, star generations, the edge set) is released before
+    * returning, and on failure too. */
   def connectedComponents(pairs: DataFrame, idA: String = "id_a",
                           idB: String = "id_b",
                           hashMinRounds: Int = 12,
@@ -384,76 +385,70 @@ object Dedup {
           s"${pairs.schema(c).dataType.simpleString}); hash or cast " +
           "string ids to long first")
     }
-    // truncated, not cached: every round's task binary would otherwise
-    // carry the whole upstream pairs plan (see the scaladoc)
-    val (edges, edgesRdd) = Graphs.truncated(
-      pairs.select(col(idA).as("src"), col(idB).as("dst"))
-        .union(pairs.select(col(idB).as("src"), col(idA).as("dst")))
-        .distinct())
-    // Self-loops carry no connectivity but their nodes must still be
-    // labeled. The hash-min path labels them natively (a (u,u) edge
-    // seeds u's own label), but starContraction's hi>lo
-    // canonicalization drops them — so the FALLBACK path patches
-    // self-loop-only nodes back with (id, id) labels. Both self-node
-    // discovery and the anti-join read the CACHED edges, never the
-    // (potentially expensive) upstream `pairs` pipeline, and the
-    // common path pays nothing.
-    def withSelfLabels(labels: DataFrame): DataFrame = {
-      val selfOnly = edges.filter(col("src") === col("dst"))
-        .select(col("src").cast("long").as("id"))
-        .join(labels.select("id"), Seq("id"), "left_anti")
-        .select(col("id"), col("id").as("cluster"))
-      labels.unionByName(selfOnly)
+    Rounds(pairs.sparkSession) { r =>
+      // truncated, not cached: every round's task binary would otherwise
+      // carry the whole upstream pairs plan (see the scaladoc)
+      val edges = r.truncate(
+        pairs.select(col(idA).as("src"), col(idB).as("dst"))
+          .union(pairs.select(col(idB).as("src"), col(idA).as("dst")))
+          .distinct())
+      // Self-loops carry no connectivity but their nodes must still be
+      // labeled. The hash-min path labels them natively (a (u,u) edge
+      // seeds u's own label), but starContraction's hi>lo
+      // canonicalization drops them — so the FALLBACK path patches
+      // self-loop-only nodes back with (id, id) labels. Both self-node
+      // discovery and the anti-join read the STORED edges, never the
+      // (potentially expensive) upstream `pairs` pipeline, and the
+      // common path pays nothing.
+      def withSelfLabels(labels: DataFrame): DataFrame = {
+        val selfOnly = edges.filter(col("src") === col("dst"))
+          .select(col("src").cast("long").as("id"))
+          .join(labels.select("id"), Seq("id"), "left_anti")
+          .select(col("id"), col("id").as("cluster"))
+        labels.unionByName(selfOnly)
+      }
+      var labels = r.truncate(
+        edges.select(col("src").as("id"), col("src").as("cluster")).distinct())
+      // node count for the Graphs.bcastIfSmall gate (the r17 lever, same
+      // per-round shape as the graph censuses: stored edges joined with
+      // a stats-less node-sized frame planned as an edge-sized exchange
+      // every round). Constant across rounds — the label frame stays
+      // keyed by the same id set; this count also pre-materializes the
+      // seed (and edges) round 1 reads.
+      val nLabels = r.count(labels)
+      var converged = false
+      var i = 0
+      while (!converged && i < math.min(hashMinRounds, maxIter)) {
+        val fromNeighbors = edges
+          .join(Graphs.bcastIfSmall(labels.withColumnRenamed("id", "dst"),
+            nLabels), "dst")
+          .select(col("src").as("id"), col("cluster"))
+        val next = r.truncate(
+          labels.union(fromNeighbors)
+            .groupBy("id").agg(min("cluster").as("cluster")))
+        // min-labels only ever decrease, so "changed" ⇔ strictly smaller;
+        // this count also materializes `next` before the old blocks go
+        val changed = next.as("n").join(labels.as("o"), "id")
+          .filter(col("n.cluster") < col("o.cluster")).count()
+        r.release(labels)
+        labels = next
+        converged = changed == 0
+        i += 1
+      }
+      // hash-min labels are complete: (u,u) edges seed self-labels
+      if (converged) r.handOff(labels)
+      else {
+        // Diameter exceeded the hash-min budget: contract with the
+        // star algorithm instead (identical output — min reachable id).
+        r.release(labels)
+        // materialize the patched labels WHILE edges and the star
+        // generation are still stored — the self-label branch reads
+        // edges, and releasing either first would fail the
+        // truncated-checkpoint read on consumption
+        r.handOff(r.materialize(
+          withSelfLabels(starLabels(starFixpoint(r, edges, maxIter))))._1)
+      }
     }
-    var (labels, labelsRdd) = Graphs.truncated(
-      edges.select(col("src").as("id"), col("src").as("cluster")).distinct())
-    // node count for the Graphs.bcastIfSmall gate (the r17 lever, same
-    // per-round shape as the graph censuses: cached edges joined with a
-    // stats-less node-sized frame planned as an edge-sized exchange
-    // every round). Constant across rounds — the label frame stays
-    // keyed by the same id set; this count also pre-materializes the
-    // seed (and edges) round 1 reads.
-    val nLabels = labelsRdd.count()
-    var converged = false
-    var i = 0
-    while (!converged && i < math.min(hashMinRounds, maxIter)) {
-      val fromNeighbors = edges
-        .join(Graphs.bcastIfSmall(labels.withColumnRenamed("id", "dst"),
-          nLabels), "dst")
-        .select(col("src").as("id"), col("cluster"))
-      val (next, nextRdd) = Graphs.truncated(
-        labels.union(fromNeighbors)
-          .groupBy("id").agg(min("cluster").as("cluster")))
-      // min-labels only ever decrease, so "changed" ⇔ strictly smaller;
-      // this count also materializes `next` before the old blocks go
-      val changed = next.as("n").join(labels.as("o"), "id")
-        .filter(col("n.cluster") < col("o.cluster")).count()
-      labelsRdd.unpersist(blocking = false)
-      labelsRdd = nextRdd
-      labels = next
-      converged = changed == 0
-      i += 1
-    }
-    if (!converged) {
-      // Diameter exceeded the hash-min budget: contract with the
-      // star algorithm instead (identical output — min reachable id).
-      labelsRdd.unpersist(blocking = false)
-      val (starLabels, starRdd) = starContractionWithHandle(edges, maxIter)
-      val patched = withSelfLabels(starLabels)
-      // materialize the patched labels WHILE edges is still live —
-      // the self-label branch reads edges, and unpersisting first
-      // would fail the truncated-checkpoint read on consumption
-      val (result, resultRdd) = Graphs.truncated(patched)
-      resultRdd.count()
-      // the star generation fed `patched` — once the patched labels are
-      // materialized above it is dead weight, and leaving it pinned
-      // would leak one edge-set-sized RDD per fallback call (r15 review)
-      starRdd.unpersist(blocking = false)
-      edgesRdd.unpersist(blocking = false)
-      return result
-    }
-    edgesRdd.unpersist(blocking = false)
-    labels // hash-min labels are complete: (u,u) edges seed self-labels
   }
 
   /** Large-star/small-star connected components (Kiveris et al.,
@@ -470,19 +465,30 @@ object Dedup {
     * REGARDLESS of graph diameter — the fallback hash-min needs
     * O(diameter) rounds. Each round is one groupBy-min plus one
     * equi-join over narrow (long, long) rows, then distinct; the same
-    * per-generation RDD persist/unpersist discipline as hash-min keeps
-    * the logical plan one round deep.
+    * per-generation [[Rounds]] discipline as hash-min keeps the logical
+    * plan one round deep.
     *
     * `edges` must be the symmetric distinct (src, dst) relation.
     * Returns (id, cluster = min reachable id) — a LAZY frame over the
-    * final star generation, whose persisted backing RDD the caller owns
-    * (materialize downstream, then unpersist the handle). */
+    * final star generation, stored until the next
+    * `QueryLeases.releaseAll()` (as [[connectedComponents]]' result). */
   private[operators] def starContraction(edges: DataFrame,
                                          maxIter: Int = 50): DataFrame =
-    starContractionWithHandle(edges, maxIter)._1
+    Rounds(edges.sparkSession) { r =>
+      starLabels(r.handOff(starFixpoint(r, edges, maxIter)))
+    }
 
-  private def starContractionWithHandle(edges: DataFrame, maxIter: Int)
-      : (DataFrame, org.apache.spark.rdd.RDD[_]) = {
+  /** At the fixpoint every non-min node appears as exactly one (hi →
+    * component min) star edge; minima label themselves. */
+  private def starLabels(star: DataFrame): DataFrame =
+    star.select(col("hi").as("id"), col("lo").as("cluster"))
+      .union(star.select(col("lo").as("id"), col("lo").as("cluster")))
+      .groupBy("id").agg(min("cluster").as("cluster"))
+
+  /** The star rounds, each generation stored in `r` and the previous
+    * one released; returns the fixpoint generation (hi, lo). */
+  private def starFixpoint(r: Rounds, edges: DataFrame, maxIter: Int)
+      : DataFrame = {
     def largeStar(cur: DataFrame): DataFrame = {
       val sym = cur.select(col("hi").as("u"), col("lo").as("v"))
         .union(cur.select(col("lo").as("u"), col("hi").as("v")))
@@ -502,30 +508,23 @@ object Dedup {
         .distinct()
     }
 
-    var (cur, curRdd) = Graphs.truncated(
+    var (cur, curCount) = r.materialize(
       edges.filter(col("src") > col("dst"))
         .select(col("src").as("hi"), col("dst").as("lo")))
-    var curCount = curRdd.count()
     var converged = false
     var i = 0
     while (!converged && i < maxIter) {
-      val (next, nextRdd) = Graphs.truncated(smallStar(largeStar(cur)))
-      val nextCount = nextRdd.count()
+      val (next, nextCount) = r.materialize(smallStar(largeStar(cur)))
       // both sides are distinct sets: equal counts + empty (next \ cur)
       // ⇔ identical edge sets ⇔ a fixpoint of both star rounds
       converged = nextCount == curCount &&
         next.join(cur, Seq("hi", "lo"), "left_anti").isEmpty
-      curRdd.unpersist(blocking = false)
-      cur = next; curRdd = nextRdd; curCount = nextCount
+      r.release(cur)
+      cur = next; curCount = nextCount
       i += 1
     }
     require(converged, s"starContraction: no fixpoint in $maxIter rounds")
-    // at the fixpoint every non-min node appears as exactly one (hi →
-    // component min) star edge; minima label themselves
-    (cur.select(col("hi").as("id"), col("lo").as("cluster"))
-      .union(cur.select(col("lo").as("id"), col("lo").as("cluster")))
-      .groupBy("id").agg(min("cluster").as("cluster")),
-      curRdd)
+    cur
   }
 
   // ---- exact dedup --------------------------------------------------

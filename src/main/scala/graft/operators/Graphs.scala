@@ -21,11 +21,16 @@ import graft.util.Tables.dsum
   * degree-annotated edges (both hash-partitioned on the source key —
   * co-partitioned after round 1, so AQE reuses the layout) plus one
   * partial-aggregable dst-keyed sum. The node list and N ride a
-  * broadcast. For production iteration counts, persist `edges` up
-  * front and checkpoint the rank frame every ~10 rounds (same
-  * LogicalRDD re-wrap recipe as connectedComponents) — with a FIXED
-  * small iteration count the lazy 1-round-per-level plan is linear and
-  * fine as-is.
+  * broadcast. The lazy renditions ([[pageRank]], [[hits]], [[bfsHops]])
+  * suit the suites' few-round fixtures; the eager kernels run every
+  * round in a [[Rounds]] scope, which truncates each round's lineage
+  * and releases every round it stored, on success and on failure.
+  *
+  * Fault model (the [[Rounds]] truncation rule): rounds are local
+  * checkpoints by default, so a lost executor block fails the query;
+  * when the session's SparkContext has a checkpoint dir they are
+  * reliable checkpoints, re-read from the dir after a loss and deleted
+  * from it when released.
   */
 object Graphs {
 
@@ -67,54 +72,6 @@ object Graphs {
         nodes, withN)
     pr
   }
-
-  /** Materialize a frame as a LINEAGE-TRUNCATED local checkpoint and
-    * re-wrap it as a fresh LogicalRDD — the r18 replacement for the
-    * old `df.rdd.persist + createDataFrame` rewrap, which kept the
-    * logical plan one round deep but let the RDD lineage (and with it
-    * every task's serialized binary) grow per round. Measured at
-    * sf0.01 (R18RoundAnatomy): the un-truncated loop ships a ~1.5 MiB
-    * task binary EVERY round — the serialized closure carries the
-    * whole base-build plan (parquet relations, Hadoop conf, codegen)
-    * plus one lineage level per round — costing 100–400 ms of pure
-    * per-task deserialization on EMPTY data (the per-round fixed cost
-    * that dominated the graph family at sf0.1), and a
-    * StackOverflowError past ~49 rounds as serialization recursed the
-    * chain. With truncation the binary stays a few KiB and per-round
-    * wall time drops ~3× at sf0.01 (data-bound at larger SFs).
-    *
-    * Semantics: identical rows (the checkpoint copies each InternalRow
-    * — no Row↔InternalRow round-trip, one conversion FEWER than the
-    * old rewrap). Fault model: an executor-local checkpoint is not
-    * recomputable — a lost block fails the query instead of replaying
-    * lineage. In local mode (the bench/driver contract) block loss is
-    * process death; on a production cluster, set a checkpoint dir and
-    * the anchor logic in [[pageRankTopK]] writes reliable checkpoints
-    * instead.
-    *
-    * Caller materializes with `handle.count()` (one single-stage job —
-    * the old SQL `df.count()` planned a 2-stage partial/final agg per
-    * round) and owns `handle.unpersist()`, which must only happen
-    * AFTER every live consumer frame is itself materialized:
-    * truncation makes dropped blocks unrecoverable. */
-  private[operators] def truncated(df: DataFrame)
-      : (DataFrame, org.apache.spark.rdd.RDD[_]) = {
-    val ck = df.localCheckpoint(eager = false)
-    (ck, internalRdd(ck))
-  }
-
-  /** The internal (InternalRow) RDD backing a checkpointed frame — the
-    * unpersist handle Dataset-level APIs don't expose (a checkpoint is
-    * not in the cache manager, so `Dataset.unpersist` is a no-op on
-    * it, and `df.rdd` would wrap a NEW converted RDD whose unpersist
-    * frees nothing). */
-  private[operators] def internalRdd(ck: DataFrame)
-      : org.apache.spark.rdd.RDD[_] =
-    ck.queryExecution.analyzed.collectFirst {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-    }.getOrElse(throw new IllegalStateException(
-      "checkpointed frame did not analyze to a LogicalRDD: " +
-        ck.queryExecution.analyzed.getClass.getName))
 
   /** The broadcast decision the optimizer cannot make for the
     * iterative kernels here: each round's node-sized frame (ranks,
@@ -179,149 +136,77 @@ object Graphs {
 
   /** [[pageRank]] + top-k extraction with the iteration-friendly
     * resource shape: the degree-annotated edge frame and the node list
-    * are persisted ONCE (the lazy unrolled plan re-expands both
-    * subtrees every round — at 5 rounds that is 5× the edge-build
+    * are truncated and stored ONCE (the lazy unrolled plan re-expands
+    * both subtrees every round — at 5 rounds that is 5× the edge-build
     * join), each round is materialized and re-wrapped as a fresh
-    * LogicalRDD (the connectedComponents recipe — the lazy chain
-    * re-optimizes the whole remaining tree at every adaptive stage, an
-    * O(iters²) optimizer bill), the k highest-ranked nodes are
-    * collected (k rows — driver-sized by contract), and every cache is
-    * dropped before returning a local relation. Same eager
-    * materialize-then-unpersist discipline as
-    * AnnQueries.withExactRecall: a long-lived session accumulates
+    * LogicalRDD (the lazy chain re-optimizes the whole remaining tree at
+    * every adaptive stage, an O(iters²) optimizer bill), the k
+    * highest-ranked nodes are collected (k rows — driver-sized by
+    * contract), and the [[Rounds]] scope drops every stored round before
+    * returning a local relation: a long-lived session accumulates
     * nothing. Ranks are identical to the lazy path — GraphsSuite pins
     * it.
     *
     * `symmetrizeInput = true` treats `edges` as a DIRECTED edge list
-    * and unions both directions AFTER persisting it — a lazy
+    * and unions both directions AFTER truncating it — a lazy
     * `symmetrize(expensiveBuild)` embeds the build subtree twice (and
     * the deg/nodes derivations twice more), so an expensive upstream
-    * join would evaluate ~4×; persist-then-union evaluates it once.
+    * join would evaluate ~4×; truncate-then-union evaluates it once.
     * A symmetrized graph also guarantees every node has inbound edges,
     * so the completeInbound fast path engages automatically.
     *
-    * `checkpointEvery = n > 0` truncates the rank RDD's LINEAGE every n
-    * rounds — the production lever for large iteration counts. The
-    * per-round LogicalRDD re-wrap already bounds the SQL plan at one
-    * round deep, but the RDDs underneath still chain: each round's rows
-    * compute from the previous round's persisted RDD, so at round 30 a
-    * cache-evicted partition recomputes through every surviving
-    * ancestor. A checkpoint caps that cascade at n rounds (reliable
-    * checkpoint when the session has a checkpoint dir; executor-local
-    * otherwise — the right default for local mode, where "reliable"
-    * storage is the same disks anyway). 0 disables (the graded 5-round
-    * fixture needs no truncation). The `ScaleProbes` graph leg's
-    * 25-round run measures the shape. */
+    * `onRound(i, seconds)` receives each round's wall clock after its
+    * materializing count — the hook the `ScaleProbes` graph leg uses to
+    * pin flat per-round time over 25 rounds; the default no-op costs
+    * nothing on graded paths. */
   def pageRankTopK(edges: DataFrame, iters: Int, k: Int,
                    damping: Double = 0.85,
                    completeInbound: Boolean = false,
                    symmetrizeInput: Boolean = false,
-                   checkpointEvery: Int = 0,
                    onRound: (Int, Double) => Unit = (_, _) => ())
       : DataFrame = {
-    import org.apache.spark.storage.StorageLevel
     require(iters >= 1, s"iters=$iters must be >= 1")
     require(damping > 0 && damping < 1, s"damping=$damping not in (0,1)")
     val spark = edges.sparkSession
     // narrow to (src, dst) BEFORE materializing — extra caller columns
     // (e.g. a prior "pr" from re-ranking a joined frame, or "__deg")
     // would hit an ambiguous-reference AnalysisException inside step's
-    // join, and a wide payload would be cached in edgesDeg and ride
+    // join, and a wide payload would be stored in edgesDeg and ride
     // every round (same defensive select as the census siblings)
     val narrowed = edges.select("src", "dst")
-    // base frames are lineage-TRUNCATED checkpoints, not plain persists
-    // (see `truncated`): the per-round task binaries otherwise carry
-    // the whole edge-build plan (~1.5 MiB of parquet relations + Hadoop
-    // conf per task, at ANY scale factor) — the measured per-round
-    // fixed cost of the family
-    val (input, inputRdd) =
-      if (symmetrizeInput) truncated(narrowed) else (narrowed, null)
-    val full = if (symmetrizeInput) symmetrize(input) else input
-    val noDangling = completeInbound || symmetrizeInput
-    // deg has exactly one row per node (every node is a source, per the
-    // operator contract) — so it IS the node list, and its count is N:
-    // no separate distinct pass over the edge set
-    val (deg, degRdd) = truncated(full.groupBy("src")
-      .agg(count(lit(1)).cast("double").as("__deg")))
-    val nodes = deg.select(col("src").as("id"))
-    val (edgesDeg, edgesDegRdd) = truncated(full.join(deg, "src"))
-    var prRdd: org.apache.spark.rdd.RDD[_] = null
-    // Anchor retention discipline, r18 rendition: EVERY round is a
-    // lineage-truncated local checkpoint now, so the old per-n-rounds
-    // local anchor is subsumed. `checkpointEvery` keeps its production
-    // meaning when the session has a checkpoint dir: those rounds write
-    // RELIABLE checkpoints (executor-loss-tolerant files; the data
-    // still writes once — the internal RDD is persisted before the
-    // materializing count, the standard persist+checkpoint pairing),
-    // and the run best-effort deletes the files in the finally block
-    // (Spark never deletes them without the opt-in cleaner config; the
-    // graded result is a local relation by then).
-    val reliableCkpts =
-      scala.collection.mutable.ListBuffer.empty[org.apache.spark.rdd.RDD[_]]
-    try {
+    Rounds.local(spark) { r =>
+      // base frames are lineage-TRUNCATED, not plain persists: the
+      // per-round task binaries otherwise carry the whole edge-build
+      // plan (see Rounds)
+      val input = if (symmetrizeInput) r.truncate(narrowed) else narrowed
+      val full = if (symmetrizeInput) symmetrize(input) else input
+      val noDangling = completeInbound || symmetrizeInput
+      // deg has exactly one row per node (every node is a source, per
+      // the operator contract) — so it IS the node list, and its count
+      // is N: no separate distinct pass over the edge set
+      val deg = r.truncate(full.groupBy("src")
+        .agg(count(lit(1)).cast("double").as("__deg")))
+      val nodes = deg.select(col("src").as("id"))
+      val edgesDeg = r.truncate(full.join(deg, "src"))
       // fills in dependency order: deg (node-sized) first — its count
-      // is N — then the edge cache, after which the input blocks are
+      // is N — then the edge frame, after which the input blocks are
       // dead weight and drop early (edgesDeg is truncated: dropping its
       // upstream cannot strand it)
-      val n = degRdd.count()
-      edgesDegRdd.count()
-      if (inputRdd != null) inputRdd.unpersist(blocking = false)
+      val n = r.count(deg)
+      r.count(edgesDeg)
+      r.release(input)
       // the bcastIfSmall decision (see its scaladoc), driver-known n:
       // the rank frame is exactly n (id, pr) rows every round
       val bcastPr = bcastAuto(spark, n)
       val base = lit(1.0 - damping) / lit(n.toDouble)
       var pr = nodes.select(col("id"), (lit(1.0) / lit(n.toDouble)).as("pr"))
-      val reliable = spark.sparkContext.getCheckpointDir.isDefined
       for (i <- 1 to iters) {
-        // per-round wall clock handed to `onRound` AFTER the round's
-        // materializing count — the probe hook that pins "flat
-        // per-round time under lineage truncation" (the `ScaleProbes`
-        // graph leg, 2b); the default no-op costs nothing on graded
-        // paths
         val tRound0 = System.nanoTime()
-        val stepDf = step(edgesDeg, pr, base, damping, noDangling, nodes,
-          identity, bcastPr = bcastPr)
-        val anchor = reliable &&
-          checkpointEvery > 0 && i % checkpointEvery == 0 && i < iters
-        val (next, nextRdd) =
-          if (anchor) {
-            val ck = stepDf.checkpoint(eager = false)
-            val rdd = internalRdd(ck)
-            // persist BEFORE the materializing count: the reliable
-            // checkpoint file write then reads the persisted blocks
-            // instead of recomputing the round
-            rdd.persist(StorageLevel.MEMORY_AND_DISK)
-            reliableCkpts += rdd
-            (ck, rdd)
-          } else truncated(stepDf)
-        nextRdd.count() // force this round before dropping the previous
-        pr = next
-        if (prRdd != null) prRdd.unpersist(blocking = false)
-        prRdd = nextRdd
+        pr = r.step(pr, step(edgesDeg, pr, base, damping, noDangling, nodes,
+          identity, bcastPr = bcastPr))._1
         onRound(i, (System.nanoTime() - tRound0) / 1e9)
       }
-      val ranked = pr.orderBy(col("pr").desc, col("id")).limit(k)
-      val rows = ranked.collect()
-      spark.createDataFrame(
-        java.util.Arrays.asList(rows: _*), ranked.schema)
-    } finally {
-      // inputRdd.unpersist is idempotent — already dropped on the happy
-      // path, re-dropped here so failure paths clean up too
-      if (inputRdd != null) inputRdd.unpersist(blocking = false)
-      degRdd.unpersist(blocking = false)
-      edgesDegRdd.unpersist(blocking = false)
-      if (prRdd != null) prRdd.unpersist(blocking = false)
-      // best-effort removal of reliable-checkpoint files: the graded
-      // result is a local relation, so nothing references them
-      reliableCkpts.foreach { r =>
-        r.getCheckpointFile.foreach { f =>
-          try {
-            val p = new org.apache.hadoop.fs.Path(f)
-            p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-              .delete(p, true)
-          } catch { case _: Exception => () }
-        }
-      }
+      pr.orderBy(col("pr").desc, col("id")).limit(k)
     }
   }
 
@@ -411,68 +296,53 @@ object Graphs {
   }
 
   /** [[hits]] + top-k extraction with the eager resource shape: the
-    * edge frame is persisted once, each half-round's UN-normalized
+    * edge frame is truncated once, each half-round's UN-normalized
     * score vector is materialized and re-wrapped (so normalization's
-    * double reference and the next join read a cache, and the plan
-    * stays one half-round deep), the k best per role are collected
-    * (2k rows — driver-sized by contract) and every cache is dropped
-    * before returning a local relation. Scores identical to the lazy
-    * path — GraphsSuite pins it.
+    * double reference and the next join read stored blocks, and the
+    * plan stays one half-round deep), the k best per role are collected
+    * (2k rows — driver-sized by contract) and the [[Rounds]] scope
+    * drops every stored frame before returning a local relation.
+    * Scores identical to the lazy path — GraphsSuite pins it.
     * Returns (role, id, score, rk) with rk = 1..k per role by
     * (score DESC, id). */
   def hitsTopK(edges: DataFrame, iters: Int, k: Int): DataFrame = {
     require(iters >= 1, s"iters=$iters must be >= 1")
     require(k >= 1, s"k=$k must be >= 1")
-    val (e, eRdd) = truncated(edges.select("src", "dst"))
-    var rdds = List.empty[org.apache.spark.rdd.RDD[_]]
-    try {
-      eRdd.count()
+    Rounds.local(edges.sparkSession) { r =>
+      val (e, _) = r.materialize(edges.select("src", "dst"))
       // each half-round's score frame is one row per node on its side
       // of the (possibly bipartite) graph — nScores is that count,
       // measured by the PREVIOUS half-round's materializing count, so
-      // the bcastIfSmall gate is per-side and free
-      def halfRound(scores: DataFrame, nScores: Long, joinKey: String,
-                    groupKey: String): (DataFrame, Long) = {
-        val (raw, rdd) = truncated(
-          e.join(bcastIfSmall(scores, nScores), Seq(joinKey))
-            .groupBy(groupKey).agg(dsum(col("score")).as("score")))
-        val n = rdd.count()
-        rdds.drop(2).foreach(_.unpersist(blocking = false))
-        rdds = rdd :: rdds.take(2)
-        (hitsNormalized(raw, groupKey), n)
-      }
+      // the bcastIfSmall gate is per-side and free. `stale` is the raw
+      // frame two half-rounds back, on the same side: the one between
+      // was computed from it and is already materialized.
+      def halfRound(stale: DataFrame, scores: DataFrame, nScores: Long,
+                    joinKey: String, groupKey: String): (DataFrame, Long) =
+        r.step(stale, e.join(bcastIfSmall(scores, nScores), Seq(joinKey))
+          .groupBy(groupKey).agg(dsum(col("score")).as("score")))
       // seed materialized for the same reason as lpaAssign: its count
       // feeds the gate, and round 1 stops re-running the distinct
-      val (hub0, hubRdd0) = truncated(
-        e.select(col("src")).distinct()
-          .select(col("src"), lit(1.0).as("score")))
-      rdds = hubRdd0 :: rdds
-      var hub = hub0
-      var nHub = hubRdd0.count()
-      var auth: DataFrame = null
+      var (hubRaw, nHub) = r.materialize(e.select(col("src")).distinct()
+        .select(col("src"), lit(1.0).as("score")))
+      var hub = hubRaw
+      var authRaw, auth: DataFrame = null
       var nAuth = 0L
       for (_ <- 1 to iters) {
-        val (a, na) = halfRound(hub, nHub, "src", "dst")
-        auth = a; nAuth = na
-        val (h, nh) = halfRound(auth, nAuth, "dst", "src")
-        hub = h; nHub = nh
+        val (a, na) = halfRound(authRaw, hub, nHub, "src", "dst")
+        authRaw = a; auth = hitsNormalized(a, "dst"); nAuth = na
+        val (h, nh) = halfRound(hubRaw, auth, nAuth, "dst", "src")
+        hubRaw = h; hub = hitsNormalized(h, "src"); nHub = nh
       }
       import org.apache.spark.sql.expressions.Window
       val win = Window.partitionBy("role")
         .orderBy(col("score").desc, col("id"))
-      val ranked = hub
+      hub
         .select(lit("hub").as("role"), col("src").as("id"), col("score"))
         .unionByName(auth.select(lit("authority").as("role"),
           col("dst").as("id"), col("score")))
         .withColumn("rk", row_number().over(win))
         .filter(col("rk") <= k)
         .orderBy("role", "rk")
-      val rows = ranked.collect()
-      ranked.sparkSession.createDataFrame(
-        java.util.Arrays.asList(rows: _*), ranked.schema)
-    } finally {
-      eRdd.unpersist(blocking = false)
-      rdds.foreach(_.unpersist(blocking = false))
     }
   }
 
@@ -519,34 +389,25 @@ object Graphs {
     * (dst, lbl) count, and one per-dst argmax window — all shuffles
     * keyed by node id, never materializing more than the (node,
     * neighbor-label) distinct pairs. Rounds are materialized and
-    * re-wrapped ([[truncated]]) so the plan stays one round deep;
+    * re-wrapped ([[Rounds]]) so the plan stays one round deep;
     * the k largest communities (k rows — driver-sized by contract) are
-    * collected and every cache dropped.
+    * collected and every stored round dropped.
     * Returns (community, n_members, min_id, max_id), largest first,
     * label tie-break. */
   def labelPropCensus(edges: DataFrame, iters: Int, k: Int,
                       symmetrizeInput: Boolean = false): DataFrame = {
     require(iters >= 1, s"iters=$iters must be >= 1")
     require(k >= 1, s"k=$k must be >= 1")
-    val (input, inputRdd) = truncated(
-      if (symmetrizeInput) edges else edges.select("src", "dst"))
-    val full = if (symmetrizeInput) symmetrize(input) else input
-    var last: org.apache.spark.rdd.RDD[_] = null
-    try {
-      inputRdd.count()
-      val (lbl, rdd, _) = lpaAssign(full, iters)
-      last = rdd
-      val census = lbl.groupBy(col("lbl").as("community"))
+    Rounds.local(edges.sparkSession) { r =>
+      val (input, _) = r.materialize(
+        if (symmetrizeInput) edges else edges.select("src", "dst"))
+      val full = if (symmetrizeInput) symmetrize(input) else input
+      val (lbl, _) = lpaAssign(r, full, iters)
+      lbl.groupBy(col("lbl").as("community"))
         .agg(count(lit(1)).as("n_members"), min("id").as("min_id"),
           max("id").as("max_id"))
         .orderBy(desc("n_members"), col("community"))
         .limit(k)
-      val rows = census.collect()
-      census.sparkSession.createDataFrame(
-        java.util.Arrays.asList(rows: _*), census.schema)
-    } finally {
-      inputRdd.unpersist(blocking = false)
-      if (last != null) last.unpersist(blocking = false)
     }
   }
 
@@ -554,20 +415,15 @@ object Graphs {
     * [[modularityCensus]]: every node starts labeled with its own id
     * and adopts its neighbors' most frequent label each round (ties to
     * the smallest label). `full` must be the symmetrized edge list.
-    * Returns the final (id, lbl) frame, the checkpointed RDD backing
-    * it — the CALLER unpersists that RDD when done — and the node
-    * count (the label frame is n rows every round, so callers reuse it
-    * instead of recounting). */
-  private def lpaAssign(full: DataFrame, iters: Int)
-      : (DataFrame, org.apache.spark.rdd.RDD[_], Long) = {
+    * Returns the final (id, lbl) frame, stored in the caller's scope
+    * `r`, and the node count (the label frame is n rows every round, so
+    * callers reuse it instead of recounting). */
+  private def lpaAssign(r: Rounds, full: DataFrame, iters: Int)
+      : (DataFrame, Long) = {
     // symmetrized contract: every node appears as a source, so the
     // source set IS the node list — and every node has neighbors, so
     // the inner join below re-labels every node each round
     import org.apache.spark.sql.expressions.Window
-    var lbl = full.select(col("src").as("id")).distinct()
-      .select(col("id"), col("id").as("lbl"))
-    var prevRdd: org.apache.spark.rdd.RDD[_] = null
-    var n = 0L
     // winning label per node = rank 1 of (count desc, label asc): most
     // frequent, ties to the SMALLEST label — the rule the oracles
     // replay. The rank-1 window IS the scale shape here, not a naive
@@ -580,41 +436,23 @@ object Graphs {
     // map-side sort this shape pays, flat at sf0.1 (a36 8.35 → 9.19 s,
     // a37 10.04 → 9.42 s) — kept the idiomatic window.
     val win = Window.partitionBy("dst").orderBy(desc("__n"), col("lbl"))
-    try {
-      // materialize the seed labels BEFORE the loop: round 1's join
-      // would otherwise re-run the distinct inside its own plan, and
-      // the materializing count is exactly the node count the
-      // bcastIfSmall gate needs (the label frame is n rows EVERY
-      // round, so one decision serves the whole loop)
-      // prevRdd tracks the seed BEFORE its materializing count: a count
-      // that fails mid-job would otherwise leave partially cached seed
-      // blocks untracked by the catch/finally cleanup (r17 review —
-      // hitsTopK already registered before counting)
-      val (lbl0, rdd0) = truncated(lbl)
-      lbl = lbl0
-      prevRdd = rdd0
-      n = rdd0.count()
-      for (_ <- 1 to iters) {
-        val (next, rdd) = truncated(
-          full.join(bcastIfSmall(lbl.withColumnRenamed("id", "src"), n),
-              Seq("src"))
-            .groupBy(col("dst"), col("lbl")).agg(count(lit(1)).as("__n"))
-            .withColumn("__rk", row_number().over(win))
-            .filter(col("__rk") === 1)
-            .select(col("dst").as("id"), col("lbl")))
-        rdd.count()
-        lbl = next
-        if (prevRdd != null) prevRdd.unpersist(blocking = false)
-        prevRdd = rdd
-      }
-    } catch {
-      case e: Throwable =>
-        // a mid-loop failure would otherwise strand the current round's
-        // persisted RDD (the caller's finally only sees the returned one)
-        if (prevRdd != null) prevRdd.unpersist(blocking = false)
-        throw e
-    }
-    (lbl, prevRdd, n)
+    // materialize the seed labels BEFORE the loop: round 1's join would
+    // otherwise re-run the distinct inside its own plan, and the
+    // materializing count is exactly the node count the bcastIfSmall
+    // gate needs (the label frame is n rows EVERY round, so one
+    // decision serves the whole loop)
+    val (lbl0, n) = r.materialize(full.select(col("src").as("id"))
+      .distinct().select(col("id"), col("id").as("lbl")))
+    var lbl = lbl0
+    for (_ <- 1 to iters)
+      lbl = r.step(lbl,
+        full.join(bcastIfSmall(lbl.withColumnRenamed("id", "src"), n),
+            Seq("src"))
+          .groupBy(col("dst"), col("lbl")).agg(count(lit(1)).as("__n"))
+          .withColumn("__rk", row_number().over(win))
+          .filter(col("__rk") === 1)
+          .select(col("dst").as("id"), col("lbl")))._1
+    (lbl, n)
   }
 
   /** Newman modularity census of the [[labelPropCensus]] partition
@@ -629,26 +467,23 @@ object Graphs {
     *
     * Scale shape: the LPA loop is [[lpaAssign]] (per-round
     * materialization, node-keyed shuffles); the modularity pass is two
-    * node-keyed label joins over the cached edge list plus
+    * node-keyed label joins over the stored edge list plus
     * community-bounded aggregates. 2m arrives as a driver scalar from
-    * the cached edge count (the k×k Gram convention), never a global
-    * window over data rows. */
+    * the edge frame's materializing count (the k×k Gram convention),
+    * never a global window over data rows. */
   def modularityCensus(edges: DataFrame, iters: Int, k: Int,
                        symmetrizeInput: Boolean = false): DataFrame = {
     require(iters >= 1, s"iters=$iters must be >= 1")
     require(k >= 1, s"k=$k must be >= 1")
-    val (input, inputRdd) = truncated(
-      if (symmetrizeInput) edges else edges.select("src", "dst"))
-    var last: org.apache.spark.rdd.RDD[_] = null
-    try {
+    Rounds.local(edges.sparkSession) { r =>
       // = 2m after symmetrize: both directions of every edge; the
       // directed-input count is driver-known from the materializing
       // count, so no separate full.count() job
-      val nDirected = inputRdd.count()
+      val (input, nDirected) = r.materialize(
+        if (symmetrizeInput) edges else edges.select("src", "dst"))
       val full = if (symmetrizeInput) symmetrize(input) else input
       val m2 = if (symmetrizeInput) 2L * nDirected else nDirected
-      val (lbl, rdd, nL) = lpaAssign(full, iters)
-      last = rdd
+      val (lbl, nL) = lpaAssign(r, full, iters)
       val deg = full.groupBy(col("src").as("id"))
         .agg(count(lit(1)).as("__d"))
       val dc = deg.join(lbl, Seq("id"))
@@ -663,7 +498,7 @@ object Graphs {
           Seq("dst"))
         .filter(col("__ls") === col("__ld"))
         .groupBy(col("__ls").as("lbl")).agg(count(lit(1)).as("__e2"))
-      val out = dc.join(ei, Seq("lbl"), "left")
+      dc.join(ei, Seq("lbl"), "left")
         .na.fill(0L, Seq("__e2"))
         .select(col("lbl").as("community"), col("n_members"), col("d_c"),
           expr("__e2 div 2").as("e_intra"),
@@ -673,65 +508,44 @@ object Graphs {
             .as("q_c"))
         .orderBy(desc("n_members"), col("community"))
         .limit(k)
-      val rows = out.collect()
-      out.sparkSession.createDataFrame(
-        java.util.Arrays.asList(rows: _*), out.schema)
-    } finally {
-      inputRdd.unpersist(blocking = false)
-      if (last != null) last.unpersist(blocking = false)
     }
   }
 
   /** Eager BFS census: [[bfsHops]] semantics with the production
-    * resource shape — edges persisted once (`symmetrizeInput = true`
-    * persists the DIRECTED list and unions in-cache, exactly as in
-    * [[pageRankTopK]]), seeds = graph nodes satisfying `seedPred`,
+    * resource shape — edges truncated once (`symmetrizeInput = true`
+    * truncates the DIRECTED list and unions the stored copy, exactly as
+    * in [[pageRankTopK]]), seeds = graph nodes satisfying `seedPred`,
     * each round materialized/re-wrapped so the plan stays one round
     * deep, and the per-distance census
     * (dist, n_nodes, min_id, max_id) — a ≤ maxHops+1-row result —
-    * collected into a local relation with every cache dropped. */
+    * collected into a local relation with every stored round dropped. */
   def bfsCensus(edges: DataFrame, seedPred: Column, maxHops: Int,
                 symmetrizeInput: Boolean = false): DataFrame = {
     require(maxHops >= 0, s"maxHops=$maxHops must be >= 0")
-    val (input, inputRdd) = truncated(
-      if (symmetrizeInput) edges else edges.select("src", "dst"))
-    val full = if (symmetrizeInput) symmetrize(input) else input
-    var prevRdd: org.apache.spark.rdd.RDD[_] = null
-    try {
-      inputRdd.count()
-      var dist = full.select(col("src").as("id")).distinct()
-        .filter(seedPred)
-        .select(col("id"), lit(0).as("dist"))
+    Rounds.local(edges.sparkSession) { r =>
+      val (input, _) = r.materialize(
+        if (symmetrizeInput) edges else edges.select("src", "dst"))
+      val full = if (symmetrizeInput) symmetrize(input) else input
       // the reached set GROWS round to round (seeds → ≤ all nodes), so
       // unlike the fixed-n kernels the bcastIfSmall gate re-decides
       // per round from the materializing count the loop already pays
-      val (dist0, rdd0) = truncated(dist)
-      dist = dist0
-      prevRdd = rdd0 // registered BEFORE the count (r17 review)
-      var nDist = rdd0.count()
+      var (dist, nDist) = r.materialize(
+        full.select(col("src").as("id")).distinct()
+          .filter(seedPred)
+          .select(col("id"), lit(0).as("dist")))
       for (_ <- 1 to maxHops) {
         val expanded = full
           .join(bcastIfSmall(dist.withColumnRenamed("id", "src"), nDist),
             Seq("src"))
           .select(col("dst").as("id"), (col("dist") + lit(1)).as("dist"))
-        val (next, rdd) = truncated(
-          dist.unionByName(expanded)
-            .groupBy("id").agg(min("dist").as("dist")))
-        dist = next
-        nDist = rdd.count()
-        if (prevRdd != null) prevRdd.unpersist(blocking = false)
-        prevRdd = rdd
+        val (next, n) = r.step(dist, dist.unionByName(expanded)
+          .groupBy("id").agg(min("dist").as("dist")))
+        dist = next; nDist = n
       }
-      val census = dist.groupBy("dist")
+      dist.groupBy("dist")
         .agg(count(lit(1)).as("n_nodes"), min("id").as("min_id"),
           max("id").as("max_id"))
         .orderBy("dist")
-      val rows = census.collect()
-      census.sparkSession.createDataFrame(
-        java.util.Arrays.asList(rows: _*), census.schema)
-    } finally {
-      inputRdd.unpersist(blocking = false)
-      if (prevRdd != null) prevRdd.unpersist(blocking = false)
     }
   }
 
@@ -752,12 +566,10 @@ object Graphs {
                symmetrizeInput: Boolean = false): DataFrame = {
     require(rounds >= 1, s"rounds=$rounds must be >= 1")
     require(k >= 1, s"k=$k must be >= 1")
-    val (input, inputRdd) = truncated(
-      if (symmetrizeInput) edges else edges.select("src", "dst"))
-    val full = if (symmetrizeInput) symmetrize(input) else input
-    var prevRdd: org.apache.spark.rdd.RDD[_] = null
-    try {
-      inputRdd.count()
+    Rounds.local(edges.sparkSession) { r =>
+      val (input, _) = r.materialize(
+        if (symmetrizeInput) edges else edges.select("src", "dst"))
+      val full = if (symmetrizeInput) symmetrize(input) else input
       // seed from BOTH endpoints: with symmetrizeInput=true the source
       // set already covers every node (so skip the second scan), but a
       // caller-supplied list may have dst-only sinks — without a self
@@ -769,38 +581,26 @@ object Graphs {
         if (symmetrizeInput) full.select(col("src").as("id")).distinct()
         else full.select(col("src").as("id"))
           .unionByName(full.select(col("dst").as("id"))).distinct()
-      var lbl = nodes.select(col("id"), col("id").as("lbl"))
       // materialize the seed labels before the loop: the count is the
       // node count the bcastIfSmall gate needs (the label frame is n
       // rows every round — one decision serves the whole spread), and
       // round 1 stops re-running the distinct inside its own plan
-      val (lbl0, rdd0) = truncated(lbl)
-      lbl = lbl0
-      prevRdd = rdd0 // registered BEFORE the count (r17 review)
-      val n = rdd0.count()
+      val (lbl0, n) =
+        r.materialize(nodes.select(col("id"), col("id").as("lbl")))
+      var lbl = lbl0
       for (_ <- 1 to rounds) {
         val spread = full
           .join(bcastIfSmall(lbl.withColumnRenamed("id", "src"), n),
             Seq("src"))
           .select(col("dst").as("id"), col("lbl"))
-        val (next, rdd) = truncated(
-          lbl.unionByName(spread).groupBy("id").agg(min("lbl").as("lbl")))
-        lbl = next
-        rdd.count()
-        if (prevRdd != null) prevRdd.unpersist(blocking = false)
-        prevRdd = rdd
+        lbl = r.step(lbl, lbl.unionByName(spread)
+          .groupBy("id").agg(min("lbl").as("lbl")))._1
       }
-      val census = lbl.groupBy(col("lbl").as("component"))
+      lbl.groupBy(col("lbl").as("component"))
         .agg(count(lit(1)).as("n_members"), min("id").as("min_id"),
           max("id").as("max_id"))
         .orderBy(desc("n_members"), col("component"))
         .limit(k)
-      val rows = census.collect()
-      census.sparkSession.createDataFrame(
-        java.util.Arrays.asList(rows: _*), census.schema)
-    } finally {
-      inputRdd.unpersist(blocking = false)
-      if (prevRdd != null) prevRdd.unpersist(blocking = false)
     }
   }
 
@@ -815,85 +615,74 @@ object Graphs {
     * converged graph just peels nothing in later rounds.
     *
     * Scale shape: per round, one node-keyed partial-aggregable degree
-    * count over the INDUCED subgraph — the edge list stays in its
-    * columnar cache for the whole peel and the loop state is only the
-    * NODE-sized survivor set (rewrapped per round: bounded plan depth,
-    * no lineage blow-up, and the Row↔InternalRow rewrap tax is paid on
-    * nodes, not edges). The round-16 probe measured the old
-    * edge-rewrap shape at ~4× per round once the edge set left the
-    * columnar cache (9.7 → 36.4 s/round at 11.3M edges); inducing
-    * against the cached edges keeps every round at the columnar rate.
+    * count over the INDUCED subgraph — the edge list stays stored for
+    * the whole peel and the loop state is only the NODE-sized survivor
+    * set (rewrapped per round: bounded plan depth, no lineage blow-up,
+    * and the rewrap is paid on nodes, not edges). The round-16 probe
+    * measured the old edge-rewrap shape at ~4× per round once the edge
+    * set left the columnar cache (9.7 → 36.4 s/round at 11.3M edges);
+    * inducing against the stored edges keeps every round at one rate.
     * Equivalence: S_i ⊆ S_{i−1}, so inducing the ORIGINAL edges by S_i
     * equals filtering round i−1's surviving edges — same degrees, same
-    * census. All outputs are exact integers → full hash oracle. */
+    * census. All outputs are exact integers → full hash oracle.
+    *
+    * `onRound(i, seconds)` receives each round's wall clock after its
+    * materializing count (the [[pageRankTopK]] hook), so the scale
+    * probe can pin per-round FLATNESS: a spill or lineage pathology
+    * shows as monotone per-round growth. */
   def kcoreCensus(edges: DataFrame, k: Int, rounds: Int,
                   symmetrizeInput: Boolean = false,
                   onRound: (Int, Double) => Unit = (_, _) => ())
       : DataFrame = {
     require(k >= 1, s"k=$k must be >= 1")
     require(rounds >= 1, s"rounds=$rounds must be >= 1")
-    val (input, inputRdd) = truncated(
-      if (symmetrizeInput) edges else edges.select("src", "dst"))
-    val full = if (symmetrizeInput) symmetrize(input) else input
-    // survivor node set; null = every node (round 1 needs no induce);
-    // nSurv from the round's materializing count feeds the
-    // bcastIfSmall gate on the two semi joins (the survivor set only
-    // SHRINKS, so once broadcastable it stays broadcastable). ONE
-    // neutral-named frame serves BOTH endpoint filters via condition
-    // joins: two differently-projected copies (surv vs its
-    // dst-rename) canonicalize to different plans, so Spark built two
-    // separate broadcast exchanges of the identical node set per
-    // round — with a shared subtree the second is a ReusedExchange
-    // (r17 review)
-    var surv: DataFrame = null
-    var nSurv = 0L
-    var prevRdd: org.apache.spark.rdd.RDD[_] = null
-    def induced(): DataFrame =
-      if (surv == null) full
-      else {
-        val b = bcastIfSmall(surv.select(col("src").as("__node")), nSurv)
-        full
-          .join(b, col("src") === col("__node"), "left_semi")
-          .join(b, col("dst") === col("__node"), "left_semi")
-          .select("src", "dst")
-      }
-    // on a symmetric list a node's degree IS its out-degree (one scan);
-    // a caller-supplied directed list must count BOTH incidences or
-    // dst-only sinks peel immediately and hubs survive on out-edges
-    // alone
-    def degrees(e: DataFrame): DataFrame =
-      if (symmetrizeInput) e.groupBy("src").agg(count(lit(1)).as("__d"))
-      else e.select(col("src"))
-        .unionByName(e.select(col("dst").as("src")))
-        .groupBy("src").agg(count(lit(1)).as("__d"))
-    try {
-      inputRdd.count()
+    Rounds.local(edges.sparkSession) { r =>
+      val (input, _) = r.materialize(
+        if (symmetrizeInput) edges else edges.select("src", "dst"))
+      val full = if (symmetrizeInput) symmetrize(input) else input
+      // survivor node set; null = every node (round 1 needs no induce);
+      // nSurv from the round's materializing count feeds the
+      // bcastIfSmall gate on the two semi joins (the survivor set only
+      // SHRINKS, so once broadcastable it stays broadcastable). ONE
+      // neutral-named frame serves BOTH endpoint filters via condition
+      // joins: two differently-projected copies (surv vs its
+      // dst-rename) canonicalize to different plans, so Spark built two
+      // separate broadcast exchanges of the identical node set per
+      // round — with a shared subtree the second is a ReusedExchange
+      // (r17 review)
+      var surv: DataFrame = null
+      var nSurv = 0L
+      def induced(): DataFrame =
+        if (surv == null) full
+        else {
+          val b = bcastIfSmall(surv.select(col("src").as("__node")), nSurv)
+          full
+            .join(b, col("src") === col("__node"), "left_semi")
+            .join(b, col("dst") === col("__node"), "left_semi")
+            .select("src", "dst")
+        }
+      // on a symmetric list a node's degree IS its out-degree (one
+      // scan); a caller-supplied directed list must count BOTH
+      // incidences or dst-only sinks peel immediately and hubs survive
+      // on out-edges alone
+      def degrees(e: DataFrame): DataFrame =
+        if (symmetrizeInput) e.groupBy("src").agg(count(lit(1)).as("__d"))
+        else e.select(col("src"))
+          .unionByName(e.select(col("dst").as("src")))
+          .groupBy("src").agg(count(lit(1)).as("__d"))
       for (i <- 1 to rounds) {
-        // per-round wall clock handed to `onRound` AFTER the round's
-        // materializing count — the pageRankTopK hook convention, so
-        // the scale probe can pin per-round FLATNESS (a spill or
-        // lineage pathology shows as monotone per-round growth)
         val tRound0 = System.nanoTime()
-        val (next, rdd) = truncated(
+        val (next, n) = r.step(surv,
           degrees(induced()).filter(col("__d") >= k).select("src"))
-        surv = next
-        nSurv = rdd.count()
-        if (prevRdd != null) prevRdd.unpersist(blocking = false)
-        prevRdd = rdd
+        surv = next; nSurv = n
         onRound(i, (System.nanoTime() - tRound0) / 1e9)
       }
-      val census = degrees(induced())
+      degrees(induced())
         .withColumnRenamed("__d", "degree")
         .groupBy("degree")
         .agg(count(lit(1)).as("n_nodes"), min("src").as("min_id"),
           max("src").as("max_id"))
         .orderBy("degree")
-      val rows = census.collect()
-      census.sparkSession.createDataFrame(
-        java.util.Arrays.asList(rows: _*), census.schema)
-    } finally {
-      inputRdd.unpersist(blocking = false)
-      if (prevRdd != null) prevRdd.unpersist(blocking = false)
     }
   }
 }

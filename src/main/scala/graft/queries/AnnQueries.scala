@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.util.Tables.{load, sqlDsum}
+import graft.util.Tables.{load, localRelation, sqlDsum}
 
 /** Similarity search over `embeddings.parquet` (Array[Float], dim 64).
   *
@@ -539,9 +539,7 @@ object AnnQueries {
         .orderBy(desc("bin"))
       // ≤ nBins rows — collect to a local relation so the cache can be
       // dropped before returning (the pageRankTopK discipline)
-      val rows = hist.collect()
-      hist.sparkSession.createDataFrame(
-        java.util.Arrays.asList(rows: _*), hist.schema)
+      localRelation(hist)
     } finally b.unpersist(blocking = false)
   }
 
@@ -594,9 +592,7 @@ object AnnQueries {
           dsum(element_at(col("e"), 1).cast("double")).as("s0"),
           dsum(element_at(col("e"), 2).cast("double")).as("s1"))
         .orderBy("cell")
-      val rows = out.collect()
-      cand.sparkSession.createDataFrame(
-        java.util.Arrays.asList(rows: _*), out.schema)
+      localRelation(out)
     } finally base.unpersist(blocking = false)
   }
 
@@ -949,11 +945,8 @@ object AnnQueries {
     // finally-guarded: a failed collect (task retry storm) must not
     // leak the pinned cache either — the leak this discipline exists
     // to prevent
-    val rows =
-      try out.collect()
-      finally res.unpersist()
-    res0.sparkSession.createDataFrame(
-      java.util.Arrays.asList(rows: _*), out.schema)
+    try localRelation(out)
+    finally res.unpersist()
   }
 
   /** Appends per-query agreement columns (`twin`, `twin_overlap` =
@@ -1031,11 +1024,8 @@ object AnnQueries {
                        threshold: Double, ccRounds: Int): DataFrame = {
     val (out, pinned) = semDedupCensus(cand, dim, nCells, threshold,
       ccRounds, pin = true)
-    try {
-      val rows = out.collect()
-      cand.sparkSession.createDataFrame(
-        java.util.Arrays.asList(rows: _*), out.schema)
-    } finally pinned.foreach(_.unpersist(blocking = false))
+    try localRelation(out)
+    finally pinned.foreach(_.unpersist(blocking = false))
   }
 
   /** The LAZY census tree (no persist, no collect) — for plan

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Ann, Dedup}
-import graft.util.Tables.load
+import graft.util.Tables.{load, localRelation}
 
 /** Near-duplicate detection + similarity-search queries (the LLM-pipeline
   * mandate). Exact dedup (d01) lives in TextQueries; brute-force cosine
@@ -404,11 +404,8 @@ object DedupQueries {
         val summary = semanticDedupSummary(out, exact)
         // eager materialize + finally-guarded unpersist (round-9 cache
         // discipline): the summary is ONE row
-        val rows =
-          try summary.collect()
-          finally out.unpersist()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*),
-          summary.schema)
+        try localRelation(summary)
+        finally out.unpersist()
       },
       Some {
         s"""WITH RECURSIVE

@@ -9,7 +9,7 @@ import graft.mc.MonteCarlo
 import graft.operators.{Multimodal, TemporalJoins}
 import graft.stats.Anova
 import graft.streaming.Streams
-import graft.util.Tables.{dsum, load, sqlDsum}
+import graft.util.Tables.{dsum, load, localRelation, sqlDsum}
 
 /** Remaining SURVEY.md §2 surface: CSV source/sink (S2/S3), streaming-
   * shaped window aggregation over `events`, multimodal binary plumbing,
@@ -27,11 +27,8 @@ object MiscQueries {
     * suite runs must not accumulate /tmp litter, and a result that
     * outlives its files must not lazily re-read them. */
   private def materializeAndClean(df: DataFrame, dir: String): DataFrame =
-    try {
-      val rows = df.collect()
-      df.sparkSession.createDataFrame(
-        java.util.Arrays.asList(rows: _*), df.schema)
-    } finally // delete even when the collect throws: failed runs must
+    try localRelation(df)
+    finally // delete even when the collect throws: failed runs must
       // not accumulate scratch trees either
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
 
@@ -1427,9 +1424,7 @@ object MiscQueries {
         val grid = MonteCarlo.portableGrid(nSim = 3,
           gammas = Seq(0.0, 1.0), nPop = 2000)
         val res = MonteCarlo.runPortable(s, grid)
-        val rows = res.collect() // 24 rows: |grid| × 4 estimators
-        val resDf = s.createDataFrame(
-          java.util.Arrays.asList(rows: _*), res.schema)
+        val resDf = localRelation(res) // 24 rows: |grid| × 4 estimators
         resDf.join(MonteCarlo.summarize(resDf, trueMean = 3.0),
             Seq("gamma", "estimator"))
           .select(col("sim"), col("gamma"), col("estimator"),

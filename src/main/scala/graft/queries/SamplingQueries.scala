@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.{Dsir, Samplers}
 import graft.synth.Population
-import graft.util.Tables.load
+import graft.util.Tables.{load, localRelation}
 
 /** Sampling / synthesis operators (SURVEY.md §2.9) as driver-gradable
   * queries. Random DATA can't be hash-matched cross-engine, but the
@@ -334,13 +334,11 @@ object SamplingQueries {
         // full weight pipeline plus THREE sampler runs and two set
         // diffs; the operator's own cost is g11/g13's. Same class as
         // o02's determinism rerun.)
-        val rows =
-          try out.collect()
-          finally {
-            scored.unpersist(); s1.unpersist(); s2.unpersist()
-            s3.unpersist()
-          }
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+        try localRelation(out)
+        finally {
+          scored.unpersist(); s1.unpersist(); s2.unpersist()
+          s3.unpersist()
+        }
       },
       // constant-valued enforcement oracle — see the block comment above
       Some("""SELECT CAST(100 AS BIGINT) AS n_sampled,

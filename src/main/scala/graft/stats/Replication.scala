@@ -259,18 +259,15 @@ object Replication {
     */
   def poissonBootstrapMean(df: DataFrame, y: Column, w: Column,
                            idCol: Column, reps: Int): DataFrame = {
-    val spark = df.sparkSession
     // R+1 bounded rows: materialize ONCE as a local relation so the
     // replicate/total split below cannot re-execute the ×R expansion
     // per branch (the p20 union-re-executes-agg lesson)
     val rtAll = poissonBootstrapMeanPlan(df, y, w, idCol, reps)
-    val rtRows = rtAll.collect()
+    val (rtRows, local) = localized(rtAll)
     // an empty input expands to ZERO grouped rows (even the sentinel),
     // so the raise-guards below never fire and the result would be one
     // all-NULL-looking row claiming n_reps=R (r16 review)
     require(rtRows.nonEmpty, "poissonBootstrapMean: empty input frame")
-    val local = spark.createDataFrame(
-      java.util.Arrays.asList(rtRows: _*), rtAll.schema)
     val tot = local.filter(col("__r") === lit(-1L))
       .select(col("tr").as("t"),
         nonZero(col("wr"), "the full-sample summed weight",

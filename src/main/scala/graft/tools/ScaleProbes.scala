@@ -557,24 +557,22 @@ object ScaleProbes {
     println(s"[graph-probe] synthetic edges=$n2 top20-hub-hits=$hubHits/20")
     assert(hubHits >= 18, s"planted hubs not recovered: $hubHits")
 
-    // ---- leg 2b: PRODUCTION iteration count + checkpoint lever --------
-    // 25 rounds with a lineage checkpoint every 10: the per-round
-    // LogicalRDD re-wrap already bounds the SQL plan at one round, and
-    // the checkpoint caps RDD-lineage recompute cascades at ≤ 10 rounds.
-    // Success criterion: completes with per-round cost flat (total ≈
-    // 5× the 5-round leg, not superlinear), same top-20 hub recovery.
+    // ---- leg 2b: PRODUCTION iteration count ----------------------------
+    // 25 rounds: every round is a lineage-truncated re-wrap (the Rounds
+    // scope), so both the SQL plan and the RDD lineage stay one round
+    // deep. Success criterion: completes with per-round cost flat
+    // (total ≈ 5× the 5-round leg, not superlinear), same top-20 hub
+    // recovery.
     val roundSecs = scala.collection.mutable.ArrayBuffer[Double]()
-    val top20c = timed("synthetic 25 iterations, checkpointEvery=10")(
+    val top20c = timed("synthetic 25 iterations")(
       Graphs.pageRankTopK(sym, iters = 25, k = 20, completeInbound = true,
-        checkpointEvery = 10,
         onRound = (i, s) => roundSecs += s).collect())
     val hubHits25 = top20c.count(_.getLong(0) < 20L)
     println(s"[graph-probe] 25-iter top20-hub-hits=$hubHits25/20")
     assert(hubHits25 >= 18, s"planted hubs not recovered at 25 iters: $hubHits25")
     // per-round wall clock: FLAT is the success criterion — a lineage
     // leak shows up as monotone growth (each round recomputing through
-    // its ancestors); the checkpoint caps any cache-eviction cascade at
-    // 10 rounds. Print all 25 and pin late/early ratio.
+    // its ancestors). Print all 25 and pin late/early ratio.
     println("[graph-probe] per-round secs: " +
       roundSecs.map(s => f"$s%.2f").mkString(" "))
     val early = roundSecs.slice(1, 6).sum / 5   // rounds 2-6 (round 1 warms)

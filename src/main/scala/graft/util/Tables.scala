@@ -58,6 +58,14 @@ object Tables {
     }
   }
 
+  /** `df` collected into a local relation with its schema. The rows must
+    * be driver-sized by the caller's contract; the result no longer reads
+    * the caches, checkpoints or scratch files `df` did, so the caller may
+    * release those before returning it. */
+  def localRelation(df: DataFrame): DataFrame =
+    df.sparkSession.createDataFrame(
+      java.util.Arrays.asList(df.collect(): _*), df.schema)
+
   /** Order-independent, cross-engine-deterministic sum of a double column:
     * each addend is cast to an exact DECIMAL first (exact decimal addition),
     * and the exact total is cast back to double. DECIMAL(38,10) holds any

@@ -139,6 +139,18 @@ class ValidationSuite extends SparkSpec {
     assert(e.getMessage.contains("correction"))
   }
 
+  test("RegDI correction 2 names a one-row A∩B overlap before solving") {
+    // only id 6 is in both samples: the measurement-error Gram is
+    // singular, and the named contract error must come first
+    val oneRow = pop.withColumn("in_B",
+      when(col("in_A") === 1, (col("id") === 6L).cast("int"))
+        .otherwise(col("in_B")))
+    val e = intercept[IllegalArgumentException](
+      RegDI.oneTable(oneRow, "in_A", "in_B",
+        RegDIConfig(yACol = "y", yBCol = "y", correction = 2)))
+    assert(e.getMessage.contains("Not enough validation data"), e.getMessage)
+  }
+
   test("RegDI correction 3 requires an outcome model") {
     val e = intercept[IllegalArgumentException](
       RegDI.oneTable(pop, "in_A", "in_B",

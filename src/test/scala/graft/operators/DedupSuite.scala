@@ -388,15 +388,33 @@ class DedupSuite extends SparkSpec {
     // suites run sequentially in the forked test JVM (the PlanSuite
     // cacheManager pins rely on the same), so the persistent-RDD delta
     // is attributable to this call alone
-    val before = spark.sparkContext.getPersistentRDDs.keySet
     val path = spark.range(400).select((col("id") + 5000).as("id_a"),
       (col("id") + 5001).as("id_b"))
-    val cc = Dedup.connectedComponents(path) // diameter ≫ rounds → fallback
-    assert(cc.count() === 401)
-    val delta = spark.sparkContext.getPersistentRDDs.keySet -- before
-    assert(delta.size === 1,
-      s"fallback must leave exactly the result generation persisted " +
-        s"(the final star generation was leaking before r15); got $delta")
+    val pairs = Seq((2L, 1L), (2L, 3L), (4L, 3L), (10L, 11L))
+      .toDF("id_a", "id_b")
+    // (input, rows): diameter ≫ rounds → fallback; a chain → hash-min
+    Seq(path -> 401, pairs -> 6).foreach { case (in, n) =>
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val cc = Dedup.connectedComponents(in)
+      assert(cc.count() === n)
+      val delta = spark.sparkContext.getPersistentRDDs.keySet -- before
+      assert(delta.size === 1,
+        s"connectedComponents must leave exactly the result generation " +
+          s"persisted (the final star generation was leaking before r15); " +
+          s"got $delta")
+      // the caller's release: the harnesses drain leases per query
+      graft.util.QueryLeases.releaseAll()
+      assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty)
+    }
+    // a failing input: 5 star rounds cannot contract the path, so the
+    // fallback raises mid-loop — with the edge set and a star
+    // generation stored, which must not stay registered
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val e = intercept[IllegalArgumentException](
+      Dedup.connectedComponents(path, maxIter = 5))
+    assert(e.getMessage.contains("no fixpoint in 5 rounds"))
+    val left = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(left.isEmpty, s"a failed call left persisted RDDs $left")
   }
 
   test("normalizeString matches the normalize column on non-ASCII " +

@@ -214,20 +214,40 @@ class GraphsSuite extends SparkSpec {
   }
 
   test("pageRankTopK leaves no new cache entries (async unpersist drains)") {
-    val before = spark.sparkContext.getPersistentRDDs.keySet
     val edges = Graphs.symmetrize(
       spark.range(100).select((col("id") % 11).as("src"),
         ((col("id") * 3 + 1) % 11).as("dst"))
         .filter(col("src") =!= col("dst")).distinct())
-    Graphs.pageRankTopK(edges, iters = 2, k = 5).collect()
-    // unpersist is non-blocking: poll briefly for the entries to drain
-    val deadline = System.nanoTime + 10e9.toLong
-    var extra = spark.sparkContext.getPersistentRDDs.keySet -- before
-    while (extra.nonEmpty && System.nanoTime < deadline) {
-      Thread.sleep(100)
-      extra = spark.sparkContext.getPersistentRDDs.keySet -- before
+    val boom = new RuntimeException("onRound failed")
+    def failAt2(i: Int, s: Double): Unit = if (i == 2) throw boom
+    // every eager kernel, plus a failure mid-loop in each onRound shape:
+    // the round scope must release what it stored either way
+    val runs: Seq[(String, () => Any)] = Seq(
+      "pageRankTopK" -> (() => Graphs.pageRankTopK(edges, iters = 2, k = 5)),
+      "hitsTopK" -> (() => Graphs.hitsTopK(edges, iters = 2, k = 5)),
+      "labelPropCensus" -> (() => Graphs.labelPropCensus(edges, 2, k = 5)),
+      "modularityCensus" -> (() => Graphs.modularityCensus(edges, 2, k = 5)),
+      "bfsCensus" -> (() => Graphs.bfsCensus(edges, col("id") === 1, 2)),
+      "ccCensus" -> (() => Graphs.ccCensus(edges, rounds = 2, k = 5)),
+      "kcoreCensus" -> (() => Graphs.kcoreCensus(edges, k = 2, rounds = 2)),
+      "pageRankTopK, onRound throws" -> (() => assert(intercept[
+        RuntimeException](Graphs.pageRankTopK(edges, iters = 3, k = 5,
+        onRound = failAt2)) eq boom)),
+      "kcoreCensus, onRound throws" -> (() => assert(intercept[
+        RuntimeException](Graphs.kcoreCensus(edges, k = 2, rounds = 3,
+        onRound = failAt2)) eq boom)))
+    runs.foreach { case (name, run) =>
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      run()
+      // unpersist is non-blocking: poll briefly for the entries to drain
+      val deadline = System.nanoTime + 10e9.toLong
+      var extra = spark.sparkContext.getPersistentRDDs.keySet -- before
+      while (extra.nonEmpty && System.nanoTime < deadline) {
+        Thread.sleep(100)
+        extra = spark.sparkContext.getPersistentRDDs.keySet -- before
+      }
+      assert(extra.isEmpty, s"$name leaked cache entries: $extra")
     }
-    assert(extra.isEmpty, s"leaked cache entries: $extra")
   }
 
   test("modularityCensus: two planted triangles score Q_c = 1/4 each " +
