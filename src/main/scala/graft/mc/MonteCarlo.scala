@@ -123,19 +123,9 @@ object MonteCarlo {
     * Same result schema as [[run]]; replicates execute sequentially but
     * each one uses the whole cluster. */
   def runDistributed(spark: SparkSession, nSim: Int, nPop: Long, nA: Int,
-                     seed0: Long = 1234L, concurrency: Int = 1): DataFrame = {
-    import org.apache.spark.sql.functions._
+                     seed0: Long = 1234L): DataFrame = {
     import spark.implicits._
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    // `concurrency` > 1 overlaps replicates as concurrent Spark jobs —
-    // each stage still uses every core, but scheduling gaps between the
-    // ~8 small actions per replicate are filled by the next replicate
-    // (pair with the FAIR scheduler on a shared cluster).
-    val pool =
-      java.util.concurrent.Executors.newFixedThreadPool(math.max(1, concurrency))
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    val futures = (1 to nSim).map { sim => Future {
+    (1 to nSim).flatMap { sim =>
       // same per-replicate spacing discipline as the task-local modes
       // (phase channels live at seed+2000 — r15)
       val seed = seed0 + 10000L * sim
@@ -162,13 +152,7 @@ object MonteCarlo {
         Seq(SimResult(sim, 0.0, "Mean_S_B", naive),
           SimResult(sim, 0.0, "RegDI_X1", regdi))
       } finally pop.unpersist()
-    } }
-    // shut the pool down even on failure — a leaked non-daemon pool keeps
-    // a driver main() alive after exit
-    val rows =
-      try futures.flatMap(f => Await.result(f, Duration.Inf))
-      finally pool.shutdown()
-    rows.toDF()
+    }.toDF()
   }
 
   /** Grouped bias/SE/RMSE vs the known true mean (ipynb:2066-2073,

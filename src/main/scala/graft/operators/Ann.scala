@@ -65,17 +65,6 @@ object Ann {
   private def dotLit(vec: Column, plane: Seq[Double]): Column =
     graft.expressions.VectorExpressions.dotConst(vec, plane)
 
-  /** Bucket key for one table: sign bits packed into a Long. (Kept for
-    * single-table callers; the multi-table path below uses the fused
-    * LshBucketKeys expression — identical per-plane arithmetic.) */
-  def bucketKey(vec: Column, dim: Int, bits: Int, table: Int,
-                seed: Long): Column =
-    hyperplanes(dim, bits, table, seed).zipWithIndex
-      .map { case (p, k) =>
-        when(dotLit(vec, p) > 0, lit(1L << k)).otherwise(lit(0L))
-      }
-      .reduce((a, b) => a.bitwiseOR(b))
-
   /** (id, table, bucket) rows — `tables` rows per vector. All keys come
     * from ONE fused expression (graft.expressions.LshBucketKeys): a
     * per-plane expression tree grows with tables×bits and falls out of

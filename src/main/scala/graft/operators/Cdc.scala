@@ -19,9 +19,8 @@ import org.apache.spark.sql.functions._
   * Scale design (100 TB base, ≪ batch-sized log): the window that picks
   * each key's latest change shuffles ONLY the change log; the base table
   * is touched by a single left-anti join against the winners' keys —
-  * broadcast when the batch is small (the common CDC shape;
-  * `broadcastKeys = false` for batch-scale logs), so the
-  * 100 TB side is never shuffled. With a base bucketed on the key the
+  * broadcast, since the log is batch-sized (the common CDC shape), so
+  * the 100 TB side is never shuffled. With a base bucketed on the key the
   * anti join is zero-exchange even for large batches. The final
   * unionByName is a no-shuffle concatenation.
   */
@@ -37,8 +36,7 @@ object Cdc {
       keyCols: Seq[String],
       seqCol: String,
       opCol: String,
-      deleteOp: String = "D",
-      broadcastKeys: Boolean = true
+      deleteOp: String = "D"
   ): DataFrame = {
     val payload = base.columns
     val missing = (payload :+ seqCol :+ opCol).filterNot(changes.columns.contains)
@@ -75,9 +73,7 @@ object Cdc {
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
     val winnerKeys = latest.select(keyCols.map(col): _*)
-    val kept = base.join(
-      if (broadcastKeys) broadcast(winnerKeys) else winnerKeys,
-      keyCols, "left_anti")
+    val kept = base.join(broadcast(winnerKeys), keyCols, "left_anti")
     val applied = latest
       .filter(col("__op") =!= deleteOp)
       .select(payload.map(col): _*)

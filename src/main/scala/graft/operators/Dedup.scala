@@ -24,8 +24,8 @@ import org.apache.spark.sql.functions._
   * are exploded to (band, bandKey) rows (b rows per doc, b ≤ 32) and
   * self-joined on the band key, so candidate generation is ONE shuffle
   * whose key cardinality grows with the corpus; the full O(n²) pair space
-  * is never materialized. Verification (exact Jaccard / signature
-  * agreement) runs only on bucket-colliding pairs. Skewed buckets (boiler-
+  * is never materialized. Verification (exact Jaccard) runs only on
+  * bucket-colliding pairs. Skewed buckets (boiler-
   * plate shingles) are handled by AQE skew-join; pathological buckets can
   * additionally be capped upstream by filtering band keys whose bucket
   * count exceeds a threshold — at the cost of recall on mega-clusters.
@@ -91,12 +91,6 @@ object Dedup {
     * one JVM loop, no interpreted HOF lambdas, no explosion). */
   def minhashSignature(text: Column, shingleN: Int, numHashes: Int): Column =
     graft.expressions.TextExpressions.minhashSignature(text, shingleN, numHashes)
-
-  /** Estimated Jaccard from two signatures: fraction of agreeing slots. */
-  def signatureAgreement(sigA: Column, sigB: Column): Column =
-    aggregate(zip_with(sigA, sigB,
-        (a, b) => when(a === b, 1).otherwise(0)),
-      lit(0), (acc, x) => acc + x).cast("double") / size(sigA)
 
   /** Exact n-gram Jaccard of two shingle-set columns. */
   def jaccard(shA: Column, shB: Column): Column =
@@ -170,26 +164,6 @@ object Dedup {
       .filter(col("__r") === 1)
       .select(col("new_id"), col("corpus_id").as("dup_of"),
         col("jaccard").as("best_jaccard"))
-  }
-
-  /** Near-duplicate candidate pairs (idA < idB) via MinHash-LSH, with the
-    * signature-agreement Jaccard estimate attached. */
-  def minhashCandidates(docs: DataFrame, idCol: String, textCol: String,
-                        shingleN: Int = 3, numHashes: Int = 128,
-                        bands: Int = 32): DataFrame = {
-    val b = lshBands(docs, idCol, textCol, shingleN, numHashes, bands)
-    val pairs = b.as("l")
-      .join(b.as("r"), Seq("band", "band_key"))
-      .filter(col("l.id") < col("r.id"))
-      .select(col("l.id").as("id_a"), col("r.id").as("id_b"))
-      .distinct()
-    val sigs = docs.select(col(idCol).as("id"),
-      minhashSignature(col(textCol), shingleN, numHashes).as("sig"))
-    pairs
-      .join(sigs.withColumnsRenamed(Map("id" -> "id_a", "sig" -> "sig_a")), "id_a")
-      .join(sigs.withColumnsRenamed(Map("id" -> "id_b", "sig" -> "sig_b")), "id_b")
-      .select(col("id_a"), col("id_b"),
-        signatureAgreement(col("sig_a"), col("sig_b")).as("est_jaccard"))
   }
 
   /** LSH candidates verified with EXACT n-gram Jaccard ≥ threshold.
@@ -669,9 +643,10 @@ object Dedup {
     * definition), so no all-pairs surface exists. Zero-overlap pairs
     * are kept via a tiny size-frame cross join. All counts are exact
     * integers; `jaccard` is one IEEE divide — engine-portable.
-    * For corpora whose distinct gram set outgrows the shuffle, use
-    * [[corpusMinhashSignature]] + [[signatureAgreement]] as the
-    * constant-space estimate of the same matrix. */
+    * For corpora whose distinct gram set outgrows the shuffle, the
+    * fraction of agreeing slots between two sources'
+    * [[corpusMinhashSignature]]s is the constant-space estimate of the
+    * same matrix. */
   def corpusOverlap(df: DataFrame, groupCol: String, textCol: String,
                     shingleN: Int = 3): DataFrame = {
     // pinned: three consumers (sizes, both self-join branches) — the

@@ -153,7 +153,8 @@ object Graphs {
     * the deg/nodes derivations twice more), so an expensive upstream
     * join would evaluate ~4×; truncate-then-union evaluates it once.
     * A symmetrized graph also guarantees every node has inbound edges,
-    * so the completeInbound fast path engages automatically.
+    * so each round skips the left join that gives inbound-free nodes
+    * their base rank.
     *
     * `onRound(i, seconds)` receives each round's wall clock after its
     * materializing count — the hook the `ScaleProbes` graph leg uses to
@@ -161,7 +162,6 @@ object Graphs {
     * nothing on graded paths. */
   def pageRankTopK(edges: DataFrame, iters: Int, k: Int,
                    damping: Double = 0.85,
-                   completeInbound: Boolean = false,
                    symmetrizeInput: Boolean = false,
                    onRound: (Int, Double) => Unit = (_, _) => ())
       : DataFrame = {
@@ -180,7 +180,6 @@ object Graphs {
       // plan (see Rounds)
       val input = if (symmetrizeInput) r.truncate(narrowed) else narrowed
       val full = if (symmetrizeInput) symmetrize(input) else input
-      val noDangling = completeInbound || symmetrizeInput
       // deg has exactly one row per node (every node is a source, per
       // the operator contract) — so it IS the node list, and its count
       // is N: no separate distinct pass over the edge set
@@ -202,8 +201,9 @@ object Graphs {
       var pr = nodes.select(col("id"), (lit(1.0) / lit(n.toDouble)).as("pr"))
       for (i <- 1 to iters) {
         val tRound0 = System.nanoTime()
-        pr = r.step(pr, step(edgesDeg, pr, base, damping, noDangling, nodes,
-          identity, bcastPr = bcastPr))._1
+        pr = r.step(pr, step(edgesDeg, pr, base, damping,
+          completeInbound = symmetrizeInput, nodes, identity,
+          bcastPr = bcastPr))._1
         onRound(i, (System.nanoTime() - tRound0) / 1e9)
       }
       pr.orderBy(col("pr").desc, col("id")).limit(k)

@@ -17,9 +17,8 @@ import org.apache.spark.sql.types._
   * Decode/feature-extract runs as a BATCHED per-partition operator
   * ([[decodePartitions]]): rows are processed through a pluggable
   * [[MediaDecoder]] in fixed-size batches (the Scala analogue of
-  * `mapInPandas` — same batch shape, same schema contract). The real
-  * codec is STUBBED ([[RealCodecDecoder]] throws NotImplementedError:
-  * image/audio libraries are not available in this container); the
+  * `mapInPandas` — same batch shape, same schema contract). No real
+  * codec ships (it needs image/audio libraries); the
   * [[DeterministicFakeDecoder]] produces seeded pseudo-features so the
   * plumbing — schema, batching, partition parallelism — is fully
   * exercised and tested (MultimodalSuite).
@@ -47,14 +46,6 @@ object Multimodal {
   trait MediaDecoder extends Serializable {
     def featureDim: Int
     def decodeBatch(payloads: Array[Array[Byte]]): Array[Array[Float]]
-  }
-
-  /** STUB for the real image/audio codec path. Decoding libraries are not
-    * available in this container; wire a real implementation here. */
-  final class RealCodecDecoder(val featureDim: Int) extends MediaDecoder {
-    def decodeBatch(payloads: Array[Array[Byte]]): Array[Array[Float]] =
-      throw new NotImplementedError(
-        "real media decoding requires image/audio codecs absent from this environment")
   }
 
   /** Deterministic fake: features are a seeded hash-fold of the payload —
@@ -172,10 +163,10 @@ object Multimodal {
     * bit-identical across engines. */
   def resizeDims(w: Column, h: Column, maxDim: Int): Column = {
     require(maxDim >= 1, s"resizeDims: maxDim=$maxDim must be >= 1")
-    // same loud-dimension contract as the aspect-bucket renditions:
-    // Spark's greatest()/least() SKIP NULLs, so an unguarded NULL width
-    // would flow through to a plausible (1, h) plan — fabricated
-    // geometry for an image whose size is unknown (r16 review)
+    // same loud-dimension contract as aspectBuckets: Spark's
+    // greatest()/least() SKIP NULLs, so an unguarded NULL width would
+    // flow through to a plausible (1, h) plan — fabricated geometry for
+    // an image whose size is unknown (r16 review)
     val wG = guardDim(w, "width", "input", "resizeDims")
     val hG = guardDim(h, "height", "input", "resizeDims")
     val scale = least(lit(1.0),
@@ -188,12 +179,10 @@ object Multimodal {
   }
 
   /** The one NULL / non-positive image-dimension guard every geometry
-    * operator here applies (previously copy-pasted per rendition, where
-    * an edit could silently fork the bit-equal contract — r16 review):
-    * NULLs would rank first in an argmin window or be skipped by
-    * greatest/least, non-positive dims make ratios NULL (Spark
-    * division) or Inf (driver-side IEEE) — all silent-wrong routes.
-    * Raises with the operator and column named. */
+    * operator here applies: NULLs would rank first in an argmin window
+    * or be skipped by greatest/least, and non-positive dims make ratios
+    * NULL (Spark division) — all silent-wrong routes. Raises with the
+    * operator and column named. */
   private def guardDim(c: Column, kind: String, desc: String,
                        fn: String): Column =
     when(c.isNull,
@@ -201,24 +190,6 @@ object Multimodal {
       .when(c <= 0, raise_error(concat(
         lit(s"$fn: non-positive $kind $desc: "), c.cast("string"))))
       .otherwise(c)
-
-  /** Bucket grids must be positive in BOTH dimensions: a bh = 0 bucket
-    * makes its ratio NULL under Spark's non-ANSI division (NOT the Inf
-    * a driver-side IEEE divide yields), NULL ranks FIRST in the argmin
-    * window — every image silently lands in the degenerate bucket with
-    * drift 0 — while the fused rendition's driver-computed Inf ratio
-    * never wins, so the two suite-pinned "bit-equal" renditions fork
-    * completely (r16 review). */
-  private def requireBuckets(buckets: Seq[(Int, Int)], fn: String): Unit = {
-    require(buckets.nonEmpty, s"$fn: need at least one bucket")
-    val bad = buckets.zipWithIndex.filter { case ((bw, bh), _) =>
-      bw <= 0 || bh <= 0
-    }
-    require(bad.isEmpty,
-      s"$fn: bucket dimensions must be positive, got " +
-        bad.map { case ((bw, bh), i) => s"bucket $i = ($bw, $bh)" }
-          .mkString(", "))
-  }
 
   /** ViT-style patch-grid plan: how a (w × h) image tiles into
     * `patch`-pixel squares — ceil-divided patch counts, the padded
@@ -262,25 +233,32 @@ object Multimodal {
     * Scale shape: the |buckets|-way compare rides a broadcast cross
     * join (|buckets| is a literal constant ≤ a few dozen) + a doc-keyed
     * window argmin, then ONE partial-aggregable pass to |buckets|
-    * rows. At production scale the argmin collapses into a per-row
-    * native expression (the ArgMaxDotScoreExact pattern) — no join at
-    * all: [[aspectBucketsFused]] is that rendition, suite-pinned
-    * bit-equal to this oracle-replayable twin. */
+    * rows. */
   def aspectBuckets(df: DataFrame, idCol: String, wCol: String,
                     hCol: String, buckets: Seq[(Int, Int)],
                     quantum: Double = 1048576.0): DataFrame = {
-    requireBuckets(buckets, "aspectBuckets")
+    require(buckets.nonEmpty, "aspectBuckets: need at least one bucket")
+    // a bh = 0 bucket makes its ratio NULL under Spark's non-ANSI
+    // division, and NULL ranks FIRST in the argmin window — every image
+    // would silently land in the degenerate bucket with drift 0 (r16
+    // review)
+    val bad = buckets.zipWithIndex.filter { case ((bw, bh), _) =>
+      bw <= 0 || bh <= 0
+    }
+    require(bad.isEmpty,
+      "aspectBuckets: bucket dimensions must be positive, got " +
+        bad.map { case ((bw, bh), i) => s"bucket $i = ($bw, $bh)" }
+          .mkString(", "))
     val spark = df.sparkSession
     import spark.implicits._
     val b = buckets.zipWithIndex
       .map { case ((bw, bh), i) => (i, bw, bh) }
       .toDF("bucket_id", "bw", "bh")
     // a NULL dimension would rank first in the argmin window (NULLS
-    // FIRST under asc) while the fused rendition drops the row — fail
-    // loudly in BOTH so the bit-equal contract can't silently fork
-    // (the thresholdSweep/shardCensus NULL convention). A non-positive
-    // h would make the ratio NULL under Spark division — same silent
-    // argmin corruption route, same raise.
+    // FIRST under asc) — fail loudly instead (the thresholdSweep/
+    // shardCensus NULL convention). A non-positive h would make the
+    // ratio NULL under Spark division — same silent argmin corruption
+    // route, same raise.
     val wG = guardDim(col(wCol), "width", s"column '$wCol'",
       "aspectBuckets")
     val hG = guardDim(col(hCol), "height", s"column '$hCol'",
@@ -304,43 +282,6 @@ object Multimodal {
     val census = assigned.groupBy("bucket_id")
       .agg(count(lit(1)).as("n_images"),
         sum(floor(col("__diff") * lit(quantum) + lit(0.5)).cast("long"))
-          .as("drift_q"))
-    b.join(census, Seq("bucket_id"), "left")
-      .na.fill(0L, Seq("n_images", "drift_q"))
-      .select("bucket_id", "bw", "bh", "n_images", "drift_q")
-      .orderBy("bucket_id")
-  }
-
-  /** The 100 TB rendition of [[aspectBuckets]]: assignment as ONE fused
-    * per-row expression (no broadcast join, no window — the whole
-    * |buckets|-way compare is a codegen'd loop inside the scan), then
-    * the same partial-aggregable census. Bit-equal to the join
-    * rendition (same IEEE ratio/diff ops, same tie rule — suite-
-    * pinned); each ROW counts as an image, so duplicate ids are two
-    * images here where the window rendition treats them as misuse. */
-  def aspectBucketsFused(df: DataFrame, wCol: String, hCol: String,
-                         buckets: Seq[(Int, Int)],
-                         quantum: Double = 1048576.0): DataFrame = {
-    requireBuckets(buckets, "aspectBucketsFused")
-    val spark = df.sparkSession
-    import spark.implicits._
-    val b = buckets.zipWithIndex
-      .map { case ((bw, bh), i) => (i, bw, bh) }
-      .toDF("bucket_id", "bw", "bh")
-    // same NULL contract as the window rendition: the null-safe fused
-    // expression would silently drop NULL-dimension rows into a NULL
-    // group absent from the census — raise instead, keeping the two
-    // renditions bit-equal on every input they accept
-    val wG = guardDim(col(wCol), "width", s"column '$wCol'",
-      "aspectBucketsFused")
-    val hG = guardDim(col(hCol), "height", s"column '$hCol'",
-      "aspectBucketsFused")
-    val census = df
-      .select(graft.expressions.GeomExpressions
-        .argMinAspectBucket(wG, hG, buckets).as("a"))
-      .groupBy(col("a.bucket").as("bucket_id"))
-      .agg(count(lit(1)).as("n_images"),
-        sum(floor(col("a.drift") * lit(quantum) + lit(0.5)).cast("long"))
           .as("drift_q"))
     b.join(census, Seq("bucket_id"), "left")
       .na.fill(0L, Seq("n_images", "drift_q"))

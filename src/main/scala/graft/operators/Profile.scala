@@ -13,10 +13,8 @@ import org.apache.spark.sql.types.NumericType
   * counts make Spark plan an Expand (one replica of the scan's rows per
   * distinct aggregate) feeding a two-level hash aggregate — map-side
   * partial distinct keeps the shuffle bounded by the distinct-value
-  * count, not the row count. For quick looks at petabyte tables where
-  * exactness is not required, pass `exactDistinct = false` to swap in
-  * HLL `approx_count_distinct` (single scan, no Expand, O(1) state).
-  * The result is k rows of scalars — driver-sized by construction.
+  * count, not the row count. The result is k rows of scalars —
+  * driver-sized by construction.
   */
 object Profile {
 
@@ -33,8 +31,7 @@ object Profile {
       min_str: Option[String],
       max_str: Option[String])
 
-  def profile(df: DataFrame, cols: Seq[String],
-              exactDistinct: Boolean = true): Dataset[ColumnProfile] = {
+  def profile(df: DataFrame, cols: Seq[String]): Dataset[ColumnProfile] = {
     val spark = df.sparkSession
     import spark.implicits._
     require(cols.nonEmpty, "no columns to profile")
@@ -50,13 +47,10 @@ object Profile {
     // safe as-is: Row.getAs looks names up verbatim, no parsing.
     def qc(c: String) = col("`" + c.replace("`", "``") + "`")
     val aggs = cols.flatMap { c =>
-      val distinct =
-        if (exactDistinct) count_distinct(qc(c))
-        else approx_count_distinct(qc(c))
       Seq(
         count(qc(c)).as(s"${c}__nn"),
         count(when(qc(c).isNull, lit(1))).as(s"${c}__nul"),
-        distinct.as(s"${c}__nd")) ++
+        count_distinct(qc(c)).as(s"${c}__nd")) ++
         (if (isNum(c))
            Seq(min(qc(c)).cast("double").as(s"${c}__mn"),
                max(qc(c)).cast("double").as(s"${c}__mx"))

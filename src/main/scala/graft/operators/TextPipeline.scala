@@ -316,35 +316,19 @@ object TextPipeline {
 
   /** Global quantile threshold filter — keep rows whose `scoreCol` is at
     * or above the corpus `p`-quantile (the t09 quality gate as a callable
-    * operator). Both modes are the same two-pass plan shape: ONE
-    * aggregate reduces the corpus to a one-row threshold, which
-    * broadcast-joins back onto the scan (no sort, no repartition of the
-    * data — the only full-width work is two scans).
-    *
-    *  - `exact = true`: pass 1 is the exact interpolated percentile
-    *    (`percentile`, parity with DuckDB's quantile_cont — the graded
-    *    t09 rendition). Exact global quantiles buffer per-partition
-    *    value multisets in the aggregate, which is the honest cost of
-    *    exactness and fine up to ~10⁸ distinct scores per executor.
-    *  - `exact = false`: the 100 TB first pass — `approx_percentile`
-    *    with `accuracy`, a Greenwald–Khanna-style mergeable sketch
-    *    whose state is O(accuracy · log n) per partition REGARDLESS of
-    *    corpus size, with a published rank guarantee: the returned
-    *    threshold's rank is within n/accuracy of p·n
-    *    (TextPipelineSuite pins the bound against the exact ranking).
-    *    The kept set therefore differs from the exact quartile cut by
-    *    at most that many borderline rows — the standard trade for a
-    *    quality gate, where the boundary region is noise anyway.
+    * operator). Two passes: ONE aggregate reduces the corpus to a
+    * one-row threshold, the exact interpolated percentile (`percentile`,
+    * parity with DuckDB's quantile_cont), which broadcast-joins back
+    * onto the scan (no sort, no repartition of the data — the only
+    * full-width work is two scans). Exact global quantiles buffer
+    * per-partition value multisets in the aggregate, which is the
+    * honest cost of exactness and fine up to ~10⁸ distinct scores per
+    * executor.
     */
-  def quantileThresholdFilter(df: DataFrame, scoreCol: String, p: Double,
-                              exact: Boolean = true,
-                              accuracy: Int = 10000): DataFrame = {
+  def quantileThresholdFilter(df: DataFrame, scoreCol: String,
+                              p: Double): DataFrame = {
     require(p >= 0.0 && p <= 1.0, s"p must be in [0, 1], got $p")
-    require(accuracy > 0, s"accuracy must be positive, got $accuracy")
-    val pass1 =
-      if (exact) percentile(col(scoreCol), lit(p))
-      else percentile_approx(col(scoreCol), lit(p), lit(accuracy))
-    val thr = df.agg(pass1.as("__thr"))
+    val thr = df.agg(percentile(col(scoreCol), lit(p)).as("__thr"))
     df.crossJoin(broadcast(thr))
       .filter(col(scoreCol) >= col("__thr"))
       .drop("__thr")
@@ -362,8 +346,7 @@ object TextPipeline {
     * same window partition. A group's partition must fit a task — true
     * for language/domain keys (bounded cardinality ⇒ salt-free), and
     * the documented alternative for mega-groups is the two-pass
-    * approx-threshold shape of [[quantileThresholdFilter]] run per
-    * group. */
+    * threshold shape of [[quantileThresholdFilter]] run per group. */
   def groupQuantileFilter(df: DataFrame, groupCol: String,
                           scoreCol: String, p: Double,
                           tieCol: String): DataFrame = {

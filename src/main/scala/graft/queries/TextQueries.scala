@@ -670,10 +670,7 @@ object TextQueries {
     // TextPipeline.quantileThresholdFilter operator: pass 1 computes
     // the exact interpolated 25th percentile (parity with
     // quantile_cont, as a14), pass 2 broadcast-compares. Two corpus
-    // scans is the honest cost of an EXACT global quantile; the 100 TB
-    // variant is the SAME operator with exact = false —
-    // approx_percentile pass 1, whose n/accuracy rank bound
-    // TextPipelineSuite pins against the exact ranking.
+    // scans is the honest cost of an EXACT global quantile.
     Q("t09_quality_filter",
       (s, d) => TextPipeline.quantileThresholdFilter(
           load(s, d, "documents")

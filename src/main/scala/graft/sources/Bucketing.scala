@@ -84,12 +84,4 @@ object Bucketing {
         "counts; rewrite one side")
     spark.table(left).join(spark.table(right), Seq(key), joinType)
   }
-
-  /** Hive-style partitioned parquet write: predicates on the partition
-    * column prune entire directories at planning time (PartitionFilters
-    * in the scan — asserted in BucketingSuite). The right layout for
-    * low-cardinality filter columns (date, status, language) at 100 TB. */
-  def writePartitioned(df: DataFrame, path: String,
-                       partitionCol: String): Unit =
-    df.write.mode("overwrite").partitionBy(partitionCol).parquet(path)
 }

@@ -60,12 +60,13 @@ object Replication {
     * grouped-totals frame is G-row-bounded by contract (PSU/stratum
     * counts are design metadata, never data-scale), and the local
     * relation stops downstream branches from re-expanding the full
-    * scan. Callers validate the rows between the two uses. */
+    * scan. Callers validate the rows between the two uses. The rows are
+    * read back from the local relation's plan on the driver: no job and
+    * no second query execution (ReplicationSuite pins one action). */
   private def localized(gDist: DataFrame)
       : (Array[org.apache.spark.sql.Row], DataFrame) = {
-    val rows = gDist.collect()
-    (rows, gDist.sparkSession.createDataFrame(
-      java.util.Arrays.asList(rows: _*), gDist.schema))
+    val local = graft.util.Tables.localRelation(gDist)
+    (local.queryExecution.executedPlan.executeCollectPublic(), local)
   }
 
   /** JK1 jackknife mean + variance of the `w`-weighted mean of `y`,

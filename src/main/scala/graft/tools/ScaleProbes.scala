@@ -32,7 +32,6 @@ import graft.synth.Population
   *   sampler [nRows=20M]
   *   streaming [nEvents=10M]
   *   temporal [nEvents=10M] [nNodes=4M]
-  *   temporal-skew [nEvents=10M]
   *   temporal-chain [nNodes=1M]
   *   text [nDocs=2M]
   * Legs never stop the session; `main` does. */
@@ -50,7 +49,6 @@ object ScaleProbes {
     "sampler" -> sampler,
     "streaming" -> streaming,
     "temporal" -> temporal,
-    "temporal-skew" -> temporalSkew,
     "temporal-chain" -> temporalChain,
     "text" -> text)
 
@@ -525,15 +523,14 @@ object ScaleProbes {
       .select(col("o_orderkey"), (col("o_custkey") * 2).as("src"))
     val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
       .select(col("l_orderkey"), (col("l_suppkey") * 2 + 1).as("dst"))
-    val edges = Graphs.symmetrize(
-      ord.join(li, col("o_orderkey") === col("l_orderkey"))
-        .select("src", "dst").distinct())
+    val edges = ord.join(li, col("o_orderkey") === col("l_orderkey"))
+      .select("src", "dst").distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
     val ne = timed("sf edge build + cache")(edges.count())
     val top = timed("sf 5 iterations + top-25")(
-      Graphs.pageRankTopK(edges, iters = 5, k = 25, completeInbound = true)
+      Graphs.pageRankTopK(edges, iters = 5, k = 25, symmetrizeInput = true)
         .collect())
-    println(s"[graph-probe] sf edges=$ne top1=${top.head}")
+    println(s"[graph-probe] sf directed edges=$ne top1=${top.head}")
     edges.unpersist(blocking = false)
 
     // ---- leg 2: planted hubs at nEdges scale --------------------------
@@ -547,14 +544,13 @@ object ScaleProbes {
         .otherwise(pmod(hash(col("id") * 13 + 3), lit(nNodes)) + lit(100L))
         .as("dst"))
       .filter(col("src") =!= col("dst"))
-    val sym = Graphs.symmetrize(raw.distinct())
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val n2 = timed("synthetic edge build + cache")(sym.count())
+    val directed = raw.distinct().persist(StorageLevel.MEMORY_AND_DISK)
+    val n2 = timed("synthetic edge build + cache")(directed.count())
     val top20 = timed("synthetic 5 iterations + top-20")(
-      Graphs.pageRankTopK(sym, iters = 5, k = 20, completeInbound = true)
+      Graphs.pageRankTopK(directed, iters = 5, k = 20, symmetrizeInput = true)
         .collect())
     val hubHits = top20.count(_.getLong(0) < 20L)
-    println(s"[graph-probe] synthetic edges=$n2 top20-hub-hits=$hubHits/20")
+    println(s"[graph-probe] synthetic directed edges=$n2 top20-hub-hits=$hubHits/20")
     assert(hubHits >= 18, s"planted hubs not recovered: $hubHits")
 
     // ---- leg 2b: PRODUCTION iteration count ----------------------------
@@ -565,8 +561,8 @@ object ScaleProbes {
     // recovery.
     val roundSecs = scala.collection.mutable.ArrayBuffer[Double]()
     val top20c = timed("synthetic 25 iterations")(
-      Graphs.pageRankTopK(sym, iters = 25, k = 20, completeInbound = true,
-        onRound = (i, s) => roundSecs += s).collect())
+      Graphs.pageRankTopK(directed, iters = 25, k = 20,
+        symmetrizeInput = true, onRound = (i, s) => roundSecs += s).collect())
     val hubHits25 = top20c.count(_.getLong(0) < 20L)
     println(s"[graph-probe] 25-iter top20-hub-hits=$hubHits25/20")
     assert(hubHits25 >= 18, s"planted hubs not recovered at 25 iters: $hubHits25")
@@ -581,7 +577,7 @@ object ScaleProbes {
       f"late(21-25)=${late}%.2f ratio=${late / early}%.2f")
     assert(late <= 2.0 * early,
       f"per-round time grew ${late / early}%.2fx — lineage not truncated?")
-    sym.unpersist(blocking = false)
+    directed.unpersist(blocking = false)
 
     // ---- leg 3: planted triangle census -------------------------------
     // T vertex-disjoint triangles (nodes 3t, 3t+1, 3t+2) plus T disjoint
@@ -1084,49 +1080,6 @@ object ScaleProbes {
     println(f"events=$nEvents%,d asof(${a.getLong(0)}%,d rows)=$tAsof%.1fs " +
       f"range(${r.getLong(0)}%,d pairs)=$tRange%.1fs  " +
       f"nodes=${c.getLong(0)}%,d cc=$tCc%.1fs")
-  }
-
-  /** Planted-Zipf sweep: a hot key takes 0→60% of all rows, and the
-    * window-based [[TemporalJoins.asofBackward]] is timed against the
-    * time-sliced [[TemporalJoins.asofBackwardSliced]] on identical
-    * inputs. The two must agree row-for-row (the equivalence that
-    * TemporalJoinsSuite proves on fixtures, re-proven here at scale),
-    * and the timing pair locates the knee where one key's history
-    * outgrows a fair task. */
-  private def temporalSkew(spark: SparkSession, args: Array[String]): Unit = {
-    val nEvents = num(args, 0, 10000000L)
-    for (hotPct <- Seq(0, 10, 30, 60)) {
-      // hotPct% of rows land on user 0; the rest hash-spread over 100k
-      val ev = spark.range(nEvents).select(col("id"),
-        when(pmod(xxhash64(col("id"), lit(3)), lit(100)) < hotPct, 0L)
-          .otherwise(pmod(xxhash64(col("id")), lit(100000L))).as("user_id"),
-        pmod(xxhash64(col("id"), lit(1)), lit(horizon)).as("t"),
-        pmod(xxhash64(col("id"), lit(2)), lit(5)).as("kind")).cache()
-      ev.count()
-      val purchases = ev.filter(col("kind") === 0)
-        .select(col("id").as("p_id"), col("user_id"), col("t"))
-      val views = ev.filter(col("kind") === 1)
-        .select(col("user_id"), col("id").as("v_id"), col("t"))
-
-      // XOR of row hashes: exact and order/partitioning-independent, so
-      // plain-vs-sliced equality is a true row-set comparison
-      def checksum(df: DataFrame): (Long, Long, Long) = {
-        val r = df.agg(count(lit(1)),
-          count(col("asof_v_id")),
-          expr("bit_xor(xxhash64(p_id, asof_v_id))")).head()
-        (r.getLong(0), r.getLong(1), r.getLong(2))
-      }
-      val (plain, tPlain) = time(checksum(TemporalJoins.asofBackward(
-        purchases, views, Seq("user_id"), "t", "t", tieBreak = "v_id")))
-      val (sliced, tSliced) = time(checksum(TemporalJoins.asofBackwardSliced(
-        purchases, views, Seq("user_id"), "t", "t", tieBreak = "v_id",
-        sliceWidth = horizon / 4096)))
-      require(plain == sliced,
-        s"sliced as-of diverged from plain at hot=$hotPct%: $plain vs $sliced")
-      println(f"hot=$hotPct%2d%% events=$nEvents%,d " +
-        f"plain=$tPlain%.1fs sliced=$tSliced%.1fs")
-      ev.unpersist()
-    }
   }
 
   /** One path graph of nNodes nodes: diameter = nNodes, the adversarial

@@ -63,12 +63,6 @@ class MultimodalSuite extends SparkSpec {
     assert(bad.getMessage.contains("batchSize"))
   }
 
-  test("real codec path is an explicit stub") {
-    intercept[NotImplementedError] {
-      new Multimodal.RealCodecDecoder(4).decodeBatch(Array(Array[Byte](1)))
-    }
-  }
-
   test("frame-offset sampling: every k-th offset, capped, zero frames " +
       "for empty payloads, bounded allocation") {
     def offs(n: Long) = spark.range(1).select(Multimodal.sampleFrameOffsets(
@@ -164,10 +158,8 @@ class MultimodalSuite extends SparkSpec {
     assert(e.getMessage.contains("duplicate id"), e.getMessage)
   }
 
-  test("aspectBuckets + fused: a NULL dimension raises in BOTH " +
-      "renditions — the window would rank NULL first (bucket 0) while " +
-      "the fused expression dropped the row, silently forking the " +
-      "bit-equal contract") {
+  test("aspectBuckets: a NULL dimension raises, naming the column") {
+    // the window would rank a NULL first (bucket 0)
     val buckets = Seq((512, 512), (1024, 512))
     val nullW = Seq((1L, Option(600), Option(600)),
       (2L, None: Option[Int], Option(512))).toDF("id", "w", "h")
@@ -175,69 +167,24 @@ class MultimodalSuite extends SparkSpec {
       Multimodal.aspectBuckets(nullW, "id", "w", "h", buckets).collect()
     }
     assert(e1.getMessage.contains("NULL in width"), e1.getMessage)
-    val e2 = intercept[Exception] {
-      Multimodal.aspectBucketsFused(nullW, "w", "h", buckets).collect()
-    }
-    assert(e2.getMessage.contains("NULL in width"), e2.getMessage)
     val nullH = Seq((1L, Option(600), None: Option[Int]))
       .toDF("id", "w", "h")
     val e3 = intercept[Exception] {
       Multimodal.aspectBuckets(nullH, "id", "w", "h", buckets).collect()
     }
     assert(e3.getMessage.contains("NULL in height"), e3.getMessage)
-    val e4 = intercept[Exception] {
-      Multimodal.aspectBucketsFused(nullH, "w", "h", buckets).collect()
-    }
-    assert(e4.getMessage.contains("NULL in height"), e4.getMessage)
-  }
-
-  test("aspectBucketsFused == the join rendition bit-for-bit on real " +
-      "dims, and interpreted eval == codegen") {
-    val dims = spark.read
-      .parquet("/root/testdata/sf0.001/documents.parquet")
-      .select(col("doc_id"),
-        (lit(320) + (col("doc_id") * 7) % 1600).as("w"),
-        (lit(240) + (col("doc_id") * 13) % 1200).as("h"))
-    val buckets = for { i <- 0 until 5; j <- 0 until 5 }
-      yield (512 + 128 * i, 512 + 128 * j)
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getInt(0), r.getInt(1), r.getInt(2),
-        r.getLong(3), r.getLong(4))).toSeq
-    val joined = rows(Multimodal.aspectBuckets(
-      dims, "doc_id", "w", "h", buckets))
-    val fused = rows(Multimodal.aspectBucketsFused(
-      dims, "w", "h", buckets))
-    assert(fused === joined)
-    // interpreted eval path (codegen off) agrees with codegen
-    val prevWs = spark.conf.get("spark.sql.codegen.wholeStage", "true")
-    val prevFm = spark.conf.get("spark.sql.codegen.factoryMode", "FALLBACK")
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-    try {
-      val interp = rows(Multimodal.aspectBucketsFused(
-        dims, "w", "h", buckets))
-      assert(interp === fused)
-    } finally {
-      spark.conf.set("spark.sql.codegen.wholeStage", prevWs)
-      spark.conf.set("spark.sql.codegen.factoryMode", prevFm)
-    }
   }
 
   test("r16 guards: degenerate buckets, NULL payloads, wrong payload " +
       "type, and NULL resize dims all fail NAMED instead of silently") {
     // a (512, 0) bucket: Spark division makes its ratio NULL, NULL
-    // ranks first in the argmin — every image silently lands there —
-    // while the fused driver-side Inf never wins: the renditions fork
+    // ranks first in the argmin — every image silently lands there
     val dims = Seq((1L, 600, 400)).toDF("id", "w", "h")
     val badBuckets = Seq((512, 512), (512, 0))
     val e1 = intercept[IllegalArgumentException] {
       Multimodal.aspectBuckets(dims, "id", "w", "h", badBuckets)
     }
     assert(e1.getMessage.contains("bucket 1 = (512, 0)"), e1.getMessage)
-    val e2 = intercept[IllegalArgumentException] {
-      Multimodal.aspectBucketsFused(dims, "w", "h", badBuckets)
-    }
-    assert(e2.getMessage.contains("positive"), e2.getMessage)
     // NULL payload = MISSING media: must not fabricate features
     val nullPay = Seq((1L, Option(Array[Byte](1, 2))),
       (2L, None: Option[Array[Byte]])).toDF("id", "payload")

@@ -14,10 +14,9 @@ import graft.SparkSpec
   * with a checkpoint dir set, reliable checkpoints that give the same
   * rows and leave no persisted RDD and no checkpoint file behind.
   *
-  * The checkpoint-dir test comes LAST: Spark has no public way to unset
-  * a dir, so it stays set for every test (and suite) that runs after
-  * it, and a reliable checkpoint adds one file-writing job per
-  * truncation, which the job pins above it must not see. */
+  * The checkpoint-dir test unsets its dir when it ends, so no other test
+  * or suite in the JVM writes reliable checkpoints (each adds one
+  * file-writing job per truncation, which the job pins must not see). */
 class RoundsSuite extends SparkSpec {
   import spark.implicits._
 
@@ -109,11 +108,6 @@ class RoundsSuite extends SparkSpec {
     val local = kept.map { case (_, run, _) => rows(run()) }
     graft.util.QueryLeases.releaseAll()
     val dir = java.nio.file.Files.createTempDirectory("graft-rounds-ckpt")
-    // stays set for the rest of this JVM (see the suite's header), so
-    // the dir goes only when the JVM does
-    sys.addShutdownHook(
-      org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile))
-    spark.sparkContext.setCheckpointDir(dir.toString)
     def files(): List[java.nio.file.Path] = {
       val walk = java.nio.file.Files.walk(dir)
       try {
@@ -122,21 +116,28 @@ class RoundsSuite extends SparkSpec {
           .filter(java.nio.file.Files.isRegularFile(_)).toList
       } finally walk.close()
     }
-    kept.zip(local).foreach { case ((name, run, _), want) =>
-      val before = spark.sparkContext.getPersistentRDDs.keySet
-      assert(rows(run()) === want, name)
-      // connectedComponents hands its result generation to the caller,
-      // who releases it through QueryLeases once the rows are read
-      graft.util.QueryLeases.releaseAll()
-      val left = spark.sparkContext.getPersistentRDDs.keySet -- before
-      assert(left.isEmpty, s"$name left persisted RDDs $left")
-      assert(files().isEmpty, s"$name left checkpoint files ${files()}")
+    spark.sparkContext.setCheckpointDir(dir.toString)
+    try {
+      kept.zip(local).foreach { case ((name, run, _), want) =>
+        val before = spark.sparkContext.getPersistentRDDs.keySet
+        assert(rows(run()) === want, name)
+        // connectedComponents hands its result generation to the caller,
+        // who releases it through QueryLeases once the rows are read
+        graft.util.QueryLeases.releaseAll()
+        val left = spark.sparkContext.getPersistentRDDs.keySet -- before
+        assert(left.isEmpty, s"$name left persisted RDDs $left")
+        assert(files().isEmpty, s"$name left checkpoint files ${files()}")
+      }
+      // the reliable rule was in force: a fresh scope wrote files
+      Rounds(spark) { r =>
+        r.materialize(edges)
+        assert(files().nonEmpty, "no reliable checkpoint was written")
+      }
+      assert(files().isEmpty)
+    } finally {
+      org.apache.spark.CheckpointDirs.unset(spark.sparkContext)
+      org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
     }
-    // the reliable rule was in force: a fresh scope wrote files
-    Rounds(spark) { r =>
-      r.materialize(edges)
-      assert(files().nonEmpty, "no reliable checkpoint was written")
-    }
-    assert(files().isEmpty)
+    assert(spark.sparkContext.getCheckpointDir.isEmpty)
   }
 }

@@ -41,65 +41,44 @@ class TemporalJoinsSuite extends SparkSpec {
     assert(run(1) === run(7))
   }
 
-  test("asofBackwardSliced matches asofBackward on the tie/outer fixture, all widths") {
-    val left = Seq(
-      (1L, "a", 100L), (2L, "a", 205L), (3L, "b", 50L), (4L, "c", 10L)
-    ).toDF("oid", "key", "t")
-    val right = Seq(
-      ("a", 11L, 90L, 1.0), ("a", 12L, 100L, 2.0), ("a", 13L, 100L, 3.0),
-      ("a", 14L, 201L, 4.0), ("b", 15L, 60L, 5.0)
-    ).toDF("key", "rid", "t", "v")
-    // widths straddling every regime: sub-event, tie-splitting, one-slice
-    for (w <- Seq(1L, 7L, 100L, 1000L)) {
-      val out = TemporalJoins.asofBackwardSliced(left, right, Seq("key"),
-          "t", "t", tieBreak = "rid", sliceWidth = w)
-        .select("oid", "asof_rid", "asof_v")
-        .as[(Long, Option[Long], Option[Double])].collect().sortBy(_._1)
-      assert(out === Seq(
-        (1L, Some(13L), Some(3.0)), (2L, Some(14L), Some(4.0)),
-        (3L, None, None), (4L, None, None)), s"sliceWidth=$w")
-    }
-  }
+  /** Driver-side as-of reference: for each left (id, key, t), the rid of
+    * the right (key, rid, t) row of the same key with the greatest
+    * (t, rid) at or before t. */
+  private def bruteAsof[K](left: Seq[(Long, K, Long)],
+                           right: Seq[(K, Long, Long)]): Seq[(Long, Option[Long])] =
+    left.map { case (id, k, t) =>
+      id -> right.filter { case (rk, _, rt) => rk == k && rt <= t }
+        .maxByOption { case (_, rid, rt) => (rt, rid) }.map(_._2)
+    }.sortBy(_._1)
 
-  test("asofBackwardSliced ≡ asofBackward on dense random data, incl. negatives") {
-    // negative times exercise the floor-division slice key; width 64 is
-    // deliberately coprime-ish with the 13/11 stride patterns
-    val left = spark.range(400).select(col("id"), (col("id") % 7).as("key"),
-      (col("id") * 13 % 500 - 250).as("t"))
-    val right = spark.range(600).select((col("id") % 7).as("key"),
-      col("id").as("rid"), (col("id") * 11 % 500 - 250).as("t"),
-      (col("id") * 1.5).as("v"))
-    val want = TemporalJoins.asofBackward(left, right, Seq("key"), "t", "t",
-        tieBreak = "rid")
+  test("asofBackward == brute force on dense data with negative times") {
+    val left = (0L until 400L).map(i => (i, i % 7, i * 13 % 500 - 250))
+    val right = (0L until 600L).map(i => (i % 7, i, i * 11 % 500 - 250))
+    val got = TemporalJoins.asofBackward(left.toDF("id", "key", "t"),
+        right.map { case (k, rid, t) => (k, rid, t, rid * 1.5) }
+          .toDF("key", "rid", "t", "v"),
+        Seq("key"), "t", "t", tieBreak = "rid")
       .select("id", "asof_rid", "asof_v")
       .as[(Long, Option[Long], Option[Double])].collect().sortBy(_._1).toSeq
-    for (w <- Seq(3L, 64L, 10000L)) {
-      val got = TemporalJoins.asofBackwardSliced(left, right, Seq("key"),
-          "t", "t", tieBreak = "rid", sliceWidth = w)
-        .select("id", "asof_rid", "asof_v")
-        .as[(Long, Option[Long], Option[Double])].collect().sortBy(_._1).toSeq
-      assert(got === want, s"sliceWidth=$w")
-    }
+    assert(got === bruteAsof(left, right).map { case (id, rid) =>
+      (id, rid, rid.map(_ * 1.5)) })
+    assert(got.count(_._2.isDefined) > 300)
   }
 
-  test("asofBackwardSliced slice keys are exact beyond 2^53 (integer div)") {
-    // timestamps where a double round-trip loses ulps: the old
-    // double-divide slice could land a row one slice off. With integer
-    // div, sliced must stay row-identical to the plain shape.
-    val base = (1L << 60) // not representable territory for doubles ± small deltas
-    val left = Seq((1L, "k", base + 5L), (2L, "k", base + 103L), (3L, "k", base - 97L))
-      .toDF("oid", "key", "t")
-    val right = Seq(("k", 11L, base + 3L, 1.0), ("k", 12L, base + 100L, 2.0),
-      ("k", 13L, base - 100L, 3.0)).toDF("key", "rid", "t", "v")
-    val want = TemporalJoins.asofBackward(left, right, Seq("key"), "t", "t",
-        tieBreak = "rid")
-      .select("oid", "asof_rid").as[(Long, Option[Long])].collect().sortBy(_._1).toSeq
-    for (w <- Seq(7L, 100L, 1000L)) {
-      val got = TemporalJoins.asofBackwardSliced(left, right, Seq("key"),
-          "t", "t", tieBreak = "rid", sliceWidth = w)
-        .select("oid", "asof_rid").as[(Long, Option[Long])].collect().sortBy(_._1).toSeq
-      assert(got === want, s"sliceWidth=$w")
-    }
+  test("asofBackward == brute force on times beyond 2^53") {
+    // neighbouring timestamps a double round-trip would merge
+    val base = 1L << 60
+    val left = Seq((1L, "k", base + 5L), (2L, "k", base + 103L),
+      (3L, "k", base - 97L), (4L, "k", base + 2L))
+    val right = Seq(("k", 11L, base + 3L), ("k", 12L, base + 100L),
+      ("k", 13L, base - 100L))
+    val got = TemporalJoins.asofBackward(left.toDF("oid", "key", "t"),
+        right.toDF("key", "rid", "t"), Seq("key"), "t", "t", tieBreak = "rid")
+      .select("oid", "asof_rid").as[(Long, Option[Long])].collect()
+      .sortBy(_._1).toSeq
+    assert(got === bruteAsof(left, right))
+    assert(got === Seq((1L, Some(11L)), (2L, Some(12L)), (3L, Some(13L)),
+      (4L, Some(13L))))
   }
 
   test("rangeJoinBucketed: inclusive bounds, bucket-crossing, empty intervals") {
@@ -147,63 +126,32 @@ class TemporalJoinsSuite extends SparkSpec {
     assert(out.select("r_t").distinct().count() === 1000L)
   }
 
-  test("asofBackwardSliced keeps NULL-key rows identically to the plain " +
-      "variant (window partitions group NULLs; the joins must be " +
-      "null-safe)") {
-    // the r14-review bug: the sliced variant's equi-joins used plain
-    // equality, so NULL-key left rows vanished instead of matching
-    // NULL-key right history as asofBackward's window does
+  test("asofBackward: NULL keys match NULL-key history") {
+    // the window partitions group NULL keys together, so a NULL-key left
+    // row sees the NULL-key right rows and no others
     val left = Seq((1L, Option("a"), 100L), (2L, None: Option[String], 100L),
       (3L, None: Option[String], 40L)).toDF("oid", "key", "t")
     val right = Seq((Option("a"), 11L, 90L, 1.0),
       (None: Option[String], 12L, 50L, 2.0)).toDF("key", "rid", "t", "v")
-    def rows(df: org.apache.spark.sql.DataFrame) = df
-      .select("oid", "asof_rid", "asof_v")
-      .as[(Long, Option[Long], Option[Double])].collect().sortBy(_._1).toSeq
-    val plain = rows(TemporalJoins.asofBackward(left, right, Seq("key"),
-      "t", "t", "rid"))
-    assert(plain === Seq((1L, Some(11L), Some(1.0)),
+    assert(rows(TemporalJoins.asofBackward(left, right, Seq("key"),
+        "t", "t", "rid")) === Seq((1L, Some(11L), Some(1.0)),
       (2L, Some(12L), Some(2.0)), // NULL key matches NULL-key history
       (3L, None, None)))          // NULL key, before its only right row
-    for (w <- Seq(1L, 7L, 1000L))
-      assert(rows(TemporalJoins.asofBackwardSliced(left, right, Seq("key"),
-        "t", "t", "rid", sliceWidth = w)) === plain, s"width $w")
   }
 
-  test("asofBackwardSliced keeps NULL-TIME rows identically to the " +
-      "plain variant (slice(NULL) is NULL — the slice comparison must " +
-      "be null-safe like the keys)") {
-    // r15 review: the key comparisons were null-safe but the __slice
-    // one used ===, so a NULL-time left row was dropped from the output
-    // entirely (a row-count fork) and NULL-time right history landed in
-    // an unreachable slice
+  test("asofBackward: NULL times sort first and their rows are kept") {
     val left = Seq((1L, "a", Option(100L)), (2L, "a", None: Option[Long]))
       .toDF("oid", "key", "t")
     val right = Seq(("a", 11L, Option(90L), 1.0),
       ("a", 12L, None: Option[Long], 2.0)).toDF("key", "rid", "t", "v")
-    def rows(df: org.apache.spark.sql.DataFrame) = df
-      .select("oid", "asof_rid", "asof_v")
-      .as[(Long, Option[Long], Option[Double])].collect().sortBy(_._1).toSeq
-    val plain = rows(TemporalJoins.asofBackward(left, right, Seq("key"),
-      "t", "t", "rid"))
-    // NULL time sorts first: row 1 matches rid 11 (t=90 <= 100); the
-    // NULL-time left row sees only the NULL-time right row
-    assert(plain === Seq((1L, Some(11L), Some(1.0)),
+    // row 1 matches rid 11 (t=90 <= 100); the NULL-time left row sees
+    // only the NULL-time right row
+    assert(rows(TemporalJoins.asofBackward(left, right, Seq("key"),
+        "t", "t", "rid")) === Seq((1L, Some(11L), Some(1.0)),
       (2L, Some(12L), Some(2.0))))
-    for (w <- Seq(1L, 7L, 1000L))
-      assert(rows(TemporalJoins.asofBackwardSliced(left, right, Seq("key"),
-        "t", "t", "rid", sliceWidth = w)) === plain, s"width $w")
   }
 
-  test("asofBackwardSliced accepts non-orderable payload columns (maps) " +
-      "— max_by orders only (t, tieBreak), never the payload") {
-    val left = Seq((1L, "a", 100L)).toDF("oid", "key", "t")
-    val right = Seq(("a", 11L, 90L, Map("x" -> 1)), ("a", 12L, 95L, Map("y" -> 2)))
-      .toDF("key", "rid", "t", "props")
-    val out = TemporalJoins.asofBackwardSliced(left, right, Seq("key"),
-        "t", "t", "rid", sliceWidth = 10L)
-      .select("oid", "asof_rid", "asof_props")
-      .as[(Long, Long, Map[String, Int])].collect().toSeq
-    assert(out === Seq((1L, 12L, Map("y" -> 2))))
-  }
+  private def rows(df: org.apache.spark.sql.DataFrame) = df
+    .select("oid", "asof_rid", "asof_v")
+    .as[(Long, Option[Long], Option[Double])].collect().sortBy(_._1).toSeq
 }

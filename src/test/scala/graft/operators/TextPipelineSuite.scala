@@ -69,8 +69,7 @@ class TextPipelineSuite extends SparkSpec {
     assert(out(4L).getDouble(2) == 8.0)
   }
 
-  test("quantileThresholdFilter: exact mode keeps the upper quartile; " +
-      "approx mode honors the n/accuracy rank bound") {
+  test("quantileThresholdFilter keeps the exact upper quartile") {
     // deterministic scores: 500 docs' quality over the real fixture
     val docs = spark.read
       .parquet("/root/testdata/sf0.001/documents.parquet")
@@ -78,7 +77,7 @@ class TextPipelineSuite extends SparkSpec {
         graft.operators.TextFunctions.qualityScore(col("text")).as("q"))
     val scores = docs.select("q").as[Double].collect().sorted
     val n = scores.length
-    // exact: the kept set IS {q >= interpolated p25} — cross-check the
+    // the kept set IS {q >= interpolated p25} — cross-check the
     // threshold semantics against a driver-side quantile_cont
     val p = 0.25
     val h = (n - 1) * p
@@ -90,33 +89,6 @@ class TextPipelineSuite extends SparkSpec {
       .select("doc_id").as[Long].collect().toSet
     assert(keptExact === wantExact)
     assert(keptExact.nonEmpty && keptExact.size < n)
-    // approx: Spark's approx_percentile (QuantileSummaries with
-    // relativeError = 1/accuracy) guarantees a returned MEMBER value
-    // whose rank r satisfies ⌊(p−ε)n⌋ ≤ r ≤ ⌈(p+ε)n⌉ — i.e. within
-    // εn = n/accuracy of p·n plus the floor/ceil slack, and the exact
-    // threshold is additionally INTERPOLATED between two members, which
-    // can shift boundary membership by one more row. Pin the honest
-    // bound n/accuracy + 2 (measured 6 at accuracy=100, n=500).
-    val accuracy = 100
-    val keptApprox = TextPipeline.quantileThresholdFilter(docs, "q", p,
-        exact = false, accuracy = accuracy)
-      .select("doc_id").as[Long].collect().toSet
-    val bound = n / accuracy + 2
-    val diff = (keptExact diff keptApprox).size +
-      (keptApprox diff keptExact).size
-    assert(diff <= bound,
-      s"approx kept set differs from exact by $diff rows (bound $bound)")
-    // a tight sketch (accuracy ≥ n) nails the rank but still returns a
-    // MEMBER value where the exact mode interpolates between two
-    // members (p·(n−1) = 124.75 here), so exactly the one boundary row
-    // may differ — never more
-    val keptTight = TextPipeline.quantileThresholdFilter(docs, "q", p,
-        exact = false, accuracy = 10000)
-      .select("doc_id").as[Long].collect().toSet
-    val tightDiff = (keptTight diff keptExact).size +
-      (keptExact diff keptTight).size
-    assert(tightDiff <= 1,
-      s"tight sketch differs from exact by $tightDiff rows")
   }
 
   test("decontaminate flags shared 5-grams, leaves disjoint docs clean") {

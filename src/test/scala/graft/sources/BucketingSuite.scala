@@ -82,7 +82,7 @@ class BucketingSuite extends SparkSpec {
     val df = (1 to 1000).map(i =>
       (i.toLong, i * 1.0, if (i % 4 == 0) "gold" else "std"))
       .toDF("id", "v", "tier")
-    Bucketing.writePartitioned(df, path, "tier")
+    df.write.mode("overwrite").partitionBy("tier").parquet(path)
 
     val gold = spark.read.parquet(path).filter(col("tier") === "gold")
     val scanLine = gold.queryExecution.executedPlan.toString

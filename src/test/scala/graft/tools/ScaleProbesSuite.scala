@@ -32,7 +32,6 @@ class ScaleProbesSuite extends SparkSpec {
     // 20 events per user (100k users): ~75% of purchases find an
     // earlier view (> half), ~370 range pairs (> nEvents/10⁴ = 200)
     "temporal" -> Seq("2000000", "40000"),
-    "temporal-skew" -> Seq("100000"),
     // diameter 200: past hash-min's 12 rounds, so the star contraction
     // runs
     "temporal-chain" -> Seq("200"),
