@@ -1,5 +1,7 @@
 package graft.mc
 
+import scala.reflect.ClassTag
+
 import org.apache.spark.sql.{DataFrame, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -13,9 +15,11 @@ import graft.util.Tables.{dmean, dsum, dvarSamp}
   * `flatMap` runs the entire population-synthesis + estimator battery
   * task-locally ([[LocalSim]] — a 100k-row population is ~8 MB of
   * primitive arrays, comfortably inside one task), emitting one row per
-  * estimator. 1000 replicates × 11 γ = 11,000 independent tasks —
-  * embarrassing parallelism that scales to any cluster width with ZERO
-  * shuffle; only the tiny result rows move. For populations too large for
+  * estimator. 1000 replicates × 11 γ = 11,000 independent simulations —
+  * embarrassing parallelism that scales to any cluster width with no
+  * shuffle before or during the simulations (the grid is parallelized
+  * straight into its slices); only the tiny result rows move, into
+  * [[MonteCarlo.summarize]]'s one group-by. For populations too large for
   * one task (N ≳ 10M) the same estimators run distributed per-sim via
   * graft.estimators on a DataFrame population instead.
   */
@@ -106,13 +110,14 @@ object MonteCarlo {
       LocalSim.runSimV2(c.sim, c.gamma, c.seedBase, c.nPop, c.nA, c.nB, sdVector))
   }
 
-  /** The one task-local fan-out: the grid becomes a Dataset, spread over
-    * at most two tasks per core, and each task runs `simulate` on its
-    * configs; only the result rows leave the task. */
-  private def fanOut[C: Encoder, R: Encoder](spark: SparkSession, grid: Seq[C])
-                                            (simulate: C => Seq[R]): DataFrame =
-    spark.createDataset(grid)
-      .repartition(math.min(grid.size, spark.sparkContext.defaultParallelism * 2))
+  /** The one task-local fan-out: the grid is parallelized into at most
+    * two slices per core (one slice for an empty grid, which gives an
+    * empty frame), with no shuffle, and each task runs `simulate` on its
+    * slice's configs; only the result rows leave the task. */
+  private def fanOut[C: Encoder: ClassTag, R: Encoder](spark: SparkSession, grid: Seq[C])
+                                                      (simulate: C => Seq[R]): DataFrame =
+    spark.createDataset(spark.sparkContext.parallelize(grid,
+        math.max(1, math.min(grid.size, spark.sparkContext.defaultParallelism * 2))))
       .flatMap(simulate)
       .toDF()
 
@@ -156,7 +161,9 @@ object MonteCarlo {
   }
 
   /** Grouped bias/SE/RMSE vs the known true mean (ipynb:2066-2073,
-    * :2750-2757): the reference's reporting stage. */
+    * :2750-2757): the reference's reporting stage. The result has one row
+    * per (gamma, estimator), so it is sorted in one partition: a global
+    * `orderBy` would run a job to sample range bounds for these few rows. */
   def summarize(results: DataFrame, trueMean: Double): DataFrame = {
     val bias = col("estimate") - lit(trueMean)
     results.groupBy("gamma", "estimator")
@@ -165,6 +172,6 @@ object MonteCarlo {
         sqrt(dvarSamp(col("estimate"))).as("se"),
         sqrt(dsum(bias * bias) / count(lit(1))).as("rmse"),
         count(lit(1)).as("n_sims"))
-      .orderBy("gamma", "estimator")
+      .coalesce(1).sortWithinPartitions("gamma", "estimator")
   }
 }

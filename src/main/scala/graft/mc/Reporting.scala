@@ -54,7 +54,10 @@ object Reporting {
         col("Bias"))
   }
 
-  /** Cell 41 bias_summary: rounded mean/sd/RMSE per (Gamma, Sd, Est). */
+  /** Cell 41 bias_summary: rounded mean/sd/RMSE per (Gamma, Sd, Est).
+    * This and [[biasTable]] have a row per key, a few dozen in all, so
+    * they sort in one partition rather than run `orderBy`'s range-bound
+    * sampling job. */
   def biasSummary(long: DataFrame): DataFrame = {
     def r3(c: org.apache.spark.sql.Column) =
       floor(c * 1000 + 0.5) / 1000
@@ -63,7 +66,7 @@ object Reporting {
         r3(sqrt(dvarSamp(col("Bias")))).as("Bias_SD"))
       .withColumn("RMSE", r3(sqrt(col("Bias_Mean") * col("Bias_Mean") +
         col("Bias_SD") * col("Bias_SD"))))
-      .orderBy("Estimator", "Gamma", "Sd")
+      .coalesce(1).sortWithinPartitions("Estimator", "Gamma", "Sd")
   }
 
   /** Cell 41 per-estimator wide bias table: rows Gamma, columns Sd.
@@ -76,7 +79,7 @@ object Reporting {
       .groupBy("Gamma")
       .pivot("Sd", sds)
       .agg(first("Bias_Mean"))
-      .orderBy("Gamma")
+      .coalesce(1).sortWithinPartitions("Gamma")
 
   /** Cell 42: `aov(Bias ~ factor(Sd) * factor(Gamma) + Estimator)` —
     * Type-I sequential terms in the reference's order, from the per-cell

@@ -1406,7 +1406,7 @@ object MiscQueries {
     // ---- O4 Monte-Carlo PORTABLE twin (full hash oracle) --------------
     // r14-verdict task 4, the g20/e31 method applied to the MC harness:
     // the SAME control flow as o02/o03 — grid → fan-out (the identical
-    // createDataset/repartition/flatMap shape as MonteCarlo.run) →
+    // shuffle-free parallelize/flatMap shape as MonteCarlo.run) →
     // per-cell population synthesis → NMAR selection → 4-estimator
     // battery → MonteCarlo.summarize — but in engine-exact arithmetic
     // (portable integer-hash uniforms, Irwin–Hall sums, clamped-linear

@@ -33,9 +33,6 @@ object Bucketing {
     path.fold(w.saveAsTable(table))(p => w.option("path", p).saveAsTable(table))
   }
 
-  def read(spark: SparkSession, table: String): DataFrame =
-    spark.table(table)
-
   /** Shuffle-free equi-join of two tables bucketed on the same key with
     * the same bucket count. The spec is ENFORCED from the catalog: a
     * bucket-count mismatch (or an unbucketed side) would still return

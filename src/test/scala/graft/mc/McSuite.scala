@@ -75,6 +75,85 @@ class McSuite extends SparkSpec {
     assert(a === b)
   }
 
+  test("every study fans out with no shuffle, over min(|grid|, 2 × " +
+      "defaultParallelism) partitions") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    val slots = 2 * spark.sparkContext.defaultParallelism
+    // plans only: no study below runs a replicate
+    val studies = Seq(
+      ("runSim1", 3, MonteCarlo.runSim1(spark, nSim = 3, nPop = 2000, nA = 100,
+        nB1 = 600, nB2 = 400)),
+      ("runSim2", slots + 1, MonteCarlo.runSim2(spark, nSim = slots + 1,
+        nPop = 2000, nATotal = 200, nBTotal = 600)),
+      ("run", 2 * slots, MonteCarlo.run(spark, MonteCarlo.nmarGrid(nSim = slots,
+        gammas = Seq(0.0, 1.0), nPop = 2000, nA = 100, nB = 500))),
+      ("runV2", 2, MonteCarlo.runV2(spark, nSim = 1, gammas = Seq(0.0, 1.0),
+        nPop = 2000, nA = 100, nB = 500, sdVector = Seq(0.0))),
+      ("runPortable", 6, MonteCarlo.runPortable(spark, MonteCarlo.portableGrid(
+        nSim = 3, gammas = Seq(0.0, 1.0), nPop = 2000))))
+    val plans = new AdaptiveSparkPlanHelper {}
+    for ((name, cells, df) <- studies) {
+      val plan = df.queryExecution.executedPlan
+      assert(plans.collect(plan) { case e: ShuffleExchangeLike => e }.isEmpty,
+        s"$name shuffles before its replicates run:\n$plan")
+      assert(df.queryExecution.toRdd.getNumPartitions === math.min(cells, slots),
+        name)
+    }
+  }
+
+  test("an empty grid (nSim = 0) gives empty results and an empty summary") {
+    val none = MonteCarlo.runSim1(spark, nSim = 0, nPop = 2000, nA = 100,
+      nB1 = 600, nB2 = 400)
+    assert(none.collect().isEmpty)
+    assert(MonteCarlo.summarize(none, trueMean = 3.0).collect().isEmpty)
+    assert(MonteCarlo.run(spark, Seq.empty).collect().isEmpty)
+    assert(MonteCarlo.runPortable(spark, Seq.empty).collect().isEmpty)
+  }
+
+  // multi-partition inputs for the summaries: every (gamma, estimator)
+  // and (Gamma, Sd, Estimator) cell holds rows from several partitions
+  private lazy val simRows = spark.createDataset(spark.sparkContext.parallelize(
+    for (g <- Seq(1.0, 0.0, 0.5); e <- Seq("b", "d", "a", "c"); s <- 1 to 5)
+      yield SimResult(s, g, e, 3.0 + g * s / 7.0 + e.head / 97.0), 3)).toDF()
+  private lazy val biasRows = spark.createDataset(spark.sparkContext.parallelize(
+    for (g <- (10 to 0 by -1).map(_ / 10.0); sd <- Seq(0.25, 0.0);
+         e <- Seq("y", "x"); s <- 1 to 4)
+      yield (s, g, e, sd, (g - sd) * s / 11.0 + e.head / 113.0), 3))
+    .toDF("Simulacion", "Gamma", "Estimator", "Sd", "Bias")
+
+  test("summarize and the bias summary/table run one Spark job each " +
+      "(no range-bound sampling job)") {
+    // counted with AQE off, as in RoundsSuite: AQE's job count per
+    // query stage is not stable
+    val (summarizeJobs, tableJobs) = withoutAqe((
+      countJobs(MonteCarlo.summarize(simRows, trueMean = 3.0).collect()),
+      countJobs(Reporting.biasTable(Reporting.biasSummary(biasRows), "x",
+        Seq(0.0, 0.25)).collect())))
+    assert((summarizeJobs, tableJobs) === ((1, 1)),
+      "(summarize, biasTable(biasSummary(...)))")
+  }
+
+  test("summarize, biasSummary and biasTable return the rows, in the order, " +
+      "of an explicit orderBy on a multi-partition input") {
+    for (aqe <- Seq(false, true)) {
+      // AQE coalesces these tiny aggregates into one partition; with it
+      // off each keeps spark.sql.shuffle.partitions partitions
+      def rows(df: => org.apache.spark.sql.DataFrame) =
+        if (aqe) df.collect().toSeq else withoutAqe(df.collect().toSeq)
+      val summ = MonteCarlo.summarize(simRows, trueMean = 3.0)
+      assert(rows(summ) === rows(summ.orderBy("gamma", "estimator")), s"aqe=$aqe")
+      assert(rows(summ).size === 12)
+      val bs = Reporting.biasSummary(biasRows)
+      assert(rows(bs) === rows(bs.orderBy("Estimator", "Gamma", "Sd")), s"aqe=$aqe")
+      assert(rows(bs).size === 44)
+      // biasSummary's result is one partition; biasTable takes any frame
+      val table = Reporting.biasTable(bs.repartition(3), "y", Seq(0.0, 0.25))
+      assert(rows(table) === rows(table.orderBy("Gamma")), s"aqe=$aqe")
+      assert(rows(table).map(_.getDouble(0)) === (0 to 10).map(_ / 10.0))
+    }
+  }
+
   test("o02/o03 self-validating columns are all true (the rows-only invariant)") {
     import org.apache.spark.sql.functions.{col, lit, min}
     val o02 = graft.queries.MiscQueries.qs.find(_.name == "o02_mc_fanout").get

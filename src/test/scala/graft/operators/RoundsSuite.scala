@@ -1,8 +1,5 @@
 package graft.operators
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -19,37 +16,6 @@ import graft.SparkSpec
   * file-writing job per truncation, which the job pins must not see). */
 class RoundsSuite extends SparkSpec {
   import spark.implicits._
-
-  /** Spark jobs `body` starts, in JobCountSuite's listener style.
-    * Jobs are attributed by job group, which Spark SQL carries into its
-    * broadcast and stage threads, so a late event from an earlier call
-    * is never counted. The listener bus delivers in order, so once a
-    * fence job's start arrives every job of `body`'s has been seen. */
-  private def countJobs(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"rounds-${java.util.UUID.randomUUID}"
-    val n = new AtomicInteger
-    val fence = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`group`) => n.incrementAndGet()
-          case Some(g) if g == s"$group-fence" => fence.countDown()
-          case _ => ()
-        }
-    }
-    sc.addSparkListener(listener)
-    def inGroup(g: String)(f: => Unit): Unit = {
-      sc.setJobGroup(g, g)
-      try f finally sc.clearJobGroup()
-    }
-    try {
-      inGroup(group)(body)
-      inGroup(s"$group-fence")(sc.parallelize(Seq(1), 1).count())
-      assert(fence.await(30, java.util.concurrent.TimeUnit.SECONDS))
-    } finally sc.removeSparkListener(listener)
-    n.get
-  }
 
   // the seven-node fixture of GraphsSuite's join-strategy test: a
   // directed triangle with a tail cycle, plus a disjoint pair
@@ -89,12 +55,9 @@ class RoundsSuite extends SparkSpec {
     // jobs of a 170-job loop depend on which stage finished first (the
     // star fallback read 173 or 174 at the same commit); without it
     // the count is a function of the kernel's calls alone
-    val key = "spark.sql.adaptive.enabled"
-    val prior = spark.conf.getOption(key)
-    spark.conf.set(key, "false")
-    val got = try kernels.map { case (name, run, _) =>
+    val got = withoutAqe(kernels.map { case (name, run, _) =>
       name -> countJobs(run().collect())
-    } finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    })
     graft.util.QueryLeases.releaseAll()
     info(got.map { case (k, n) => s"$k=$n" }.mkString(", "))
     assert(got === kernels.map { case (name, _, n) => name -> n })
